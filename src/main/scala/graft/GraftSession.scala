@@ -43,6 +43,11 @@ object GraftSession {
       // join buffers, dedup keys) outgrows executor heap; the default
       // HDFS-backed in-memory provider is faster for the small local gates.
       .config("spark.sql.streaming.stateStore.providerClass", stateStoreProvider)
+      // Each streaming query runs on a clone of the session; with artifact
+      // isolation on, every clone gets a new executor classloader, and
+      // Spark's codegen cache (keyed on classloader and source) then misses
+      // on every scheduled run. graft adds no session artifacts.
+      .config("spark.sql.artifact.isolation.enabled", "false")
       .config("spark.ui.enabled", "false")
 
   /** Session for the library entry points (GraftMain/CurateMain). When a
@@ -104,6 +109,9 @@ object GraftSession {
     spark.conf.set("spark.sql.adaptive.skewJoin.enabled", "true")
     spark.conf.set("spark.sql.parquet.aggregatePushdown", "true")
     spark.conf.set("spark.sql.streaming.stateStore.providerClass", stateStoreProvider)
+    // See the builder. On a live session this takes effect for the sessions
+    // cloned from it later (one per streaming query), which is what matters.
+    spark.conf.set("spark.sql.artifact.isolation.enabled", "false")
     functions.GraftFunctions.register(spark)
     registerPlanExtensions(spark)
     spark

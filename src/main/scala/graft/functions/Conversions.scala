@@ -468,13 +468,14 @@ object Conversions {
 
   /** Registry lookup with the plan-time batch anchor threaded into the one
     * conversion whose semantics need it (relative dates in
-    * `str -> datetime-no`).
+    * `str -> datetime-no`). The anchor is a column so the transform compiler
+    * can pass its bound `$$BATCH_TIME` rather than a per-run literal.
     */
-  def resolve(fun: Option[String], batchAnchorUtc: Option[java.sql.Timestamp]): Column => Column =
+  def resolve(fun: Option[String], batchAnchorUtc: Option[Column]): Column => Column =
     fun match {
       case None => identity
       case Some("str -> datetime-no") if batchAnchorUtc.isDefined =>
-        c => lenientDateOslo(c, batchAnchorUtc.map(lit(_)))
+        c => lenientDateOslo(c, batchAnchorUtc)
       case Some(f) =>
         registry.getOrElse(f, throw new IllegalArgumentException(s"unknown transform fun: $f"))
     }

@@ -3,10 +3,13 @@ package graft.operators
 import java.sql.Timestamp
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.catalyst.util.DateTimeUtils
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.Shim
 import org.apache.spark.sql.types._
 
 import graft.config.TransformRule
+import graft.expressions.BatchTime
 import graft.functions.Conversions
 
 /** T1–T12: the transform select-list compiler — the reference's per-row
@@ -14,8 +17,10 @@ import graft.functions.Conversions
   * re-expressed as a single `select` of codegen'd columns.
   *
   * `src` resolution order (parity with `/root/reference/src/transform.py:166-186`):
-  *   1. `$$BATCH_TIME` → a plan-time literal frozen at compile (T1) — constant
-  *      across every batch of a run, never `current_timestamp()`;
+  *   1. `$$BATCH_TIME` → the plan-time value frozen at compile (T1) — constant
+  *      across every batch of a run, never `current_timestamp()`. It is bound
+  *      as a [[graft.expressions.BatchTime]], not a literal, so a scheduled
+  *      run with a new batch time reuses the previous run's generated code;
   *   2. `$literal` → `lit(remainder)` (T2);
   *   3. dotted keypath into the merged row: a top-level envelope column, or a
   *      path into the `payload` struct (T3). Unresolvable paths fail at plan
@@ -58,8 +63,9 @@ object Transforms {
       batchTime: Timestamp,
       payloadField: String = "payload",
       sep: String = "."): Column = {
+    val batchTimeCol = Shim.column(BatchTime(DateTimeUtils.fromJavaTimestamp(batchTime)))
     val srcCol: Column = rule.src match {
-      case "$$BATCH_TIME" => lit(batchTime)
+      case "$$BATCH_TIME" => batchTimeCol
       case s if s.startsWith("$") => lit(s.drop(1))
       case s =>
         resolvePath(schema, payloadField, PayloadOps.splitPath(s, sep)) match {
@@ -68,7 +74,7 @@ object Transforms {
           case None => throw CompileError(s"transform src path not found: '$s' (dst ${rule.dst})")
         }
     }
-    Conversions.resolve(rule.fun, Some(batchTime))(srcCol).as(rule.dst)
+    Conversions.resolve(rule.fun, Some(batchTimeCol))(srcCol).as(rule.dst)
   }
 
   /** Compile the full rule list against an envelope frame. */

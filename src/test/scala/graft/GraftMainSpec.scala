@@ -125,6 +125,66 @@ class GraftMainSpec extends SparkSpec {
     assert(out(1L).isEmpty && out(2L).nonEmpty && out(3L).nonEmpty && out(4L).nonEmpty)
   }
 
+  test("warm subscribe runs compile no new classes; each run keeps its batch time") {
+    import org.apache.spark.metrics.source.CodegenMetrics
+    val src = Files.createTempDirectory("graft-e2e-warm").toString
+    val dimDir = Files.createTempDirectory("graft-e2e-warmdim").toString
+    val sink = Files.createTempDirectory("graft-e2e-warmsink").toString + "/out"
+    writeDim(dimDir)
+    // `$$BATCH_TIME` and a relative date anchored to it: the two columns
+    // whose value changes from run to run
+    val yaml = yamlFor(sink).replace("strategy: assign", "strategy: subscribe") +
+      """  - src: $$BATCH_TIME
+        |    dst: lastet_tid
+        |  - src: d
+        |    dst: d_no
+        |    fun: str -> datetime-no
+        |""".stripMargin
+    val env = mkEnv(Map(
+      "CONSUMER_CONFIG" -> yaml,
+      "GRAFT_SOURCE_DIR" -> src,
+      "GRAFT_K6_DIM_DIR" -> dimDir,
+      "GRAFT_CHECKPOINT_DIR" -> (Files.createTempDirectory("graft-e2e-warmckpt").toString),
+      "GRAFT_PAYLOAD_SCHEMA" -> "k LONG, d STRING"))
+
+    // three runs of four new messages each over one checkpoint; every
+    // GraftMain.execute builds a new Pipeline and so a new batch time
+    val windows = (0 until 3).map { run =>
+      val raw = (1L to 4L).map { i =>
+        val off = run * 4L + i
+        (i.toString.getBytes("UTF-8"), s"""{"k": $i, "d": "yesterday"}""".getBytes("UTF-8"),
+          "events", (i % 4).toInt, off, tsMs)
+      }
+      graft.sources.MessageSource.fromRows(spark, raw)
+        .coalesce(1).write.mode("append").parquet(s"$src/topic")
+      val compiledBefore = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+      val startMs = System.currentTimeMillis()
+      val summary = GraftMain.execute(env)
+      val endMs = System.currentTimeMillis()
+      assert(summary.eventCount == 4 && summary.writtenToDbCount == 4)
+      if (run == 2)
+        assert(CodegenMetrics.METRIC_COMPILATION_TIME.getCount == compiledBefore,
+          "a warm run with a new batch time compiled new classes")
+      (startMs, endMs)
+    }
+
+    val rows = spark.read.parquet(sink)
+      .select(col("kafka_offset"), col("lastet_tid"),
+        (col("d_no") === from_utc_timestamp(col("lastet_tid") - expr("INTERVAL 1 DAY"),
+          "Europe/Oslo")).as("anchored"))
+      .collect()
+    assert(rows.length == 12)
+    assert(rows.forall(_.getBoolean(2)), "'yesterday' anchors to its own run's batch time")
+    val perRun = rows.groupBy(r => (r.getLong(0) - 1) / 4)
+      .map { case (run, rs) => run.toInt -> rs.map(_.getTimestamp(1)).distinct.toSeq }
+    windows.zipWithIndex.foreach { case ((startMs, endMs), run) =>
+      val bt = perRun(run)
+      assert(bt.size == 1, s"run $run: one batch time per run")
+      assert(bt.head.getTime >= startMs && bt.head.getTime <= endMs,
+        s"run $run: batch time ${bt.head} is not this run's")
+    }
+  }
+
   test("failure record: stable fingerprint of class+frames, message excluded from hash") {
     val ex1 = try { throw new IllegalStateException("boom with data 42") }
               catch { case e: IllegalStateException => e }

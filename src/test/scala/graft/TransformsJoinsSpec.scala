@@ -18,12 +18,34 @@ class TransformsJoinsSpec extends SparkSpec {
     .select(col("kafka_offset"), col("kafka_message"), col("kafka_timestamp"),
       struct(col("k"), struct(lit("id1").as("ident")).as("person")).as("payload"))
 
-  test("T1 $$BATCH_TIME is the frozen plan-time literal, constant across rows") {
+  test("T1 $$BATCH_TIME is a frozen bound value; relative dates anchor to it") {
     val bt = Timestamp.valueOf("2024-06-01 12:00:00")
     val out = Transforms(env, Seq(
       TransformRule("$$BATCH_TIME", "lastet_tid"),
       TransformRule("kafka_offset", "off")), bt)
     assert(out.select("lastet_tid").distinct().as[Timestamp].collect().toSeq == Seq(bt))
+
+    // `str -> datetime-no` relative forms take the same bound batch time as
+    // their anchor: 2024-06-01 12:00:00 UTC is 14:00 Oslo wall clock (CEST)
+    // (over a range, not a local relation, so the optimized plan below
+    // keeps its projection instead of being evaluated into a LocalRelation)
+    val rel = spark.range(5).select(element_at(
+      typedLit(Seq("yesterday", "i går", "2 days ago", "now", "2024-01-15")),
+      (col("id") + 1).cast("int")).as("rel"))
+    val relOut = Transforms(rel, Seq(
+      TransformRule("$$BATCH_TIME", "lastet_tid"),
+      TransformRule("rel", "rel_no", fun = Some("str -> datetime-no"))), bt)
+    assert(relOut.select(date_format(col("rel_no"), "yyyy-MM-dd HH:mm:ss")).as[String].collect().toSeq ==
+      Seq("2024-05-31 14:00:00", "2024-05-31 14:00:00", "2024-05-30 14:00:00",
+        "2024-06-01 14:00:00", "2024-01-15 01:00:00"))
+    // a bound value, not a literal: the optimizer must not fold it back
+    // into the plan (the generated code would then change with every run)
+    val optimized = relOut.queryExecution.optimizedPlan
+    assert(optimized.expressions.exists(_.exists(_.isInstanceOf[graft.expressions.BatchTime])))
+    assert(!optimized.expressions.exists(_.exists {
+      case l: org.apache.spark.sql.catalyst.expressions.Literal => l.dataType == TimestampType
+      case _ => false
+    }), optimized.toString)
   }
 
   test("T2 $literal and T3 nested payload path") {
