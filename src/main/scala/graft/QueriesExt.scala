@@ -31,34 +31,27 @@ object QueriesExt {
 
   private def minhashOracle: String = minhashOracleWhere("")
 
-  private def minhashOracleWhere(extraWhere: String): String = {
-    // Same hash family as Dedup.minHashAggs: one md5 per (doc, shingle),
-    // 32-bit base hash, (a_j*h+b_j) mod 2^32 per family member — constants
-    // shared with the Spark side via Dedup.minHashParams.
-    val mh = Dedup.minHashParams(12).zipWithIndex
-      .map { case ((a, b), j) => s"min(($a*h+$b)%4294967296) AS m$j" }
-      .mkString(", ")
-    // Band value md5-hashed and buckets df-capped at 1000 members, mirroring
-    // Dedup.minHashLshPairs(maxBucket = 1000) exactly (the cap is a no-op at
-    // test SF but part of the declared operator semantics).
-    val bands = (0 until 4)
-      .map(b => s"SELECT doc_id, $b AS band, md5(m${3 * b}||'|'||m${3 * b + 1}||'|'||m${3 * b + 2}) AS bv FROM mh")
-      .mkString(" UNION ALL ")
+  private def minhashOracleWhere(extraWhere: String): String =
     s"""WITH $minhashCtes
        |$minhashPairsSelect$extraWhere""".stripMargin
-  }
 
   /** The minhash-LSH CTE chain and pair select, exposed separately so other
     * oracles (e.g. the PageRank gate's edge list) can compose the SAME pair
     * semantics instead of re-deriving them.
     */
   private def minhashCtes: String = {
+    // Same hash family as Dedup.minHashAggs: one md5 per (doc, shingle),
+    // 32-bit base hash, (a_j*h+b_j) mod 2^32 per family member — constants
+    // shared with the Spark side via Dedup.minHashParams.
     val mh = Dedup.minHashParams(12).zipWithIndex
       .map { case ((a, b), j) => s"min(($a*h+$b)%4294967296) AS m$j" }
       .mkString(", ")
     val bands = (0 until 4)
       .map(b => s"SELECT doc_id, $b AS band, md5(m${3 * b}||'|'||m${3 * b + 1}||'|'||m${3 * b + 2}) AS bv FROM mh")
       .mkString(" UNION ALL ")
+    // `ok`: band value md5-hashed and buckets df-capped at 1000 members,
+    // mirroring Dedup.minHashLshPairs(maxBucket = 1000) exactly (the cap is
+    // a no-op at test SF but part of the declared operator semantics).
     s"""toks AS (SELECT doc_id, string_split(trim(text), ' ') ws FROM documents),
        |sh AS (SELECT DISTINCT doc_id, ws[i]||' '||ws[i+1]||' '||ws[i+2] AS s
        |       FROM toks, UNNEST(range(1, len(ws)-1)) AS t(i)),

@@ -6,7 +6,9 @@ import java.nio.file.{Files, Paths}
 object Verify {
   def main(args: Array[String]): Unit = {
     // args: <sfDir> <outDir> [nameRegex] — the optional filter is a local
-    // dev convenience (the driver always passes exactly two args).
+    // dev convenience (the driver always passes exactly two args); it
+    // selects both the gates run and the oracles written, so a filtered
+    // dump checks only that family.
     val (sfDir, outDir) = (args(0), args(1))
     val nameFilter: String => Boolean =
       if (args.length > 2) { val re = args(2).r; n => re.findFirstIn(n).isDefined }
@@ -40,7 +42,7 @@ object Verify {
       case c if c < ' ' => f"\\u${c.toInt}%04x"
       case c => c.toString
     } + "\""
-    val json = SparkEntry.oracleSql
+    val json = SparkEntry.oracleSql.filter(e => nameFilter(e._1))
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()

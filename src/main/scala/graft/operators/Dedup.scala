@@ -197,23 +197,6 @@ object Dedup {
       min((lit(a) * h32 + lit(b)) % lit(1L << 32)).as(s"mh$j")
     }
 
-  /** MinHash+LSH candidate pairs: shingle → numHashes minhashes → `bands`
-    * bands of `numHashes/bands` rows → bucket-join on (band, bandValue).
-    *
-    * Scale shape: two keyed shuffles (shingle-distinct + signature groupBy,
-    * then band bucket join); the band join degenerates to a hot-bucket
-    * problem only when many docs are near-identical, which AQE skew-join
-    * splitting absorbs. Returns distinct (id_a < id_b) candidate pairs.
-    */
-  /** MinHash+LSH candidate pairs. `maxBucket` is the document-frequency cap
-    * on one LSH bucket: buckets with more members are DROPPED from pair
-    * generation (a bucket that large means thousands of near-identical docs —
-    * a data-quality signal to handle upstream, not a pair list worth
-    * O(maxBucket²) work). The cap is what makes the plan memory-bounded at
-    * 100 TB: the membership count is aggregated FIRST (a Long buffer per
-    * bucket, never a list), only qualifying buckets' members are gathered,
-    * so no aggregation buffer exceeds `maxBucket` ids.
-    */
   /** The LSH band table `(id, band, band_val)` — the PERSISTABLE dedup
     * index: write it out partitioned/bucketed by `(band, band_val)` and
     * later increments probe it without re-shingling the historical corpus
@@ -247,6 +230,15 @@ object Dedup {
       .select(col(idCol), col("bb.band").as("band"), col("bb.band_val").as("band_val"))
   }
 
+  /** MinHash+LSH candidate pairs: shingle → numHashes minhashes → `bands`
+    * bands of `numHashes/bands` rows → distinct `(id_a < id_b)` pairs of
+    * docs sharing a `(band, band_val)` bucket. `maxBucket` is the
+    * document-frequency cap on one LSH bucket: buckets with more members are
+    * DROPPED from pair generation (a bucket that large means thousands of
+    * near-identical docs — a data-quality signal to handle upstream, not a
+    * pair list worth O(maxBucket²) work). The cap is what makes the plan
+    * memory-bounded at 100 TB — see [[bucketPairs]].
+    */
   def minHashLshPairs(
       df: DataFrame,
       idCol: String,
@@ -254,23 +246,54 @@ object Dedup {
       n: Int = 3,
       numHashes: Int = 12,
       bands: Int = 4,
-      maxBucket: Int = 1000): DataFrame = {
-    val banded = minHashBands(df, idCol, textCol, n, numHashes, bands)
-    // Membership COUNT first (bounded partial-agg state), then gather members
-    // for qualifying buckets only. The qualifying set is small (multi-doc
-    // buckets = near-dup clusters), so AQE broadcasts it back onto `banded`;
-    // every collect_list that follows is provably ≤ maxBucket elements.
-    val qualifying = banded.groupBy(col("band"), col("band_val"))
+      maxBucket: Int = 1000): DataFrame =
+    bucketPairs(minHashBands(df, idCol, textCol, n, numHashes, bands),
+      Seq("band", "band_val"), idCol, maxBucket)
+
+  /** The one posting-list pair expansion of the dedup family: group
+    * `postings` by `keys`, gather `member` per key, drop lists shorter than
+    * 2 (a single-member posting can never witness a pair), and expand each
+    * list LOCALLY into its ordered member pairs — one keyed exchange, no
+    * self-join. Returns `(keys…, a, b)` for every `a`, `b` of one list with
+    * `before(a, b)`; `member` may be a struct carrying per-posting payload
+    * (positions, sizes) the caller reads as `a.x` / `b.x`.
+    *
+    * Callers bound the list length BEFORE calling (a df / bucket-size cap
+    * counted first in a Long buffer, never a list), so per-key state and the
+    * C(len, 2) expansion stay bounded.
+    */
+  private def postingPairs(
+      postings: DataFrame,
+      keys: Seq[String],
+      member: Column,
+      before: (Column, Column) => Column): DataFrame = {
+    val ks = keys.map(col)
+    postings.groupBy(ks: _*).agg(collect_list(member).as("_ps"))
+      .where(size(col("_ps")) > 1)
+      .select(ks :+ explode(col("_ps")).as("a") :+ col("_ps"): _*)
+      .select(ks :+ col("a") :+ explode(col("_ps")).as("b"): _*)
+      .where(before(col("a"), col("b")))
+  }
+
+  /** Distinct `(id_a < id_b)` pairs of rows sharing a bucket `keys` of the
+    * band table `banded`, with buckets of more than `maxBucket` members
+    * dropped. Membership COUNT first (bounded partial-agg state), then
+    * gather members for qualifying buckets only. The qualifying set is small
+    * (multi-member buckets = near-dup clusters), so AQE broadcasts it back
+    * onto `banded`; every collect_list that follows is provably ≤ maxBucket
+    * elements.
+    */
+  private def bucketPairs(
+      banded: DataFrame,
+      keys: Seq[String],
+      idCol: String,
+      maxBucket: Int): DataFrame = {
+    val qualifying = banded.groupBy(keys.map(col): _*)
       .agg(count(lit(1)).as("_n"))
       .where(col("_n") > 1 && col("_n") <= maxBucket)
-      .select("band", "band_val")
-    banded.join(qualifying, Seq("band", "band_val"))
-      .groupBy(col("band"), col("band_val"))
-      .agg(collect_list(col(idCol)).as("ids"))
-      .select(explode(col("ids")).as("id_a"), col("ids"))
-      .select(col("id_a"), explode(col("ids")).as("id_b"))
-      .where(col("id_a") < col("id_b"))
-      .select("id_a", "id_b").distinct()
+      .select(keys.map(col): _*)
+    postingPairs(banded.join(qualifying, keys), keys, col(idCol), _ < _)
+      .select(col("a").as("id_a"), col("b").as("id_b")).distinct()
   }
 
   /** Incremental near-dup candidates: a NEW batch probes a persisted LSH
@@ -310,34 +333,47 @@ object Dedup {
       newBands: DataFrame,
       indexBands: DataFrame,
       idCol: String,
-      maxBucket: Int = 1000): DataFrame = {
-    val keys = Seq("band", "band_val")
+      maxBucket: Int = 1000): DataFrame =
+    probeBuckets(newBands, indexBands, Seq("band", "band_val"), idCol, maxBucket)
+
+  /** The incremental bucket probe shared by the MinHash and sign-band
+    * paths: distinct `(id_a < id_b)` pairs with at least one member in
+    * `newBands`, from buckets `keys` holding at most `maxBucket` members
+    * over index ∪ new. Both frames carry `idCol` and `keys`; `newBands` is
+    * read three times (bucket count, index probe, self probe), so pass a
+    * materialized frame.
+    */
+  private def probeBuckets(
+      newBands: DataFrame,
+      indexBands: DataFrame,
+      keys: Seq[String],
+      idCol: String,
+      maxBucket: Int): DataFrame = {
+    val kc = keys.map(col)
     val nb = newBands
-    val idx = indexBands.select(col(idCol), col("band"), col("band_val"))
+    val idx = indexBands.select(col(idCol) +: kc: _*)
     // Bucket caps count over index ∪ new — SEPARATE aggregates merged with a
     // full-outer join, NOT a union: a grouped count over the bucketed index
-    // table needs no exchange (its band_val partitioning satisfies the
+    // table needs no exchange (its bucket-key partitioning satisfies the
     // grouping's distribution), and the merge join co-locates the same way.
     // A union would erase the index's output partitioning and shuffle the
     // ENTIRE index through the aggregation on every increment.
-    val nCounts = nb.groupBy(keys.map(col): _*).agg(count(lit(1)).as("_nn"))
-    val iCounts = idx.groupBy(keys.map(col): _*).agg(count(lit(1)).as("_ni"))
+    val nCounts = nb.groupBy(kc: _*).agg(count(lit(1)).as("_nn"))
+    val iCounts = idx.groupBy(kc: _*).agg(count(lit(1)).as("_ni"))
     val qualifying = iCounts.join(nCounts, keys, "full_outer")
-      .select(col("band"), col("band_val"),
-        (coalesce(col("_nn"), lit(0L)) + coalesce(col("_ni"), lit(0L))).as("_n"))
+      .select(kc :+ (coalesce(col("_nn"), lit(0L)) + coalesce(col("_ni"), lit(0L))).as("_n"): _*)
       .where(col("_n") > 1 && col("_n") <= maxBucket)
-      .select("band", "band_val")
+      .select(kc: _*)
     // New bands in qualifying buckets probe the index and themselves; the
     // nb×idx ∪ nb×nb split reproduces exactly nb×(idx ∪ nb) while keeping
     // the index side of the big join exchange-free on a bucketed layout.
-    val probe = nb.select(col(idCol).as("_nid"), col("band"), col("band_val"))
-      .join(qualifying, keys)
-    val vsIndex = probe.join(idx.select(col(idCol).as("_mid"), col("band"), col("band_val")), keys)
+    val probe = nb.select(col(idCol).as("_nid") +: kc: _*).join(qualifying, keys)
+    val vsIndex = probe.join(idx.select(col(idCol).as("_mid") +: kc: _*), keys)
       .where(col("_nid") =!= col("_mid"))
     // Self-probe emits each unordered new-new pair ONCE (<, not ≠): both
     // members sit in nb, so the double orientation would only double the
     // rows shuffled into the closing distinct.
-    val vsNew = probe.join(nb.select(col(idCol).as("_mid"), col("band"), col("band_val")), keys)
+    val vsNew = probe.join(nb.select(col(idCol).as("_mid") +: kc: _*), keys)
       .where(col("_nid") < col("_mid"))
     vsIndex.unionByName(vsNew)
       .select(least(col("_nid"), col("_mid")).as("id_a"),
@@ -523,12 +559,8 @@ object Dedup {
       .repartition(parallelism, col("fp"))
     val keep = fps.groupBy("fp").agg(count(lit(1)).as("_df"))
       .where(col("_df") >= 2 && col("_df") <= maxDf).select("fp")
-    fps.join(keep, Seq("fp"))
-      .groupBy(col("fp")).agg(collect_list(col(idCol)).as("ids"))
-      .select(explode(col("ids")).as("id_a"), col("ids"))
-      .select(col("id_a"), explode(col("ids")).as("id_b"))
-      .where(col("id_a") < col("id_b"))
-      .groupBy("id_a", "id_b").agg(count(lit(1)).as("n_shared"))
+    postingPairs(fps.join(keep, Seq("fp")), Seq("fp"), col(idCol), _ < _)
+      .groupBy(col("a").as("id_a"), col("b").as("id_b")).agg(count(lit(1)).as("n_shared"))
       .where(col("n_shared") >= minShared)
   }
 
@@ -619,11 +651,8 @@ object Dedup {
       .repartition(parallelism, col("fp"))
     val keep = first.groupBy("fp").agg(count(lit(1)).as("_df"))
       .where(col("_df") >= 2 && col("_df") <= maxDf).select("fp")
-    first.join(keep, Seq("fp"))
-      .groupBy("fp").agg(collect_list(struct(col(idCol).as("id"), col("pos"))).as("docs"))
-      .select(col("fp"), explode(col("docs")).as("a"), col("docs"))
-      .select(col("fp"), col("a"), explode(col("docs")).as("b"))
-      .where(col("a.id") < col("b.id"))
+    postingPairs(first.join(keep, Seq("fp")), Seq("fp"),
+        struct(col(idCol).as("id"), col("pos")), (a, b) => a.getField("id") < b.getField("id"))
       .select(col("a.id").as("id_a"), col("b.id").as("id_b"), col("fp"),
         col("a.pos").as("start_a"), col("b.pos").as("start_b"))
   }
@@ -913,11 +942,6 @@ object Dedup {
       .distinct()
   }
 
-  /** n-gram Jaccard similarity pairs above `threshold`, via the shingle
-    * inverted index: pairs sharing ≥1 shingle get their intersection counted
-    * by a self-join on shingle (keyed shuffle, not n²), then
-    * `|A∩B| / (|A|+|B|-|A∩B|)`.
-    */
   /** n-gram Jaccard with an IN-PLAN stop-shingle cap: shingles whose document
     * frequency exceeds `maxDf` are removed from the shingle space entirely
     * (both intersection AND union counts — standard stop-word-filtered
@@ -968,9 +992,7 @@ object Dedup {
     // RDD. Post-fix the whole pipeline's shuffle bytes are identical
     // across passes and JVMs.
     val (inter, cnt) = shinglePairCounts(df, idCol, textCol, n, maxDf)
-    inter
-      .join(cnt.select(col(idCol).as("id_a"), col("n_sh").as("n_a")), "id_a")
-      .join(cnt.select(col(idCol).as("id_b"), col("n_sh").as("n_b")), "id_b")
+    withSizes(inter, cnt, idCol, "n_sh")
       .withColumn("jaccard",
         col("n_inter").cast("double") / (col("n_a") + col("n_b") - col("n_inter")))
       .where(col("jaccard") > threshold)
@@ -1007,16 +1029,19 @@ object Dedup {
     val cnt = withDf.groupBy(col(idCol))
       .agg((first(col("_n_all")).cast("long") -
         sum(when(col("_df") > maxDf, 1L).otherwise(0L))).as("n_sh"))
-    val inter = withDf.where(col("_df") <= maxDf)
-      .select(col(idCol), col("shingle"))
-      .groupBy(col("shingle")).agg(collect_list(col(idCol)).as("ids"))
-      .where(size(col("ids")) > 1)
-      .select(explode(col("ids")).as("id_a"), col("ids"))
-      .select(col("id_a"), explode(col("ids")).as("id_b"))
-      .where(col("id_a") < col("id_b"))
-      .groupBy("id_a", "id_b").agg(count(lit(1)).as("n_inter"))
+    val inter = postingPairs(withDf.where(col("_df") <= maxDf), Seq("shingle"), col(idCol), _ < _)
+      .groupBy(col("a").as("id_a"), col("b").as("id_b")).agg(count(lit(1)).as("n_inter"))
     (inter, cnt)
   }
+
+  /** Per-pair intersection counts `inter` `(id_a, id_b, …)` joined with both
+    * members' set sizes `n_a`, `n_b`, read from column `sizeCol` of the
+    * per-doc frame `sizes` keyed by `idCol`.
+    */
+  private def withSizes(inter: DataFrame, sizes: DataFrame, idCol: String, sizeCol: String): DataFrame =
+    inter
+      .join(sizes.select(col(idCol).as("id_a"), col(sizeCol).as("n_a")), "id_a")
+      .join(sizes.select(col(idCol).as("id_b"), col(sizeCol).as("n_b")), "id_b")
 
   /** PREFIX-FILTERED n-gram Jaccard pairs (the AllPairs/PPJoin candidate
     * bound, Bayardo et al. 2007 / Xiao et al. 2008): IDENTICAL output to
@@ -1090,12 +1115,9 @@ object Dedup {
     val prefix = perDoc.select(col(idCol), size(col("_arr")).as("_n"),
         posexplode(col("_pfx")).as(Seq("_i", "_p")))
       .select(col(idCol), col("_n"), col("_i"), col("_p.shingle").as("shingle"))
-    val cand = prefix.groupBy(col("shingle"))
-      .agg(collect_list(struct(col(idCol).as("id"), col("_i").as("i"), col("_n").as("n"))).as("ps"))
-      .where(size(col("ps")) > 1)
-      .select(explode(col("ps")).as("a"), col("ps"))
-      .select(col("a"), explode(col("ps")).as("b"))
-      .where(col("a.id") < col("b.id"))
+    val cand = postingPairs(prefix, Seq("shingle"),
+        struct(col(idCol).as("id"), col("_i").as("i"), col("_n").as("n")),
+        (a, b) => a.getField("id") < b.getField("id"))
       .where(least(col("a.n") - col("a.i"), col("b.n") - col("b.i"))
         .cast("double") * lit(1.0 + threshold) >
         lit(threshold) * (col("a.n") + col("b.n")).cast("double") - lit(1e-9))
@@ -1145,9 +1167,7 @@ object Dedup {
       threshold: Double = 0.7,
       maxDf: Int = 1000): DataFrame = {
     val (inter, cnt) = shinglePairCounts(df, idCol, textCol, n, maxDf)
-    inter
-      .join(cnt.select(col(idCol).as("id_a"), col("n_sh").as("n_a")), "id_a")
-      .join(cnt.select(col(idCol).as("id_b"), col("n_sh").as("n_b")), "id_b")
+    withSizes(inter, cnt, idCol, "n_sh")
       .withColumn("c_ab", col("n_inter").cast("double") / col("n_a"))
       .withColumn("c_ba", col("n_inter").cast("double") / col("n_b"))
       .where(greatest(col("c_ab"), col("c_ba")) >= threshold)
@@ -1399,6 +1419,30 @@ object Dedup {
       .select("id_a", "id_b", "cosine")
   }
 
+  /** The sign-band table `(block, id, band, bucket)` — the PERSISTABLE
+    * embedding-dedup index (the [[minHashBands]] analogue): write it out
+    * bucketed by `(band, bucket)` and later increments probe it without
+    * re-banding the historical corpus ([[embeddingPairsIncremental]]).
+    */
+  def embeddingBands(
+      df: DataFrame,
+      idCol: String,
+      vecCol: String,
+      blockCol: String,
+      dims: Int,
+      bands: Int = 16): DataFrame = {
+    require(bands > 0 && dims % bands == 0, "dims must divide into bands evenly")
+    val rows = dims / bands
+    val bandStructs = array((0 until bands).map { b =>
+      val bucket = (0 until rows).map { r =>
+        when(element_at(col(vecCol), b * rows + r + 1) > lit(0.0), lit(1L << r)).otherwise(lit(0L))
+      }.reduce(_ + _)
+      struct(lit(b).as("band"), bucket.as("bucket"))
+    }: _*)
+    df.select(col(blockCol).as("block"), col(idCol).as("id"), explode(bandStructs).as("bb"))
+      .select(col("block"), col("id"), col("bb.band").as("band"), col("bb.bucket").as("bucket"))
+  }
+
   /** Subquadratic embedding near-dup pairs: sign-band LSH candidate
     * generation + EXACT cosine verification — the high-threshold scale
     * path. The vector's `dims` sign bits are split into `bands` contiguous
@@ -1425,30 +1469,6 @@ object Dedup {
     * near-identical vectors at a fraction of the candidate volume. Pick r
     * ≈ log2(blockSize) − 4..5 so occupancy stays in the tens.
     */
-  /** The sign-band table `(block, id, band, bucket)` — the PERSISTABLE
-    * embedding-dedup index (the [[minHashBands]] analogue): write it out
-    * bucketed by `(band, bucket)` and later increments probe it without
-    * re-banding the historical corpus ([[embeddingPairsIncremental]]).
-    */
-  def embeddingBands(
-      df: DataFrame,
-      idCol: String,
-      vecCol: String,
-      blockCol: String,
-      dims: Int,
-      bands: Int = 16): DataFrame = {
-    require(bands > 0 && dims % bands == 0, "dims must divide into bands evenly")
-    val rows = dims / bands
-    val bandStructs = array((0 until bands).map { b =>
-      val bucket = (0 until rows).map { r =>
-        when(element_at(col(vecCol), b * rows + r + 1) > lit(0.0), lit(1L << r)).otherwise(lit(0L))
-      }.reduce(_ + _)
-      struct(lit(b).as("band"), bucket.as("bucket"))
-    }: _*)
-    df.select(col(blockCol).as("block"), col(idCol).as("id"), explode(bandStructs).as("bb"))
-      .select(col("block"), col("id"), col("bb.band").as("band"), col("bb.bucket").as("bucket"))
-  }
-
   def embeddingNearDupPairsBanded(
       df: DataFrame,
       idCol: String,
@@ -1458,23 +1478,24 @@ object Dedup {
       dims: Int,
       bands: Int = 16,
       maxBucket: Int = 1000): DataFrame = {
-    val n = df.select(col(blockCol).as("block"), col(idCol).as("id"), col(vecCol).as("v"),
-      Similarity.norm(col(vecCol)).as("nrm"))
     val banded = embeddingBands(df, idCol, vecCol, blockCol, dims, bands)
-    val keys = Seq("block", "band", "bucket")
-    val qualifying = banded.groupBy(keys.map(col): _*)
-      .agg(count(lit(1)).as("_n"))
-      .where(col("_n") > 1 && col("_n") <= maxBucket)
-      .select(keys.map(col): _*)
-    val cand = banded.join(qualifying, keys)
-      .groupBy(keys.map(col): _*)
-      .agg(collect_list(col("id")).as("ids"))
-      .select(explode(col("ids")).as("id_a"), col("ids"))
-      .select(col("id_a"), explode(col("ids")).as("id_b"))
-      .where(col("id_a") < col("id_b"))
-      .select("id_a", "id_b").distinct()
-    // Exact verify: only candidates pay the cosine; ids are unique across
-    // blocks so the vector lookup joins on id alone.
+    verifyCosine(bucketPairs(banded, Seq("block", "band", "bucket"), "id", maxBucket),
+      df, idCol, vecCol, threshold)
+  }
+
+  /** Exact cosine verify of candidate pairs `(id_a, id_b)` against the
+    * vectors of `vecs`: only candidates pay the cosine; ids are unique
+    * across blocks so the vector lookup joins on id alone. Returns
+    * `(id_a, id_b, cosine)` above `threshold`.
+    */
+  private def verifyCosine(
+      cand: DataFrame,
+      vecs: DataFrame,
+      idCol: String,
+      vecCol: String,
+      threshold: Double): DataFrame = {
+    val n = vecs.select(col(idCol).as("id"), col(vecCol).as("v"),
+      Similarity.norm(col(vecCol)).as("nrm"))
     cand
       .join(n.select(col("id").as("id_a"), col("v").as("v_a"), col("nrm").as("n_a")), Seq("id_a"))
       .join(n.select(col("id").as("id_b"), col("v").as("v_b"), col("nrm").as("n_b")), Seq("id_b"))
@@ -1505,35 +1526,10 @@ object Dedup {
       dims: Int,
       bands: Int = 16,
       maxBucket: Int = 1000): DataFrame = {
-    val keys = Seq("block", "band", "bucket")
     val nb = embeddingBands(newVecs, idCol, vecCol, blockCol, dims, bands)
       .localCheckpoint(true) // consumed by count, index probe and self probe
-    val idx = indexBands.select(col("id"), col("block"), col("band"), col("bucket"))
-    val nCounts = nb.groupBy(keys.map(col): _*).agg(count(lit(1)).as("_nn"))
-    val iCounts = idx.groupBy(keys.map(col): _*).agg(count(lit(1)).as("_ni"))
-    val qualifying = iCounts.join(nCounts, keys, "full_outer")
-      .select(col("block"), col("band"), col("bucket"),
-        (coalesce(col("_nn"), lit(0L)) + coalesce(col("_ni"), lit(0L))).as("_n"))
-      .where(col("_n") > 1 && col("_n") <= maxBucket)
-      .select(keys.map(col): _*)
-    val probe = nb.select(col("id").as("_nid"), col("block"), col("band"), col("bucket"))
-      .join(qualifying, keys)
-    val vsIndex = probe.join(idx.select(col("id").as("_mid"), col("block"), col("band"), col("bucket")), keys)
-      .where(col("_nid") =!= col("_mid"))
-    val vsNew = probe.join(nb.select(col("id").as("_mid"), col("block"), col("band"), col("bucket")), keys)
-      .where(col("_nid") < col("_mid"))
-    val cand = vsIndex.unionByName(vsNew)
-      .select(least(col("_nid"), col("_mid")).as("id_a"),
-        greatest(col("_nid"), col("_mid")).as("id_b"))
-      .distinct()
-    val n = corpus.select(col(idCol).as("id"), col(vecCol).as("v"),
-      Similarity.norm(col(vecCol)).as("nrm"))
-    cand
-      .join(n.select(col("id").as("id_a"), col("v").as("v_a"), col("nrm").as("n_a")), Seq("id_a"))
-      .join(n.select(col("id").as("id_b"), col("v").as("v_b"), col("nrm").as("n_b")), Seq("id_b"))
-      .withColumn("cosine", Similarity.dot(col("v_a"), col("v_b")) / (col("n_a") * col("n_b")))
-      .where(col("cosine") > threshold)
-      .select("id_a", "id_b", "cosine")
+    verifyCosine(probeBuckets(nb, indexBands, Seq("block", "band", "bucket"), "id", maxBucket),
+      corpus, idCol, vecCol, threshold)
   }
 
   /** SemDeDup-style SEMANTIC deduplication (Abbas et al. 2023,
@@ -2044,23 +2040,6 @@ object Dedup {
           x => x.getField("span")), " ").as(textCol))
   }
 
-  /** Deterministic corpus MIXING — per-source epoch weights, the "sample
-    * web 0.5×, upsample wiki 2.4×" knob of a training-data recipe: each row
-    * is replicated `floor(weight)` times (epochs 0…floor-1) and gains one
-    * extra epoch when its content-hash bucket falls under the fractional
-    * remainder, so the realized rate converges to the requested weight and
-    * is a pure function of the id — append-stable, reproducible across
-    * engines/retries, and identical for a row in every run regardless of
-    * which snapshot it arrives in.
-    *
-    * Weights resolve in basis points (1e-4 resolution, same floor as
-    * [[stratifiedSample]]); every weight must be positive — a 0× source is
-    * a filter, not a mix entry. Scale shape: the weight lookup is a literal
-    * `when`-chain (config-sized), the replication is a shuffle-free
-    * `explode(sequence(...))` the scan absorbs, and the fractional keep is
-    * the same codegen'd md5 bucket as the sampling family — no shuffle
-    * anywhere, output size = Σ weight_s × |source_s| by construction.
-    */
   /** WEIGHTED (multiset) Jaccard similarity pairs: `Σ min(cA, cB) /
     * Σ max(cA, cB)` over per-token occurrence counts capped at `cap` —
     * repetition-aware near-dup detection where set-Jaccard saturates (a doc
@@ -2126,15 +2105,9 @@ object Dedup {
     val kept = el.join(dfCnt, Seq("e")).where(col("_df") <= maxDf)
       .select(col(idCol), col("e"))
     val cnt = kept.groupBy(col(idCol)).agg(count(lit(1)).as("n_el"))
-    val inter = kept.groupBy(col("e")).agg(collect_list(col(idCol)).as("ids"))
-      .where(size(col("ids")) > 1)
-      .select(explode(col("ids")).as("id_a"), col("ids"))
-      .select(col("id_a"), explode(col("ids")).as("id_b"))
-      .where(col("id_a") < col("id_b"))
-      .groupBy("id_a", "id_b").agg(count(lit(1)).as("n_inter"))
-    inter
-      .join(cnt.select(col(idCol).as("id_a"), col("n_el").as("n_a")), "id_a")
-      .join(cnt.select(col(idCol).as("id_b"), col("n_el").as("n_b")), "id_b")
+    val inter = postingPairs(kept, Seq("e"), col(idCol), _ < _)
+      .groupBy(col("a").as("id_a"), col("b").as("id_b")).agg(count(lit(1)).as("n_inter"))
+    withSizes(inter, cnt, idCol, "n_el")
       .withColumn("wjaccard",
         col("n_inter").cast("double") / (col("n_a") + col("n_b") - col("n_inter")))
       .where(col("wjaccard") > threshold)
@@ -2166,26 +2139,41 @@ object Dedup {
       textCol: String,
       minDf: Int = 2): DataFrame = {
     require(minDf >= 2, "minDf < 2 would remove every line")
-    // coalesce: split(NULL) is NULL and posexplode of NULL emits NO row —
-    // a NULL-text doc would silently vanish from the output, violating the
-    // never-changes-corpus-membership contract above (empty-string docs
-    // already survive as one empty line). NULL text ≡ empty text here.
-    val lines = df.select(col(idCol),
+    val lines = docLines(df, idCol, textCol)
+    dropDupLines(lines, lineDocFreq(lines, idCol), idCol, minDf)
+  }
+
+  /** `(idCol, pos, line)`: every line of every document with its position.
+    * coalesce: split(NULL) is NULL and posexplode of NULL emits NO row — a
+    * NULL-text doc would silently vanish from the output, violating
+    * [[lineDedup]]'s never-changes-corpus-membership contract (empty-string
+    * docs already survive as one empty line). NULL text ≡ empty text here.
+    */
+  private def docLines(df: DataFrame, idCol: String, textCol: String): DataFrame =
+    df.select(col(idCol),
       posexplode(split(coalesce(col(textCol), lit("")), "\n")).as(Seq("pos", "line")))
-    val lineDf = lines.where(trim(col("line")) =!= "")
+
+  /** `(line, _df)`: distinct-document count of each non-blank line. */
+  private def lineDocFreq(lines: DataFrame, idCol: String): DataFrame =
+    lines.where(trim(col("line")) =!= "")
       .select(col(idCol), col("line")).distinct()
       .groupBy(col("line")).agg(count(lit(1)).as("_df"))
-    val verdict = lines.join(lineDf, Seq("line"), "left")
+
+  /** The verdict and ordered reassembly of the line-dedup family: lines
+    * whose `_df` in `lineDf` reaches `minDf` are dropped, the survivors
+    * re-joined in position order — [[lineDedup]]'s output shape.
+    */
+  private def dropDupLines(lines: DataFrame, lineDf: DataFrame, idCol: String, minDf: Int): DataFrame =
+    lines.join(lineDf, Seq("line"), "left")
       .withColumn("_dup", coalesce(col("_df"), lit(0L)) >= minDf)
-    verdict.groupBy(col(idCol)).agg(
-      array_join(transform(
-        filter(sort_array(collect_list(struct(col("pos"), col("_dup"), col("line")))),
-          e => !e.getField("_dup")),
-        e => e.getField("line")), "\n").as("text"),
-      sum(when(col("_dup"), 0L).otherwise(1L)).as("n_kept"),
-      sum(when(col("_dup"), 1L).otherwise(0L)).as("n_removed"))
+      .groupBy(col(idCol)).agg(
+        array_join(transform(
+          filter(sort_array(collect_list(struct(col("pos"), col("_dup"), col("line")))),
+            e => !e.getField("_dup")),
+          e => e.getField("line")), "\n").as("text"),
+        sum(when(col("_dup"), 0L).otherwise(1L)).as("n_kept"),
+        sum(when(col("_dup"), 1L).otherwise(0L)).as("n_removed"))
       .select(col(idCol), col("text"), col("n_kept"), col("n_removed"))
-  }
 
   /** Persistable line-frequency index for [[lineDedupIncremental]]:
     * `(line, df)` distinct-doc counts over the corpus seen so far — the
@@ -2222,28 +2210,30 @@ object Dedup {
       textCol: String,
       minDf: Int = 2): DataFrame = {
     require(minDf >= 2, "minDf < 2 would remove every line")
-    // Same NULL-≡-empty coalesce as [[lineDedup]]: NULL-text batch docs
-    // must survive (as empty text), not vanish.
-    val lines = batch.select(col(idCol),
-      posexplode(split(coalesce(col(textCol), lit("")), "\n")).as(Seq("pos", "line")))
-    val batchDf = lines.where(trim(col("line")) =!= "")
-      .select(col(idCol), col("line")).distinct()
-      .groupBy(col("line")).agg(count(lit(1)).as("_bdf"))
-    val combined = batchDf
+    val lines = docLines(batch, idCol, textCol)
+    val combined = lineDocFreq(lines, idCol)
       .join(index.select(col("line"), col("df").as("_idf")), Seq("line"), "left")
-      .select(col("line"), (col("_bdf") + coalesce(col("_idf"), lit(0L))).as("_df"))
-    val verdict = lines.join(combined, Seq("line"), "left")
-      .withColumn("_dup", coalesce(col("_df"), lit(0L)) >= minDf)
-    verdict.groupBy(col(idCol)).agg(
-      array_join(transform(
-        filter(sort_array(collect_list(struct(col("pos"), col("_dup"), col("line")))),
-          e => !e.getField("_dup")),
-        e => e.getField("line")), "\n").as("text"),
-      sum(when(col("_dup"), 0L).otherwise(1L)).as("n_kept"),
-      sum(when(col("_dup"), 1L).otherwise(0L)).as("n_removed"))
-      .select(col(idCol), col("text"), col("n_kept"), col("n_removed"))
+      .select(col("line"), (col("_df") + coalesce(col("_idf"), lit(0L))).as("_df"))
+    dropDupLines(lines, combined, idCol, minDf)
   }
 
+  /** Deterministic corpus MIXING — per-source epoch weights, the "sample
+    * web 0.5×, upsample wiki 2.4×" knob of a training-data recipe: each row
+    * is replicated `floor(weight)` times (epochs 0…floor-1) and gains one
+    * extra epoch when its content-hash bucket falls under the fractional
+    * remainder, so the realized rate converges to the requested weight and
+    * is a pure function of the id — append-stable, reproducible across
+    * engines/retries, and identical for a row in every run regardless of
+    * which snapshot it arrives in.
+    *
+    * Weights resolve in basis points (1e-4 resolution, same floor as
+    * [[stratifiedSample]]); every weight must be positive — a 0× source is
+    * a filter, not a mix entry. Scale shape: the weight lookup is a literal
+    * `when`-chain (config-sized), the replication is a shuffle-free
+    * `explode(sequence(...))` the scan absorbs, and the fractional keep is
+    * the same codegen'd md5 bucket as the sampling family — no shuffle
+    * anywhere, output size = Σ weight_s × |source_s| by construction.
+    */
   def mixEpochs(
       df: DataFrame,
       idCol: String,

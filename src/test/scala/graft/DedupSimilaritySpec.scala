@@ -877,6 +877,89 @@ class DedupSimilaritySpec extends SparkSpec {
     }
   }
 
+  test("pair operators property: jaccard/containment/weighted/winnowing equal plain-Scala references") {
+    val rnd = new scala.util.Random(11)
+    val vocab = Seq("ab", "cd", "ef", "gh", "ij", "kl")
+    def grams(t: String): Seq[String] = {
+      val ws = t.trim.split("\\s+").toSeq
+      if (ws.size < 3) Seq.empty else ws.sliding(3).map(_.mkString(" ")).toSeq
+    }
+    // Pairs a < b with at least one shared element, from per-doc counts:
+    // (a, b, |A∩B|, |A|, |B|).
+    def overlaps(sets: Map[Long, Set[String]]): Seq[(Long, Long, Int, Int, Int)] = {
+      val ids = sets.keys.toSeq.sorted
+      for (a <- ids; b <- ids if a < b; i = (sets(a) & sets(b)).size if i > 0)
+        yield (a, b, i, sets(a).size, sets(b).size)
+    }
+    (1 to 3).foreach { trial =>
+      val base = Seq.fill(6)(Seq.fill(8 + rnd.nextInt(12))(vocab(rnd.nextInt(vocab.size))))
+      val copies = Seq.fill(6)(base(rnd.nextInt(base.size))
+        .map(w => if (rnd.nextInt(5) == 0) vocab(rnd.nextInt(vocab.size)) else w))
+      val corpus = (base ++ copies ++ Seq(Seq("ab"), Seq("ab", "cd")))
+        .zipWithIndex.map { case (ws, i) => (i.toLong, ws.mkString(" ")) }
+      val d = corpus.toDF("doc_id", "text")
+      val maxDf = 3
+
+      // Set Jaccard and containment over distinct 3-grams, df-capped grams
+      // removed from intersection AND union.
+      val sets = corpus.map { case (i, t) => i -> grams(t).toSet }.toMap
+      val df = sets.values.toSeq.flatMap(_.toSeq).groupBy(identity).map { case (g, o) => g -> o.size }
+      assert(df.values.exists(_ > maxDf), s"trial $trial: the df cap must bite")
+      val kept = sets.map { case (i, s) => i -> s.filter(df(_) <= maxDf) }
+      val jRef = overlaps(kept).collect {
+        case (a, b, i, na, nb) if i.toDouble / (na + nb - i) > 0.2 => (a, b) -> i.toDouble / (na + nb - i)
+      }.toMap
+      assert(jRef.nonEmpty, s"trial $trial: no reference jaccard pair")
+      val jGot = Dedup.jaccardPairs(d, "doc_id", "text", n = 3, threshold = 0.2, maxDf = maxDf)
+        .as[(Long, Long, Double)].collect().map(t => (t._1, t._2) -> t._3).toMap
+      assert(jGot == jRef, s"trial $trial: jaccard")
+      val cRef = overlaps(kept).collect {
+        case (a, b, i, na, nb) if math.max(i.toDouble / na, i.toDouble / nb) >= 0.5 =>
+          (a, b) -> ((i.toDouble / na, i.toDouble / nb))
+      }.toMap
+      val cGot = Dedup.containmentPairs(d, "doc_id", "text", n = 3, threshold = 0.5, maxDf = maxDf)
+        .as[(Long, Long, Double, Double)].collect().map(t => (t._1, t._2) -> ((t._3, t._4))).toMap
+      assert(cGot == cRef, s"trial $trial: containment")
+
+      // Weighted Jaccard: Σ min / Σ max over gram counts capped at `cap`,
+      // where the k-th occurrence level of a gram counts only if at most
+      // maxDf docs reach it.
+      val cap = 2
+      val counts = corpus.map { case (i, t) =>
+        i -> grams(t).groupBy(identity).map { case (g, o) => g -> math.min(o.size, cap) }
+      }.toMap
+      def reach(g: String, k: Int): Int = counts.values.count(_.getOrElse(g, 0) >= k)
+      val ids = counts.keys.toSeq.sorted
+      val wRef = (for (a <- ids; b <- ids if a < b) yield {
+        val levels = for (g <- (counts(a).keySet ++ counts(b).keySet).toSeq; k <- 1 to cap
+          if reach(g, k) <= maxDf) yield (counts(a).getOrElse(g, 0) >= k, counts(b).getOrElse(g, 0) >= k)
+        val mn = levels.count { case (x, y) => x && y }
+        val mx = levels.count { case (x, y) => x || y }
+        (a, b, mn, mx)
+      }).collect { case (a, b, mn, mx) if mn > 0 && mn.toDouble / mx > 0.2 => (a, b) -> mn.toDouble / mx }.toMap
+      assert(wRef.nonEmpty, s"trial $trial: no reference weighted pair")
+      val wGot = Dedup.weightedJaccardPairs(d, "doc_id", "text", n = 3, cap = cap,
+          threshold = 0.2, maxDf = maxDf)
+        .as[(Long, Long, Double)].collect().map(t => (t._1, t._2) -> t._3).toMap
+      assert(wGot == wRef, s"trial $trial: weighted jaccard")
+
+      // Winnowing pairs: shared-fingerprint counts over postings whose df
+      // lies in [2, maxDf], kept at >= minShared.
+      val fpMaxDf = 4
+      val fps = Dedup.winnowingFingerprints(d, "doc_id", "text", k = 5, w = 4)
+        .as[(Long, Long)].collect()
+      val postings = fps.groupBy(_._2).values.map(_.map(_._1).toSeq).toSeq
+      assert(postings.exists(_.size > fpMaxDf), s"trial $trial: the fingerprint df cap must bite")
+      val winRef = postings.filter(p => p.size >= 2 && p.size <= fpMaxDf)
+        .flatMap(p => for (a <- p; b <- p if a < b) yield (a, b))
+        .groupBy(identity).collect { case (p, o) if o.size >= 2 => p -> o.size.toLong }
+      assert(winRef.nonEmpty, s"trial $trial: no reference winnowing pair")
+      val winGot = Dedup.winnowingPairs(d, "doc_id", "text", k = 5, w = 4, minShared = 2, maxDf = fpMaxDf)
+        .as[(Long, Long, Long)].collect().map(t => (t._1, t._2) -> t._3).toMap
+      assert(winGot == winRef, s"trial $trial: winnowing")
+    }
+  }
+
   test("sequence packing property: offsets equal the naive ordered prefix sum") {
     val rnd = new scala.util.Random(7)
     // sparse, shuffled, gappy ids — the arithmetic bucketing must not care
