@@ -28,8 +28,10 @@ import graft.operators.Dedup
   * pair generation / keep-one / decontamination / projection; at 100 TB
   * that boundary becomes a parquet write between jobs. Stage counts ride
   * the stage frames that are already materialized, so the report costs no
-  * extra corpus scans beyond the per-stage `count()` actions on cached or
-  * trivially-derived frames.
+  * extra corpus scans beyond one `count()` per configured stage on its
+  * cached or trivially-derived frame (a stage that is off reports its
+  * input's count) and one aggregation over the written corpus for its
+  * rows, tokens and split sizes.
   */
 object CurateMain {
 
@@ -95,8 +97,20 @@ object CurateMain {
     val id = col(cfg.idColumn)
     val stages = Seq.newBuilder[(String, Long)]
 
+    // Stage row counts. A stage that is off passes its input frame through,
+    // so it reports the count already taken instead of running the same job
+    // again. The count itself is the lambda written on each `stages +=`
+    // line, which keeps every count job's Spark call site on its stage's
+    // line (job-to-stage attribution reads the call site).
+    var last: (DataFrame, Long) = (null, 0L)
+    def rows(frame: DataFrame)(count: DataFrame => Long): Long = {
+      val n = if (frame eq last._1) last._2 else count(frame)
+      last = (frame, n)
+      n
+    }
+
     val raw = spark.read.parquet(cfg.input)
-    stages += "input" -> raw.count()
+    stages += "input" -> rows(raw)(_.count())
 
     // Input-contract gate BEFORE any curation: one extra scan (all checks
     // ride a single aggregation — Quality.evaluate), O(checks) result rows.
@@ -160,7 +174,7 @@ object CurateMain {
     // and connectedComponents' eager checkpoints split the lineage into
     // separate jobs — same persist discipline as the gated flagship.
     val survivors0 = filtered.persist(StorageLevel.MEMORY_AND_DISK)
-    stages += "after_filters" -> survivors0.count()
+    stages += "after_filters" -> rows(survivors0)(_.count())
 
     // Bootstrap-classifier filter (the fastText-filter slot of the CCNet/
     // LLaMA recipes): fit NB on THIS corpus with the configured seed
@@ -178,7 +192,7 @@ object CurateMain {
         survivors0.join(kept, cfg.idColumn).persist(StorageLevel.MEMORY_AND_DISK)
       case None => survivors0
     }
-    stages += "after_classifier" -> afterClassifier.count()
+    stages += "after_classifier" -> rows(afterClassifier)(_.count())
 
     // CCNet-order sub-document pruning BEFORE dedup: dedup keys must see the
     // cleaned text (a doc whose boilerplate window died is a different
@@ -195,7 +209,7 @@ object CurateMain {
           .persist(StorageLevel.MEMORY_AND_DISK)
       case None => afterClassifier
     }
-    stages += "after_segment_lm" -> afterSegLm.count()
+    stages += "after_segment_lm" -> rows(afterSegLm)(_.count())
 
     // Intra-document self-dedup (cut later occurrences of repeated spans)
     // BEFORE exact dedup for the same reason as segment-lm: the dedup key
@@ -211,7 +225,7 @@ object CurateMain {
           .persist(StorageLevel.MEMORY_AND_DISK)
       case None => afterSegLm
     }
-    stages += "after_self_dedup" -> afterSelf.count()
+    stages += "after_self_dedup" -> rows(afterSelf)(_.count())
 
     // Corpus-wide ExactSubstr cut (Lee et al. remove-every-occurrence) AFTER
     // the per-document cuts and BEFORE exact dedup: the hash key must see
@@ -245,7 +259,7 @@ object CurateMain {
           .persist(StorageLevel.MEMORY_AND_DISK)
       case None => afterSelf
     }
-    stages += "after_exact_substr" -> afterExactSubstr.count()
+    stages += "after_exact_substr" -> rows(afterExactSubstr)(_.count())
 
     val afterExact =
       if (cfg.dedupExact)
@@ -254,7 +268,7 @@ object CurateMain {
             .select(col("kept_id").as(cfg.idColumn)), cfg.idColumn)
       else afterExactSubstr
     val dd = afterExact.persist(StorageLevel.MEMORY_AND_DISK)
-    stages += "after_exact_dedup" -> dd.count()
+    stages += "after_exact_dedup" -> rows(dd)(_.count())
 
     // Each optional stage that actually transforms the frame persists its
     // result: the next stage's count(), the sample/split math, and the final
@@ -274,7 +288,7 @@ object CurateMain {
         resolved.persist(StorageLevel.MEMORY_AND_DISK)
       case None => dd
     }
-    stages += "after_near_dedup" -> afterNear.count()
+    stages += "after_near_dedup" -> rows(afterNear)(_.count())
 
     val afterDeconNgram = cfg.decontaminateAgainst match {
       case Some(path) =>
@@ -301,7 +315,7 @@ object CurateMain {
           .persist(StorageLevel.MEMORY_AND_DISK)
       case _ => afterDeconNgram
     }
-    stages += "after_decontaminate" -> afterDecon.count()
+    stages += "after_decontaminate" -> rows(afterDecon)(_.count())
 
     // DSIR selection (importance resampling toward the configured target
     // slice): runs on the decontaminated corpus so weights are fit on what
@@ -318,7 +332,7 @@ object CurateMain {
           .persist(StorageLevel.MEMORY_AND_DISK)
       case None => afterDecon
     }
-    stages += "after_dsir" -> afterDsir.count()
+    stages += "after_dsir" -> rows(afterDsir)(_.count())
 
     val afterSample = (cfg.sampleStratum, cfg.sampleKPerStratum) match {
       case (Some(stratum), Some(k)) =>
@@ -332,7 +346,7 @@ object CurateMain {
           cfg.sampleRates, cfg.sampleDefault)
       case _ => afterDsir
     }
-    stages += "after_sample" -> afterSample.count()
+    stages += "after_sample" -> rows(afterSample)(_.count())
 
     // Token-budgeted mixture assembly — the final "build the training mix"
     // stage; selection joins back so the corpus keeps its full columns.
@@ -367,20 +381,18 @@ object CurateMain {
     // inference would throw UNABLE_TO_INFER_SCHEMA — an over-aggressive
     // filter config must report zeros, not crash the report step.
     val written = spark.read.schema(out.schema).parquet(s"${cfg.output}/corpus")
-    stages += "written" -> written.count()
-    // Token budget of the curated corpus — the number a training-mix plan
-    // actually consumes; the SAME guarded word count as the filter stage
-    // (split(trim("")) yields [""] — an unguarded size() would bill one
-    // token per empty doc when min-words: 0 lets them through).
-    stages += "written_tokens" -> written
-      .agg(coalesce(sum(
-        when(length(trim(col(cfg.textColumn))) === 0, lit(0))
-          .otherwise(size(Dedup.tokens(col(cfg.textColumn)))).cast("long")), lit(0L)))
-      .head().getLong(0)
+    // One scan gives the written rows, their token budget (the number a
+    // training-mix plan actually consumes; the SAME guarded word count as
+    // the filter stage, so an empty doc let through by min-words: 0 bills no
+    // token) and the split sizes: one row per split, or one global row
+    // (zeros on an empty corpus) when unsplit.
+    val perSplit = written.groupBy(partitionCols.map(col): _*)
+      .agg(count(lit(1)).as("rows"), coalesce(sum(nWords.cast("long")), lit(0L)).as("tokens"))
+      .collect()
+    stages += "written" -> perSplit.map(_.getAs[Long]("rows")).sum
+    stages += "written_tokens" -> perSplit.map(_.getAs[Long]("tokens")).sum
     val splitCounts: Map[String, Long] =
-      if (cfg.splits.nonEmpty)
-        written.groupBy("split").count().collect()
-          .map(r => r.getString(0) -> r.getLong(1)).toMap
+      if (cfg.splits.nonEmpty) perSplit.map(r => r.getString(0) -> r.getAs[Long]("rows")).toMap
       else Map.empty
 
     // Pretraining example export — the fixed-L cut of the curated corpus

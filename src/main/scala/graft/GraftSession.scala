@@ -4,8 +4,8 @@ import org.apache.spark.sql.SparkSession
 
 /** Session factory with graft's scale-oriented defaults.
   *
-  * Local testing runs `local[32]` in one JVM, but every knob here is chosen
-  * for the 1000-executor / 100 TB target:
+  * Local runs use one JVM (`local[N]`, one shuffle partition per core), but
+  * every other knob here is chosen for the 1000-executor / 100 TB target:
   *   - AQE on (runtime coalescing, skew-join splitting, dynamic broadcast).
   *   - `nanosAsLong` because upstream parquet carries TIMESTAMP(NANOS), which
   *     Spark's vectorized reader otherwise rejects; graft converts explicitly
@@ -16,19 +16,33 @@ import org.apache.spark.sql.SparkSession
   */
 object GraftSession {
 
-  /** Shuffle partition count: on a real cluster set this to 2-3x total
-    * executor cores (or leave AQE's coalescing to trim it down from a high
-    * initial value); locally match the core count.
+  /** Shuffle partition count the builder gives a session on `master`
+    * (`SPARK_GRAFT_SHUFFLE` overrides it). A local master gets one partition
+    * per core: `local[N]` and `local[N,F]` give N, `local[*]` the available
+    * processors, `local` 1. Operators that size an exchange from
+    * `numShufflePartitions`, and the persisted stage frames whose width
+    * Spark keeps, then run one task per core instead of queueing small
+    * tasks. Any other master gets 32; on a real cluster set the override to
+    * 2-3x total executor cores (or leave AQE's coalescing to trim it down
+    * from a high initial value).
     */
-  def defaultShufflePartitions: String =
-    sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", "32")
+  def defaultShufflePartitions(master: String): String =
+    sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", master match {
+      case "local" => "1"
+      case LocalMaster("*") => Runtime.getRuntime.availableProcessors.toString
+      case LocalMaster(n) => n
+      case _ => "32"
+    })
+
+  /** `local[N]` or `local[N,F]` (N a count or `*`, F max task failures). */
+  private val LocalMaster = """local\[([0-9]+|\*)\s*(?:,\s*[0-9]+\s*)?\]""".r
 
   def builder(master: String = s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]"): SparkSession.Builder =
     SparkSession
       .builder()
       .master(master)
       .appName("graft")
-      .config("spark.sql.shuffle.partitions", defaultShufflePartitions)
+      .config("spark.sql.shuffle.partitions", defaultShufflePartitions(master))
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
       .config("spark.sql.adaptive.skewJoin.enabled", "true")

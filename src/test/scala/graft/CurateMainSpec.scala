@@ -116,8 +116,19 @@ class CurateMainSpec extends SparkSpec {
     // written corpus is exact-dup-free
     val corpus = spark.read.parquet(s"$out/corpus")
     assert(corpus.groupBy(md5(col("text"))).count().where(col("count") > 1).isEmpty)
-    // report JSON is parseable shape
-    assert(report.json.startsWith("""{"stages":{"""))
+    // Stages this config leaves off pass their input frame through and
+    // report its count.
+    Seq("after_classifier" -> "after_filters", "after_segment_lm" -> "after_classifier",
+      "after_self_dedup" -> "after_segment_lm", "after_exact_substr" -> "after_self_dedup",
+      "after_decontaminate" -> "after_near_dedup", "after_dsir" -> "after_decontaminate")
+      .foreach { case (off, prev) => assert(m(off) == m(prev), s"$off=${m(off)} != $prev=${m(prev)}") }
+    // The whole report: stage counts, token total and split sizes.
+    assert(report.json ==
+      """{"stages":{"input":500,"after_filters":446,"after_classifier":446,""" +
+      """"after_segment_lm":446,"after_self_dedup":446,"after_exact_substr":446,""" +
+      """"after_exact_dedup":446,"after_near_dedup":424,"after_decontaminate":424,""" +
+      """"after_dsir":424,"after_sample":424,"written":424,"written_tokens":25735},""" +
+      """"splits":{"test":52,"train":320,"val":52},"dq":{}}""")
   }
 
   test("CurateConfig.fromYaml: examples block parses and guards") {
