@@ -8,10 +8,10 @@ import org.apache.spark.sql.SparkSessionExtensions
   * {{{
   * spark-submit --conf spark.sql.extensions=graft.GraftExtensions ...
   * // or
-  * SparkSession.builder().withExtensions(new GraftExtensions()) ...
+  * GraftSession.builder().withExtensions(new GraftExtensions()) ...
   * }}}
   *
-  * Injects the SAME singleton objects `GraftSession.registerPlanExtensions`
+  * Injects the SAME singleton objects `GraftSession.configure`
   * adds through `experimental.*` on an already-running session (the
   * driver-owned-session path this repo's gates use): the native as-of
   * planner strategy ([[graft.plans.AsOfJoinStrategy]]) and the as-of

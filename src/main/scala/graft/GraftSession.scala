@@ -1,8 +1,9 @@
 package graft
 
+import org.apache.spark.SparkConf
 import org.apache.spark.sql.SparkSession
 
-/** Session factory with graft's scale-oriented defaults.
+/** The one place a graft session is built or configured.
   *
   * Local runs use one JVM (`local[N]`, one shuffle partition per core), but
   * every other knob here is chosen for the 1000-executor / 100 TB target:
@@ -37,111 +38,95 @@ object GraftSession {
   /** `local[N]` or `local[N,F]` (N a count or `*`, F max task failures). */
   private val LocalMaster = """local\[([0-9]+|\*)\s*(?:,\s*[0-9]+\s*)?\]""".r
 
-  def builder(master: String = s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]"): SparkSession.Builder =
+  /** The settings every graft session carries: [[builder]] passes them to a
+    * new session, [[configure]] sets them on a live one.
+    */
+  private val settings: Seq[(String, String)] = Seq(
+    "spark.sql.session.timeZone" -> "UTC",
+    "spark.sql.legacy.parquet.nanosAsLong" -> "true",
+    // The Confluent-Avro decode builds its Row schema from the registry at
+    // plan time — that dynamic shape needs the untyped ScalaUDF API.
+    "spark.sql.legacy.allowUntypedScalaUDF" -> "true",
+    "spark.sql.adaptive.enabled" -> "true",
+    "spark.sql.adaptive.coalescePartitions.enabled" -> "true",
+    "spark.sql.adaptive.skewJoin.enabled" -> "true",
+    "spark.sql.parquet.aggregatePushdown" -> "true",
+    // Streaming state store: RocksDB when SPARK_GRAFT_ROCKSDB=1 — the
+    // production choice once keyed state (sessionization, stream-stream
+    // join buffers, dedup keys) outgrows executor heap; the default
+    // HDFS-backed in-memory provider is faster for the small local gates.
+    "spark.sql.streaming.stateStore.providerClass" -> (
+      if (sys.env.get("SPARK_GRAFT_ROCKSDB").contains("1"))
+        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
+      else "org.apache.spark.sql.execution.streaming.state.HDFSBackedStateStoreProvider"),
+    // Each streaming query runs on a clone of the session; with artifact
+    // isolation on, every clone gets a new executor classloader, and
+    // Spark's codegen cache (keyed on classloader and source) then misses
+    // on every scheduled run. graft adds no session artifacts. On a live
+    // session the setting takes effect for the sessions cloned from it
+    // later (one per streaming query), which is what matters.
+    "spark.sql.artifact.isolation.enabled" -> "false")
+
+  /** Builder for a new graft session on `master`: the graft settings, a
+    * shuffle width from [[defaultShufflePartitions]] and no UI. The default
+    * master is the one `spark-submit` (or `spark-shell`) was given, so a
+    * submitted run keeps its cluster; without one it is
+    * `local[$SPARK_GRAFT_CPUS]`, else `local[*]`. Call [[configure]] on the
+    * built session before use; [[get]] does both.
+    */
+  def builder(master: String = new SparkConf().getOption("spark.master")
+      .getOrElse(sys.env.get("SPARK_GRAFT_CPUS").fold("local[*]")(n => s"local[$n]")))
+      : SparkSession.Builder =
     SparkSession
       .builder()
       .master(master)
       .appName("graft")
       .config("spark.sql.shuffle.partitions", defaultShufflePartitions(master))
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.sql.adaptive.skewJoin.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // The Confluent-Avro decode builds its Row schema from the registry at
-      // plan time — that dynamic shape needs the untyped ScalaUDF API.
-      .config("spark.sql.legacy.allowUntypedScalaUDF", "true")
-      .config("spark.sql.parquet.aggregatePushdown", "true")
-      // Streaming state store: RocksDB when SPARK_GRAFT_ROCKSDB=1 — the
-      // production choice once keyed state (sessionization, stream-stream
-      // join buffers, dedup keys) outgrows executor heap; the default
-      // HDFS-backed in-memory provider is faster for the small local gates.
-      .config("spark.sql.streaming.stateStore.providerClass", stateStoreProvider)
-      // Each streaming query runs on a clone of the session; with artifact
-      // isolation on, every clone gets a new executor classloader, and
-      // Spark's codegen cache (keyed on classloader and source) then misses
-      // on every scheduled run. graft adds no session artifacts.
-      .config("spark.sql.artifact.isolation.enabled", "false")
       .config("spark.ui.enabled", "false")
+      .config(settings.toMap)
 
-  /** Session for the library entry points (GraftMain/CurateMain). When a
-    * session already EXISTS (an embedding host — Bench, Verify, a notebook,
-    * a gate), it is reused via [[configure]] and its parallelism settings
-    * are left alone: `builder().getOrCreate()` would re-apply the builder's
-    * `spark.sql.shuffle.partitions` onto the live session (getOrCreate
-    * copies builder options onto an existing session), silently clobbering
-    * the host's sizing — found in round 15 as `withStatePartitions(8)`
-    * being undone mid-gate by the e2e pipeline's internal `get()`. Only
-    * when no session exists does the builder (with its scale defaults,
-    * including the partition count) construct one.
+  /** Session for every main: the active or default session when one exists
+    * (a notebook, the test suite, a gate calling an entry point), else a new
+    * one from [[builder]], passed through [[configure]] either way. A reused
+    * session keeps the host's master and sizing: `getOrCreate` would copy
+    * the builder's `spark.sql.shuffle.partitions` onto it, undoing e.g. a
+    * gate's `withStatePartitions(8)`.
     */
   def get(): SparkSession = {
-    val spark = SparkSession.getActiveSession
+    val spark = configure(SparkSession.getActiveSession
       .orElse(SparkSession.getDefaultSession)
-      .map(configure)
-      .getOrElse(builder().getOrCreate())
+      .getOrElse(builder().getOrCreate()))
     spark.sparkContext.setLogLevel("WARN")
-    functions.GraftFunctions.register(spark)
-    registerPlanExtensions(spark)
     spark
   }
 
-  /** graft's planner extensions: the native as-of join strategy. Registered
-    * through `experimental.extraStrategies` (idempotent) because the driver
-    * owns session construction — a session built WITH
-    * `SparkSessionExtensions` would inject the same strategy object at
-    * build time.
-    */
-  def registerPlanExtensions(spark: SparkSession): Unit = {
-    org.apache.spark.sql.graft.Shim.registerStrategy(spark, plans.AsOfJoinStrategy)
-    org.apache.spark.sql.graft.Shim.registerOptimizerRule(
-      spark, plans.PushFilterThroughAsOfJoin)
-  }
-
-  /** Apply graft settings to an externally-built session (Verify/Bench).
-    * Pins session TZ to UTC: the Conversions timestamp semantics
-    * (naive-parse + from_utc_timestamp) depend on it, so a host session in
-    * another TZ must not silently shift datetime-no outputs.
+  /** Make `spark` a graft session: set the graft settings, register the
+    * `graft_*` SQL functions and the planner extensions (the as-of join
+    * strategy and its filter-pushdown rule, through `experimental.*` on the
+    * live session; [[GraftExtensions]] injects the same objects into a
+    * session built with `spark.sql.extensions`). The session TZ
+    * must be UTC: the Conversions timestamp semantics (naive-parse +
+    * `from_utc_timestamp`) depend on it, so a host session in another TZ
+    * must not silently shift datetime-no outputs.
     *
-    * Idempotent per session (round 15): every SparkEntry query wraps its
-    * body in configure, so a 250-gate bench re-ran the 22 temp-function
-    * registrations and 8 conf writes 250 times on one session — pure
-    * driver-side overhead (and 5,000+ "function replaced" log lines)
-    * between timed gates. A session already carrying the marker conf is
-    * returned untouched; everything configure sets is session-constant
-    * (the per-gate shuffle-partition overrides go through
-    * withStatePartitions, which restores, never through configure).
+    * Idempotent per session: a session carrying the marker conf is returned
+    * untouched, so the per-query calls (every SparkEntry query wraps its
+    * body in configure) cost nothing after the first. Everything configure
+    * sets is session-constant (per-gate shuffle-partition overrides go
+    * through `withStatePartitions`, which restores). The marker is set
+    * here, never by [[builder]]: a `newSession()` inherits the builder's
+    * settings but not the session-scoped functions.
     */
   def configure(spark: SparkSession): SparkSession = {
-    if (spark.conf.getOption(ConfiguredMarker).contains("true")) return spark
-    spark.conf.set(ConfiguredMarker, "true")
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    spark.conf.set("spark.sql.legacy.allowUntypedScalaUDF", "true")
-    spark.conf.set("spark.sql.adaptive.enabled", "true")
-    spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "true")
-    spark.conf.set("spark.sql.adaptive.skewJoin.enabled", "true")
-    spark.conf.set("spark.sql.parquet.aggregatePushdown", "true")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass", stateStoreProvider)
-    // See the builder. On a live session this takes effect for the sessions
-    // cloned from it later (one per streaming query), which is what matters.
-    spark.conf.set("spark.sql.artifact.isolation.enabled", "false")
-    functions.GraftFunctions.register(spark)
-    registerPlanExtensions(spark)
+    if (!spark.conf.getOption(ConfiguredMarker).contains("true")) {
+      settings.foreach { case (k, v) => spark.conf.set(k, v) }
+      functions.GraftFunctions.register(spark)
+      org.apache.spark.sql.graft.Shim.registerStrategy(spark, plans.AsOfJoinStrategy)
+      org.apache.spark.sql.graft.Shim.registerOptimizerRule(spark, plans.PushFilterThroughAsOfJoin)
+      spark.conf.set(ConfiguredMarker, "true")
+    }
     spark
   }
 
-  /** Session marker: set by [[configure]] on first application so repeated
-    * per-query configure calls (the SparkEntry wrapper) are no-ops.
-    */
   private val ConfiguredMarker = "spark.graft.configured"
-
-  /** See the builder: RocksDB behind SPARK_GRAFT_ROCKSDB=1, else the
-    * in-memory HDFS-backed default.
-    */
-  private def stateStoreProvider: String =
-    if (sys.env.get("SPARK_GRAFT_ROCKSDB").contains("1"))
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
-    else
-      "org.apache.spark.sql.execution.streaming.state.HDFSBackedStateStoreProvider"
 }

@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.internal.SQLConf
 
 import graft.functions.TextAnalysis
 import graft.operators.{Dedup, Dimension, Multimodal, Quality, Similarity}
@@ -2118,12 +2119,22 @@ object QueriesExt {
     * starts (the count is baked into the checkpoint at first run),
     * restored after.
     */
-  private[graft] def withStatePartitions[T](s: SparkSession, n: Int)(body: => T): T = {
-    val key = "spark.sql.shuffle.partitions"
+  private[graft] def withStatePartitions[T](s: SparkSession, n: Int)(body: => T): T =
+    withConf(s, "spark.sql.shuffle.partitions", n.toString)(body)
+
+  /** `body` with `key` set to `value` on `s`, the old value restored after. */
+  private def withConf[T](s: SparkSession, key: String, value: String)(body: => T): T = {
     val prev = s.conf.get(key)
-    s.conf.set(key, n.toString)
+    s.conf.set(key, value)
     try body finally s.conf.set(key, prev)
   }
+
+  /** The `transformWithState` gates: 8 state partitions under the RocksDB
+    * state-store provider, which that API requires.
+    */
+  private def withTwsState[T](s: SparkSession)(body: => T): T =
+    withStatePartitions(s, 8)(withConf(s, SQLConf.STATE_STORE_PROVIDER_CLASS.key,
+      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")(body))
 
   private[graft] def rmTree(f: java.io.File): Unit = {
     Option(f.listFiles()).foreach(_.foreach(rmTree)); f.delete(): Unit
@@ -4277,30 +4288,24 @@ object QueriesExt {
   private val stFunnelTws: Q = "st_funnel_tws" -> {
     val stages = Seq("view", "click", "purchase")
     ((
-      (s: SparkSession, dir: String) => withStatePartitions(s, 8) {
-        val key = "spark.sql.streaming.stateStore.providerClass"
-        val prev = s.conf.get(key)
-        s.conf.set(key,
-          "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-        try {
-          import s.implicits._
-          val slim = sources.EventsTable.load(s, dir)
-            .where(col("event_type").isin(stages.map(x => x: Any): _*))
-            .select(col("user_id").as("u"), col("event_type").as("et"), col("ts").as("t"))
-          streamedGate(s, "stfunneltws", slim)(
-            plan = mk => graft.streaming.FunnelTws.funnel(mk(), stages),
-            post = out => {
-              val per = out.groupBy("u").agg(max("reached").as("reached"))
-              val counts = per.where(col("reached") >= 0)
-                .select(explode(sequence(lit(0), col("reached"))).as("stage_idx"))
-                .groupBy("stage_idx").agg(count(lit(1)).as("users"))
-              val stagesDf = stages.zipWithIndex
-                .map { case (st, i) => (i, st) }.toDF("stage_idx", "stage")
-              stagesDf.join(counts, Seq("stage_idx"), "left")
-                .select(col("stage_idx"), col("stage"),
-                  coalesce(col("users"), lit(0L)).as("users"))
-            })
-        } finally s.conf.set(key, prev)
+      (s: SparkSession, dir: String) => withTwsState(s) {
+        import s.implicits._
+        val slim = sources.EventsTable.load(s, dir)
+          .where(col("event_type").isin(stages.map(x => x: Any): _*))
+          .select(col("user_id").as("u"), col("event_type").as("et"), col("ts").as("t"))
+        streamedGate(s, "stfunneltws", slim)(
+          plan = mk => graft.streaming.FunnelTws.funnel(mk(), stages),
+          post = out => {
+            val per = out.groupBy("u").agg(max("reached").as("reached"))
+            val counts = per.where(col("reached") >= 0)
+              .select(explode(sequence(lit(0), col("reached"))).as("stage_idx"))
+              .groupBy("stage_idx").agg(count(lit(1)).as("users"))
+            val stagesDf = stages.zipWithIndex
+              .map { case (st, i) => (i, st) }.toDF("stage_idx", "stage")
+            stagesDf.join(counts, Seq("stage_idx"), "left")
+              .select(col("stage_idx"), col("stage"),
+                coalesce(col("users"), lit(0L)).as("users"))
+          })
       },
       """WITH f AS (SELECT user_id AS u, event_type AS et, ts AS t FROM events
         |           WHERE event_type IN ('view','click','purchase')),
@@ -4687,19 +4692,13 @@ object QueriesExt {
     * an oracle that has never heard of state stores.
     */
   private val stTypeCountsTws: Q = "st_type_counts_tws" -> ((
-    (s: SparkSession, dir: String) => withStatePartitions(s, 8) {
-      val key = "spark.sql.streaming.stateStore.providerClass"
-      val prev = s.conf.get(key)
-      s.conf.set(key,
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      try {
-        val slim = sources.EventsTable.load(s, dir)
-          .select(col("user_id").as("u"), col("event_type").as("et"))
-        streamedGate(s, "sttypecounts", slim)(
-          plan = mk => graft.streaming.CountsTws.counts(mk()),
-          post = out => out.groupBy(col("u").as("user_id"), col("et").as("event_type"))
-            .agg(max(col("n")).as("n")))
-      } finally s.conf.set(key, prev)
+    (s: SparkSession, dir: String) => withTwsState(s) {
+      val slim = sources.EventsTable.load(s, dir)
+        .select(col("user_id").as("u"), col("event_type").as("et"))
+      streamedGate(s, "sttypecounts", slim)(
+        plan = mk => graft.streaming.CountsTws.counts(mk()),
+        post = out => out.groupBy(col("u").as("user_id"), col("et").as("event_type"))
+          .agg(max(col("n")).as("n")))
     },
     """SELECT user_id, event_type, count(*)::BIGINT AS n
       |FROM events GROUP BY 1, 2""".stripMargin))
@@ -5080,28 +5079,22 @@ object QueriesExt {
     * funnel-pair migration proof, now for the timer surface.
     */
   private val stSessionizeTws: Q = "st_sessionize_tws" -> ((
-    (s: SparkSession, dir: String) => withStatePartitions(s, 8) {
+    (s: SparkSession, dir: String) => withTwsState(s) {
       import s.implicits._
-      val key = "spark.sql.streaming.stateStore.providerClass"
-      val prev = s.conf.get(key)
-      s.conf.set(key,
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      try {
-        val gapMs = 21600000L
-        val ev = sources.EventsTable.load(s, dir)
-          .select(col("user_id"),
-            graft.functions.Conversions.nanosToTimestamp(col("ts")).as("ts"),
-            col("value"))
-        val maxTs = ev.agg(max("ts")).head().getTimestamp(0)
-        val sentinel = Seq((-1L, new java.sql.Timestamp(maxTs.getTime + gapMs + 2 * 3600 * 1000L), 0.0))
-          .toDF("user_id", "ts", "value")
-        streamedGate(s, "stsesstws", ev, Some(sentinel))(
-          plan = mk => graft.streaming.SessionizeTws
-            .sessions(s, mk(), gapMs = gapMs, watermarkDelay = "10 minutes").toDF()
-            .select(col("userId").as("user_id"), col("startMs").as("start_ms"),
-              col("endMs").as("end_ms"), col("nEvents").as("n_events")),
-          post = _.where(col("user_id") >= 0))
-      } finally s.conf.set(key, prev)
+      val gapMs = 21600000L
+      val ev = sources.EventsTable.load(s, dir)
+        .select(col("user_id"),
+          graft.functions.Conversions.nanosToTimestamp(col("ts")).as("ts"),
+          col("value"))
+      val maxTs = ev.agg(max("ts")).head().getTimestamp(0)
+      val sentinel = Seq((-1L, new java.sql.Timestamp(maxTs.getTime + gapMs + 2 * 3600 * 1000L), 0.0))
+        .toDF("user_id", "ts", "value")
+      streamedGate(s, "stsesstws", ev, Some(sentinel))(
+        plan = mk => graft.streaming.SessionizeTws
+          .sessions(s, mk(), gapMs = gapMs, watermarkDelay = "10 minutes").toDF()
+          .select(col("userId").as("user_id"), col("startMs").as("start_ms"),
+            col("endMs").as("end_ms"), col("nEvents").as("n_events")),
+        post = _.where(col("user_id") >= 0))
     },
     """WITH e AS (SELECT user_id, epoch_ms(ts) t FROM events),
       |m AS (SELECT user_id, t,

@@ -14,11 +14,6 @@ import graft.operators.Joins
 class AsOfJoinSpec extends SparkSpec {
   import spark.implicits._
 
-  override def beforeAll(): Unit = {
-    super.beforeAll()
-    GraftSession.registerPlanExtensions(spark)
-  }
-
   private def facts = Seq(
     (1L, 10L, "a"), (1L, 20L, "b"), (1L, 5L, "c"),
     (2L, 15L, "d"), (3L, 100L, "e")

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Same-JVM A/B adjudicator for per-gate bench deltas (not part of the
   * driver contract): runs the named gates back-to-back in BOTH orderings
   * inside one session, so a gate-family slowdown that appears in a long
@@ -10,7 +8,7 @@ import org.apache.spark.sql.SparkSession
   * is the only valid signal for adjudicating cross-run per-gate ratios —
   * machine load during a 4-minute full board is not.
   *
-  * `runMain graft.BenchAB [gate ...]` — defaults to the round-9 `weak`
+  * `Test/runMain graft.BenchAB [gate ...]` — defaults to the round-9 `weak`
   * cluster (the 6 ANN gates + st_curate_increment + t7_datetime_no +
   * x_sample_dsir). Prints one line per (pass, gate) and a final summary
   * with min-of-passes per gate — min, not mean, because the question is
@@ -30,14 +28,7 @@ object BenchAB {
   def main(args: Array[String]): Unit = {
     val gates = if (args.nonEmpty) args.toSeq else defaultGates
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    GraftSession.configure(spark)
+    val spark = GraftSession.get()
     // Same warmers as Bench: codegen/scan machinery out of the first gate.
     spark.range(1000000).selectExpr("sum(id * 2)").collect()
     Seq("events", "documents", "embeddings", "orders", "lineitem").foreach { t =>

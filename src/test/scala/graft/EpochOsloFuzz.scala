@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Differential-fuzz emitter for the T8/T9 epoch→Oslo converters (dev
@@ -16,7 +15,7 @@ import org.apache.spark.sql.functions._
   * WALL, which lags the instant's true offset for 1–2 h after each
   * transition) is MEASURED, not just asserted.
   *
-  * `runMain graft.EpochOsloFuzz [n] [seed] [outFile]`
+  * `Test/runMain graft.EpochOsloFuzz [n] [seed] [outFile]`
   */
 object EpochOsloFuzz {
   def main(args: Array[String]): Unit = {
@@ -45,11 +44,7 @@ object EpochOsloFuzz {
       } else lo + math.floorMod(rnd.nextLong(), hi - lo)
     }
 
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.get()
     spark.sparkContext.setLogLevel("ERROR")
     import spark.implicits._
     val rows = epochs.toDF("ms")

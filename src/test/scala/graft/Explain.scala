@@ -1,7 +1,7 @@
 package graft
 
 /** Plan inspection: print the formatted physical plan of one or more
-  * SparkEntry queries. `runMain graft.Explain <sfDir> <query...>`
+  * SparkEntry queries. `Test/runMain graft.Explain <sfDir> <query...>`
   */
 object Explain {
   def main(args: Array[String]): Unit = {

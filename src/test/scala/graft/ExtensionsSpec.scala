@@ -4,7 +4,7 @@ import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.graft.Shim
 
 /** The `spark.sql.extensions` entry point must inject exactly the objects
-  * the running-session path (`GraftSession.registerPlanExtensions`)
+  * the running-session path (`GraftSession.configure`)
   * registers — proving the two deployment wirings interchangeable.
   */
 class ExtensionsSpec extends SparkSpec {

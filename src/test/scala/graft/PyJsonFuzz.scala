@@ -16,7 +16,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * the reference implementation itself, not against our reading of its
   * docs.
   *
-  * `runMain graft.PyJsonFuzz [n] [seed] [outFile]` — defaults 20000, seed
+  * `Test/runMain graft.PyJsonFuzz [n] [seed] [outFile]` — defaults 20000, seed
   * 12, stdout (pass a file to avoid sbt log interleaving).
   * About a quarter of non-empty objects carry DUPLICATE keys (round 13):
   * CPython resolves keep-LAST at the first occurrence's position, and

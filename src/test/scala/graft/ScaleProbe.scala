@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.operators.{Dedup, Similarity}
@@ -10,7 +9,7 @@ import graft.operators.{Dedup, Similarity}
   * the heavy dedup path — minhash-LSH pairs → connected components — to
   * check that the plans HOLD as the data (and worse, the pair volume) grows.
   *
-  * `runMain graft.ScaleProbe [factor]` — prints one timing line per stage.
+  * `Test/runMain graft.ScaleProbe [factor]` — prints one timing line per stage.
   * This is a deliberately HOSTILE shape: the one-token suffix per replica
   * leaves cross-replica copies near-identical, so every document's N copies
   * form an N-clique and candidate pairs grow QUADRATICALLY with the factor
@@ -28,13 +27,7 @@ object ScaleProbe {
     // only).
     val onlyStage = args.drop(1).headOption
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    GraftSession.configure(spark)
+    val spark = GraftSession.get()
 
     val base = spark.read.parquet(s"$sfDir/documents.parquet")
     val n = base.count()

@@ -5,23 +5,16 @@ import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared local session for the spec pyramid (one JVM-wide session — Spark
-  * startup dominates test wall-time otherwise).
+  * startup dominates test wall-time otherwise). It is the production session
+  * from [[GraftSession]], four cores wide, with its own warehouse dir.
   */
 object SparkSpec {
   lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.legacy.allowUntypedScalaUDF", "true")
+    val s = GraftSession.configure(GraftSession.builder("local[4]")
       .config("spark.sql.warehouse.dir",
         java.nio.file.Files.createTempDirectory("graft-warehouse").toString)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+      .getOrCreate())
     s.sparkContext.setLogLevel("ERROR")
-    functions.GraftFunctions.register(s)
     s
   }
 }

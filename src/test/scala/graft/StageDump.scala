@@ -2,7 +2,6 @@ package graft
 
 import java.io.{File, PrintWriter}
 import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
-import org.apache.spark.sql.SparkSession
 
 /** Per-Spark-stage shuffle profiler for a single gate (dev tool, not part
   * of the driver contract): runs the named gate `passes` times in one JVM,
@@ -14,7 +13,7 @@ import org.apache.spark.sql.SparkSession
   * BASELINE.md), where executed-plan dumps could not (localCheckpoint
   * materializations are RDD jobs invisible to QueryExecutionListener).
   *
-  * `runMain graft.StageDump <gate> [passes=4]`
+  * `Test/runMain graft.StageDump <gate> [passes=4]`
   */
 object StageDump {
   def main(args: Array[String]): Unit = {
@@ -22,13 +21,7 @@ object StageDump {
     val gate = args(0)
     val passes = if (args.length > 1) args(1).toInt else 4
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    GraftSession.configure(spark)
+    val spark = GraftSession.get()
     require(SparkEntry.queries.contains(gate), s"unknown gate: $gate")
     val snap = TaskMetricsCollector.install(spark.sparkContext)
 

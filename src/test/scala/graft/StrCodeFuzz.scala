@@ -17,7 +17,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * the T6 emulation is checked against the actual reference function, not
   * our reading of it.
   *
-  * `runMain graft.StrCodeFuzz [n] [seed] [outFile]`
+  * `Test/runMain graft.StrCodeFuzz [n] [seed] [outFile]`
   */
 object StrCodeFuzz {
   def main(args: Array[String]): Unit = {

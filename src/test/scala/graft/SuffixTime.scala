@@ -8,11 +8,7 @@ import org.apache.spark.sql.functions._
   */
 object SuffixTime {
   def main(args: Array[String]): Unit = {
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .appName("suffix-time").master("local[32]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.ui.enabled", false)
-      .getOrCreate()
+    val spark = GraftSession.get()
     val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val docs = spark.read.parquet(s"$dir/documents.parquet")
       .where(col("doc_id") % 5 === 0).select("doc_id", "text")

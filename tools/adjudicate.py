@@ -51,7 +51,7 @@ def load(path):
 def run_bench_ab(gates):
     """Launch the same-JVM BenchAB min-of-4 for `gates`; return
     {gate: (min_seconds, shuf_read_bytes)} parsed from the MIN lines."""
-    cmd = ["sbt", "-batch", "runMain graft.BenchAB " + " ".join(gates)]
+    cmd = ["sbt", "-batch", "Test/runMain graft.BenchAB " + " ".join(gates)]
     print(f"\n[auto-ab] {' '.join(cmd)}", flush=True)
     proc = subprocess.run(cmd, capture_output=True, text=True)
     out = proc.stdout + proc.stderr

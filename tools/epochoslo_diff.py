@@ -5,7 +5,7 @@ REFERENCE'S OWN int_ms_to_date / _adjust_timezone (extracted verbatim from
 classification by distance to the nearest Europe/Oslo zone transition.
 
 Reads `epochMs<TAB>yyyy-MM-dd HH:mm:ss.SSS` lines (from
-`runMain graft.EpochOsloFuzz`) on stdin.
+`Test/runMain graft.EpochOsloFuzz`) on stdin.
 
 Expected picture (the DOCUMENTED divergence): graft converts the INSTANT
 via the tz database; the reference adds pytz's offset looked up AT THE

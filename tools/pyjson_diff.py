@@ -2,7 +2,7 @@
 """Differential check of graft's PyJsonDumps against REAL CPython json.
 
 Reads `base64(input)<TAB>base64(output)|NULL` lines (produced by
-`runMain graft.PyJsonFuzz`) on stdin and replays every input through
+`Test/runMain graft.PyJsonFuzz`) on stdin and replays every input through
 json.loads (strict) + json.dumps(ensure_ascii=False):
 
   - graft NULL  & loads raises      -> agree (malformed both sides)
@@ -15,7 +15,7 @@ import base64
 import json
 import sys
 
-# --quote: lines come from `runMain graft.PyJsonFuzz n seed out quote` —
+# --quote: lines come from `Test/runMain graft.PyJsonFuzz n seed out quote` —
 # the input is a raw BARE string and the oracle is json.dumps(s,
 # ensure_ascii=False) directly (the S6 PyJsonQuote path; never NULL).
 quote_mode = "--quote" in sys.argv

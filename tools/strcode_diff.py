@@ -5,7 +5,7 @@ executed as a test oracle (the module itself imports dateparser, absent
 here, so only the self-contained function block is exec'd).
 
 Reads `base64(input)<TAB>base64(output)` lines (from
-`runMain graft.StrCodeFuzz`) on stdin; exit 0 iff zero mismatches.
+`Test/runMain graft.StrCodeFuzz`) on stdin; exit 0 iff zero mismatches.
 """
 import base64
 import os
