@@ -21,24 +21,8 @@ object Bench {
     // otherwise comparable boards). One 1-row AvailableNow file-stream
     // round-trip pays that before any gate is timed. Methodology is
     // otherwise unchanged: same queries, same count() action, same order.
-    try {
-      val warmDir = java.nio.file.Files.createTempDirectory(
-        java.nio.file.Paths.get(if (new java.io.File("/dev/shm").isDirectory) "/dev/shm" else System.getProperty("java.io.tmpdir")),
-        "graft-benchwarm").toString
-      spark.range(1).selectExpr("id").write.parquet(s"$warmDir/topic")
-      val wq = spark.readStream
-        .schema(org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("id", org.apache.spark.sql.types.LongType))))
-        .parquet(s"$warmDir/topic")
-        .writeStream
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .option("checkpointLocation", s"$warmDir/ckpt")
-        .foreachBatch { (b: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-          b.count(); () }
-        .start()
-      wq.awaitTermination()
-      QueriesExt.rmTree(new java.io.File(warmDir))
-    } catch { case scala.util.control.NonFatal(e) =>
+    try QueriesExt.streamedGate(spark, "benchwarm", spark.range(1).toDF())(mk => mk()).count()
+    catch { case scala.util.control.NonFatal(e) =>
       System.err.println(s"[bench] streaming warmer skipped: ${e.getMessage}") }
     // Optional positional args = run only these queries (local iteration aid;
     // the driver invokes with no args and gets the full suite).

@@ -1,8 +1,9 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.internal.SQLConf
+import org.apache.spark.sql.streaming.{DataStreamWriter, Trigger}
 
 import graft.functions.TextAnalysis
 import graft.operators.{Dedup, Dimension, Multimodal, Quality, Similarity}
@@ -224,9 +225,6 @@ object QueriesExt {
         .mkString(" + ")
       s"SELECT vec_id, label, $b AS band, ($bucket)::BIGINT AS bucket FROM n"
     }.mkString(" UNION ALL ")
-    val cosExpr = (a: String, b: String) =>
-      s"list_reduce(list_prepend(0.0, list_transform(list_zip($a.embedding,$b.embedding)," +
-        s" x -> x[1]::DOUBLE * x[2]::DOUBLE)), (acc,v)->acc+v)/($a.nrm*$b.nrm)"
     "x_dedup_embedding_lsh" -> ((
       (s: SparkSession, dir: String) =>
         Dedup.embeddingNearDupPairsBanded(emb(s, dir), "vec_id", "embedding", "label",
@@ -241,9 +239,9 @@ object QueriesExt {
          |  FROM banded a JOIN banded b
          |    ON a.label=b.label AND a.band=b.band AND a.bucket=b.bucket AND a.vec_id < b.vec_id
          |  JOIN q ON q.label=a.label AND q.band=a.band AND q.bucket=a.bucket)
-         |SELECT id_a, id_b, ${cosExpr("na", "nb")} AS cosine
+         |SELECT id_a, id_b, ${pairCosSql("na", "nb")} AS cosine
          |FROM cand JOIN n na ON na.vec_id = id_a JOIN n nb ON nb.vec_id = id_b
-         |WHERE ${cosExpr("na", "nb")} > 0.4""".stripMargin))
+         |WHERE ${pairCosSql("na", "nb")} > 0.4""".stripMargin))
   }
 
   /** LSH RECALL evaluation gate — the accuracy-contract pattern the sketch
@@ -263,9 +261,6 @@ object QueriesExt {
         .mkString(" + ")
       s"SELECT vec_id, label, $b AS band, ($bucket)::BIGINT AS bucket FROM n"
     }.mkString(" UNION ALL ")
-    val cosExpr = (a: String, b: String) =>
-      s"list_reduce(list_prepend(0.0, list_transform(list_zip($a.embedding,$b.embedding)," +
-        s" x -> x[1]::DOUBLE * x[2]::DOUBLE)), (acc,v)->acc+v)/($a.nrm*$b.nrm)"
     "x_dedup_lsh_recall" -> ((
       (s: SparkSession, dir: String) => {
         val e = emb(s, dir)
@@ -286,7 +281,7 @@ object QueriesExt {
          |       (a,b)->a+b)) nrm FROM embeddings),
          |exact AS (SELECT a.vec_id AS id_a, b.vec_id AS id_b
          |  FROM n a JOIN n b ON a.label = b.label AND a.vec_id < b.vec_id
-         |  WHERE ${cosExpr("a", "b")} > 0.4),
+         |  WHERE ${pairCosSql("a", "b")} > 0.4),
          |banded AS ($bandSelects),
          |q AS (SELECT label, band, bucket FROM banded
          |      GROUP BY 1,2,3 HAVING count(*) > 1 AND count(*) <= 1000),
@@ -296,7 +291,7 @@ object QueriesExt {
          |  JOIN q ON q.label=a.label AND q.band=a.band AND q.bucket=a.bucket),
          |blsh AS (SELECT id_a, id_b
          |  FROM cand JOIN n na ON na.vec_id = id_a JOIN n nb ON nb.vec_id = id_b
-         |  WHERE ${cosExpr("na", "nb")} > 0.4)
+         |  WHERE ${pairCosSql("na", "nb")} > 0.4)
          |SELECT (SELECT count(*) FROM exact) AS n_exact,
          |  (SELECT count(*) FROM blsh) AS n_banded,
          |  (SELECT count(*) FROM exact JOIN blsh USING (id_a, id_b)) AS n_common""".stripMargin))
@@ -667,28 +662,20 @@ object QueriesExt {
           (col("_us") >= recentUs && col("_us") < cutUs && col("event_id") % 3 === 1))
       val outCols = Seq(col("user_id"), col("ts"), col("value"))
       val topicSchema = ev.select(outCols: _*).schema
-      val tmpPath = scratchDir("stsess")
-      val tmp = tmpPath.toString
-      try {
+      scratchTree("stsess") { tmp =>
         stageLateTopic(lab, outCols, recentUs, cutUs,
           Seq((-1L, new java.sql.Timestamp(mxUs / 1000L + gapMs + 2 * 3600 * 1000L), 0.0))
             .toDF("user_id", "ts", "value"), tmp)
         val src = s.readStream.schema(topicSchema)
           .option("maxFilesPerTrigger", "1").parquet(s"$tmp/topic")
-        val q = graft.streaming.Sessionize
+        runToEnd(tmp)(graft.streaming.Sessionize
           .sessions(s, src, gapMs = gapMs, watermarkDelay = "10 minutes").toDF()
           .select(col("userId").as("user_id"), col("startMs").as("start_ms"),
             col("endMs").as("end_ms"), col("nEvents").as("n_events"))
-          .writeStream
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .outputMode("append")
-          .format("parquet").option("path", s"$tmp/out")
-          .option("checkpointLocation", s"$tmp/ckpt")
-          .start()
-        q.awaitTermination()
+          .writeStream.outputMode("append")
+          .format("parquet").option("path", s"$tmp/out"))
         s.read.parquet(s"$tmp/out").where(col("user_id") >= 0)
-          .localCheckpoint(true)
-      } finally rmTree(tmpPath.toFile)
+      }
     },
     """WITH b AS (SELECT epoch_us(min(ts)) mn, epoch_us(max(ts)) mx FROM events),
       |cut AS (SELECT mn + (mx - mn) * 6 // 10 AS cutus,
@@ -744,19 +731,15 @@ object QueriesExt {
   private val annIvfLayout: Q = "x_ann_ivf_layout" -> ((
     (s: SparkSession, dir: String) => {
       val e = emb(s, dir)
-      val tmpPath = scratchDir("ivf")
-      val tmp = tmpPath.toString
-      try {
+      scratchTree("ivf") { tmp =>
         Similarity.assignCells(e, e.where(col("vec_id") < 16), "vec_id", "embedding")
           .write.partitionBy("cid").parquet(s"$tmp/ivf")
-        // Materialize (top-k rows only) so the scratch tree can be deleted
-        // before the gate returns its result.
         Similarity.topKIvfPrebuilt(
           queries = e.where(col("vec_id") >= 100 && col("vec_id") < 120),
           assigned = s.read.parquet(s"$tmp/ivf"),
           centroids = e.where(col("vec_id") < 16),
-          "vec_id", "embedding", k = 5, nProbe = 2).localCheckpoint(true)
-      } finally rmTree(tmpPath.toFile)
+          "vec_id", "embedding", k = 5, nProbe = 2)
+      }
     },
     annIvfOracle))
 
@@ -779,16 +762,12 @@ object QueriesExt {
     * no convergence test).
     */
   private val annKmeans: Q = {
-    def cosSql(a: String, b: String) =
-      s"list_reduce(list_prepend(0.0, list_transform(list_zip($a,$b), x -> x[1]::DOUBLE * x[2]::DOUBLE)), (acc,v)->acc+v)"
-    def nrmSql(v: String) =
-      s"sqrt(list_reduce(list_prepend(0.0, list_transform($v, x -> x::DOUBLE * x::DOUBLE)), (a,b)->a+b))"
     val k = 4
     val iters = 3
     // assignment CTEs for i in 0..iters (the last one is the final membership
     // count); update CTEs (x/m/cents) for i in 0..iters-1
     val assigns = (0 to iters).map { i =>
-      s"""a$i AS (SELECT e.vec_id, c.cid, ${cosSql("e.embedding", "c.vec")} / (e.nrm * c.cnrm) AS cs
+      s"""a$i AS (SELECT e.vec_id, c.cid, ${dotSql("e.embedding", "c.vec")} / (e.nrm * c.cnrm) AS cs
          |  FROM emb e, cents$i c),
          |r$i AS (SELECT vec_id, cid FROM (SELECT vec_id, cid,
          |  row_number() OVER (PARTITION BY vec_id ORDER BY cs DESC, cid) rn FROM a$i) WHERE rn = 1)""".stripMargin
@@ -1689,9 +1668,7 @@ object QueriesExt {
     // to stage data volume; at gate SF the honest size is small. Results
     // are partitioning-proof (exact dedup keep-min + md5-bucket split).
     (s: SparkSession, dir: String) => withStatePartitions(s, 8) {
-      val tmpPath = scratchDir("e2eyaml")
-      val tmp = tmpPath.toString
-      try {
+      scratchTree("e2eyaml") { tmp =>
         val yaml =
           s"""source:
              |  topic: events
@@ -1727,8 +1704,7 @@ object QueriesExt {
           .select(col("kafka_offset"), col("kafka_message"),
             date_format(col("ts_oslo"), "yyyy-MM-dd HH:mm:ss.SSS").as("ts_oslo"),
             col("split"))
-          .localCheckpoint(true)
-      } finally rmTree(tmpPath.toFile)
+      }
     },
     """WITH env AS (
       |  SELECT event_id AS kafka_offset,
@@ -2151,21 +2127,13 @@ object QueriesExt {
     * semantics; production checkpoints belong on durable shared storage,
     * this tree is deleted before the gate returns.
     */
-  private[graft] def scratchDir(prefix: String): java.nio.file.Path = {
+  private def scratchDir(prefix: String): java.nio.file.Path = {
     val shm = java.nio.file.Paths.get("/dev/shm")
     if (java.nio.file.Files.isDirectory(shm) && java.nio.file.Files.isWritable(shm))
       java.nio.file.Files.createTempDirectory(shm, s"graft-$prefix")
     else java.nio.file.Files.createTempDirectory(s"graft-$prefix")
   }
 
-  /** ONE streaming-gate scaffold for every file-stream gate (the review
-    * found six hand-copied variants, each leaking its temp topic +
-    * checkpoint per run): stage `topic` (plus optional sentinel `append`
-    * rows) as a bounded file topic, run `plan(stream)` through an
-    * AvailableNow parquet sink, post-process, then MATERIALIZE the result
-    * (eager localCheckpoint) so the whole temp tree can be deleted before
-    * returning — /tmp stays flat across Verify/Bench iterations.
-    */
   /** Stage the FIVE-batch late-data topic layout shared by `st_late_data`,
     * `st_sessionize`, and `st_sliding_counts` (round-14: the late-fixture
     * pattern extended to the stateful twins per the r13 verdict). `lab`
@@ -2194,7 +2162,53 @@ object QueriesExt {
     sentinel.repartition(1).write.mode("append").parquet(s"$tmp/topic")
   }
 
-  private def streamedGate(
+  /** The scratch tree of one gate (staged topics, checkpoints, throwaway
+    * sinks and tables): `body` gets the tree's path, its result is
+    * MATERIALIZED (eager localCheckpoint) and the tree is deleted on
+    * success and on failure, so /tmp stays flat across Verify/Bench
+    * iterations.
+    */
+  private[graft] def scratchTree(prefix: String)(body: String => DataFrame): DataFrame = {
+    val tmpPath = scratchDir(prefix)
+    try body(tmpPath.toString).localCheckpoint(true)
+    finally rmTree(tmpPath.toFile)
+  }
+
+  /** Run one `Trigger.AvailableNow` query to the end of its input and stop,
+    * checkpointed at `<tmp>/ckpt` — the subscribe idiom's bounded run. `w`
+    * carries the caller's sink and output mode.
+    */
+  private def runToEnd(tmp: String)(w: DataStreamWriter[Row]): Unit =
+    w.trigger(Trigger.AvailableNow()).option("checkpointLocation", s"$tmp/ckpt")
+      .start().awaitTermination()
+
+  /** Per-batch state fold: `step` maps each micro-batch of `stream` to its
+    * state rows, written OVERWRITE to `<tmp>/state/batch_id=<id>` — a
+    * replayed batch replaces its own output, so the fold is idempotent
+    * under foreachBatch's at-least-once crash replay. The state dir is
+    * seeded at `batch_id=-1` with `step` of an empty frame of the topic
+    * schema, so the read-back never hits a missing path. Returns every
+    * batch's state rows, without `batch_id`; merging them is the caller's.
+    */
+  private def foldBatches(tmp: String, stream: DataFrame)(step: DataFrame => DataFrame): DataFrame = {
+    val s = stream.sparkSession
+    step(s.createDataFrame(java.util.List.of[Row](), stream.schema))
+      .withColumn("batch_id", lit(-1L))
+      .write.partitionBy("batch_id").parquet(s"$tmp/state")
+    runToEnd(tmp)(stream.writeStream.foreachBatch { (batch: Dataset[Row], id: Long) =>
+      step(batch.toDF()).write.mode("overwrite").parquet(s"$tmp/state/batch_id=$id")
+    })
+    s.read.parquet(s"$tmp/state").drop("batch_id")
+  }
+
+  /** ONE streaming-gate scaffold for every file-stream gate (the review
+    * found six hand-copied variants, each leaking its temp topic +
+    * checkpoint per run): stage `topic` (plus optional sentinel `append`
+    * rows) as a bounded file topic, run `plan(stream)` through an
+    * AvailableNow parquet sink, post-process, then materialize the result
+    * so the whole scratch tree can be deleted before returning.
+    */
+  private[graft] def streamedGate(
       s: SparkSession,
       prefix: String,
       topic: DataFrame,
@@ -2204,27 +2218,30 @@ object QueriesExt {
       // shared streaming relation suppresses the left-outer null flush
       // (measured: the outer gate emits only the inner rows)
       plan: (() => DataFrame) => DataFrame,
-      post: DataFrame => DataFrame = identity): DataFrame = {
-    val tmpPath = scratchDir(prefix)
-    val tmp = tmpPath.toString
-    try {
-      // Stage the topic as 8 files: a compact single-file staging write
-      // would hand micro-batch ONE a single input split, serializing the
-      // pre-shuffle map work of every stateful plan behind one core.
-      topic.repartition(8).write.parquet(s"$tmp/topic")
-      append.foreach(_.write.mode("append").parquet(s"$tmp/topic"))
-      val mkStream = () => s.readStream.schema(topic.schema).parquet(s"$tmp/topic")
-      val q = plan(mkStream).writeStream
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .format("parquet")
-        .option("path", s"$tmp/out")
-        .option("checkpointLocation", s"$tmp/ckpt")
-        .outputMode("append")
-        .start()
-      q.awaitTermination()
-      post(s.read.parquet(s"$tmp/out")).localCheckpoint(true)
-    } finally rmTree(tmpPath.toFile)
+      post: DataFrame => DataFrame = identity): DataFrame = scratchTree(prefix) { tmp =>
+    // Stage the topic as 8 files: a compact single-file staging write
+    // would hand micro-batch ONE a single input split, serializing the
+    // pre-shuffle map work of every stateful plan behind one core.
+    topic.repartition(8).write.parquet(s"$tmp/topic")
+    append.foreach(_.write.mode("append").parquet(s"$tmp/topic"))
+    val mkStream = () => s.readStream.schema(topic.schema).parquet(s"$tmp/topic")
+    runToEnd(tmp)(plan(mkStream).writeStream.outputMode("append")
+      .format("parquet").option("path", s"$tmp/out"))
+    post(s.read.parquet(s"$tmp/out"))
   }
+
+  // DuckDB vector SQL shared by the embedding oracles (strict left folds in
+  // DOUBLE from 0.0).
+  private def dotSql(a: String, b: String) =
+    s"list_reduce(list_prepend(0.0, list_transform(list_zip($a,$b), x -> x[1]::DOUBLE * x[2]::DOUBLE)), (acc,v)->acc+v)"
+  private def nrmSql(v: String) =
+    s"sqrt(list_reduce(list_prepend(0.0, list_transform($v, x -> x::DOUBLE * x::DOUBLE)), (a,b)->a+b))"
+  private def l2Sql(a: String, b: String) =
+    s"list_reduce(list_prepend(0.0, list_transform(list_zip($a,$b), " +
+      s"x -> (x[1]::DOUBLE - x[2]::DOUBLE) * (x[1]::DOUBLE - x[2]::DOUBLE))), (acc,v)->acc+v)"
+  /** Cosine of relations `a` and `b`, each carrying `embedding` and its `nrm`. */
+  private def pairCosSql(a: String, b: String) =
+    s"${dotSql(s"$a.embedding", s"$b.embedding")}/($a.nrm*$b.nrm)"
 
   /** STREAM-STREAM interval join gate: purchases attribute to same-user
     * signups within a 3-day window, run as a watermarked streaming
@@ -2492,9 +2509,6 @@ object QueriesExt {
         .mkString(" + ")
       s"SELECT vec_id, label, $b AS band, ($bucket)::BIGINT AS bucket FROM n"
     }.mkString(" UNION ALL ")
-    val cosExpr = (a: String, b: String) =>
-      s"list_reduce(list_prepend(0.0, list_transform(list_zip($a.embedding,$b.embedding)," +
-        s" x -> x[1]::DOUBLE * x[2]::DOUBLE)), (acc,v)->acc+v)/($a.nrm*$b.nrm)"
     "x_dedup_embedding_incr" -> ((
       (s: SparkSession, dir: String) => {
         val e = emb(s, dir)
@@ -2515,9 +2529,9 @@ object QueriesExt {
          |    ON a.label=b.label AND a.band=b.band AND a.bucket=b.bucket AND a.vec_id < b.vec_id
          |  JOIN q ON q.label=a.label AND q.band=a.band AND q.bucket=a.bucket
          |  WHERE a.vec_id % 5 = 0 OR b.vec_id % 5 = 0)
-         |SELECT id_a, id_b, ${cosExpr("na", "nb")} AS cosine
+         |SELECT id_a, id_b, ${pairCosSql("na", "nb")} AS cosine
          |FROM cand JOIN n na ON na.vec_id = id_a JOIN n nb ON nb.vec_id = id_b
-         |WHERE ${cosExpr("na", "nb")} > 0.4""".stripMargin))
+         |WHERE ${pairCosSql("na", "nb")} > 0.4""".stripMargin))
   }
 
   /** PMI collocation gate: top-30 adjacent word pairs by pointwise mutual
@@ -2552,11 +2566,8 @@ object QueriesExt {
     */
   private val annPq: Q = {
     val m = 4; val subDim = 16; val kc = 4; val iters = 2; val topk = 5
-    def l2(a: String, b: String) =
-      s"list_reduce(list_prepend(0.0, list_transform(list_zip($a,$b), " +
-        s"x -> (x[1]::DOUBLE - x[2]::DOUBLE) * (x[1]::DOUBLE - x[2]::DOUBLE))), (acc,v)->acc+v)"
     val rounds = (0 until iters).map { i =>
-      s"""a$i AS (SELECT s.vec_id, s.sub, s.svec, c.cid, ${l2("s.svec", "c.svec")} AS d
+      s"""a$i AS (SELECT s.vec_id, s.sub, s.svec, c.cid, ${l2Sql("s.svec", "c.svec")} AS d
          |  FROM sub s JOIN cb$i c USING (sub)),
          |r$i AS (SELECT vec_id, sub, svec, cid FROM
          |  (SELECT *, row_number() OVER (PARTITION BY vec_id, sub ORDER BY d, cid) rn FROM a$i)
@@ -2576,13 +2587,13 @@ object QueriesExt {
          |     ORDER BY md5(vec_id::VARCHAR), vec_id) AS rn FROM sub)
          |  WHERE rn <= $kc),
          |$rounds,
-         |af AS (SELECT s.vec_id, s.sub, c.cid, ${l2("s.svec", "c.svec")} AS d
+         |af AS (SELECT s.vec_id, s.sub, c.cid, ${l2Sql("s.svec", "c.svec")} AS d
          |  FROM sub s JOIN cb$iters c USING (sub)),
          |codes AS (SELECT vec_id, sub, cid FROM
          |  (SELECT *, row_number() OVER (PARTITION BY vec_id, sub ORDER BY d, cid) rn FROM af)
          |  WHERE rn = 1),
          |q AS (SELECT vec_id AS query_id, sub, svec FROM sub WHERE vec_id < 10),
-         |dt AS (SELECT q.query_id, c.sub, c.cid, ${l2("q.svec", "c.svec")} AS d
+         |dt AS (SELECT q.query_id, c.sub, c.cid, ${l2Sql("q.svec", "c.svec")} AS d
          |  FROM q JOIN cb$iters c USING (sub)),
          |p AS (SELECT d.query_id, r.vec_id AS neighbor_id,
          |    round(list_reduce(list_prepend(0.0, list(d.d ORDER BY d.sub)), (a,b)->a+b), 4) AS adist
@@ -2610,18 +2621,11 @@ object QueriesExt {
     * WITH chain (kmeans CTEs k-prefixed, PQ CTEs p-prefixed).
     */
   private lazy val annIvfPq: Q = {
-    def cosSql(a: String, b: String) =
-      s"list_reduce(list_prepend(0.0, list_transform(list_zip($a,$b), x -> x[1]::DOUBLE * x[2]::DOUBLE)), (acc,v)->acc+v)"
-    def nrmSql(v: String) =
-      s"sqrt(list_reduce(list_prepend(0.0, list_transform($v, x -> x::DOUBLE * x::DOUBLE)), (a,b)->a+b))"
-    def l2Sql(a: String, b: String) =
-      s"list_reduce(list_prepend(0.0, list_transform(list_zip($a,$b), " +
-        s"x -> (x[1]::DOUBLE - x[2]::DOUBLE) * (x[1]::DOUBLE - x[2]::DOUBLE))), (acc,v)->acc+v)"
     val sql =
       s"""WITH emb AS (SELECT vec_id, embedding, ${nrmSql("embedding")} AS nrm FROM embeddings),
          |kc0 AS (SELECT vec_id AS cid, embedding AS vec, ${nrmSql("embedding")} AS cnrm
          |  FROM embeddings ORDER BY md5(vec_id::VARCHAR), vec_id LIMIT 4),
-         |ka0 AS (SELECT e.vec_id, c.cid, ${cosSql("e.embedding", "c.vec")} / (e.nrm * c.cnrm) AS cs
+         |ka0 AS (SELECT e.vec_id, c.cid, ${dotSql("e.embedding", "c.vec")} / (e.nrm * c.cnrm) AS cs
          |  FROM emb e, kc0 c),
          |kr0 AS (SELECT vec_id, cid FROM (SELECT vec_id, cid,
          |  row_number() OVER (PARTITION BY vec_id ORDER BY cs DESC, cid) rn FROM ka0) WHERE rn = 1),
@@ -2632,7 +2636,7 @@ object QueriesExt {
          |kc1 AS (SELECT cid, vec, ${nrmSql("vec")} AS cnrm FROM
          |  (SELECT cid, list_transform(vec, x -> x / n) AS vec FROM
          |    (SELECT cid, vec, ${nrmSql("vec")} AS n FROM km0))),
-         |kaf AS (SELECT e.vec_id, c.cid, ${cosSql("e.embedding", "c.vec")} / (e.nrm * c.cnrm) AS cs
+         |kaf AS (SELECT e.vec_id, c.cid, ${dotSql("e.embedding", "c.vec")} / (e.nrm * c.cnrm) AS cs
          |  FROM emb e, kc1 c),
          |krf AS (SELECT vec_id, cid FROM (SELECT vec_id, cid,
          |  row_number() OVER (PARTITION BY vec_id ORDER BY cs DESC, cid) rn FROM kaf) WHERE rn = 1),
@@ -2658,7 +2662,7 @@ object QueriesExt {
          |q AS (SELECT vec_id AS query_id, embedding, nrm FROM emb WHERE vec_id < 10),
          |probes AS (SELECT query_id, cid FROM (SELECT q.query_id, c.cid,
          |    row_number() OVER (PARTITION BY q.query_id
-         |      ORDER BY ${cosSql("q.embedding", "c.vec")} / (q.nrm * c.cnrm) DESC, c.cid) rn
+         |      ORDER BY ${dotSql("q.embedding", "c.vec")} / (q.nrm * c.cnrm) DESC, c.cid) rn
          |  FROM q, kc1 c) WHERE rn <= 2),
          |qsub AS (SELECT vec_id AS query_id, sub, svec FROM sub WHERE vec_id < 10),
          |dt AS (SELECT qs.query_id, c.sub, c.cid AS code, ${l2Sql("qs.svec", "c.svec")} AS d
@@ -2689,20 +2693,13 @@ object QueriesExt {
     * codebooks) and a (query, cell)-keyed dt.
     */
   private lazy val annIvfPqResidual: Q = {
-    def cosSql(a: String, b: String) =
-      s"list_reduce(list_prepend(0.0, list_transform(list_zip($a,$b), x -> x[1]::DOUBLE * x[2]::DOUBLE)), (acc,v)->acc+v)"
-    def nrmSql(v: String) =
-      s"sqrt(list_reduce(list_prepend(0.0, list_transform($v, x -> x::DOUBLE * x::DOUBLE)), (a,b)->a+b))"
-    def l2Sql(a: String, b: String) =
-      s"list_reduce(list_prepend(0.0, list_transform(list_zip($a,$b), " +
-        s"x -> (x[1]::DOUBLE - x[2]::DOUBLE) * (x[1]::DOUBLE - x[2]::DOUBLE))), (acc,v)->acc+v)"
     def subSql(a: String, b: String) =
       s"list_transform(list_zip($a,$b), x -> x[1]::DOUBLE - x[2]::DOUBLE)"
     val sql =
       s"""WITH emb AS (SELECT vec_id, embedding, ${nrmSql("embedding")} AS nrm FROM embeddings),
          |kc0 AS (SELECT vec_id AS cid, embedding AS vec, ${nrmSql("embedding")} AS cnrm
          |  FROM embeddings ORDER BY md5(vec_id::VARCHAR), vec_id LIMIT 4),
-         |ka0 AS (SELECT e.vec_id, c.cid, ${cosSql("e.embedding", "c.vec")} / (e.nrm * c.cnrm) AS cs
+         |ka0 AS (SELECT e.vec_id, c.cid, ${dotSql("e.embedding", "c.vec")} / (e.nrm * c.cnrm) AS cs
          |  FROM emb e, kc0 c),
          |kr0 AS (SELECT vec_id, cid FROM (SELECT vec_id, cid,
          |  row_number() OVER (PARTITION BY vec_id ORDER BY cs DESC, cid) rn FROM ka0) WHERE rn = 1),
@@ -2713,7 +2710,7 @@ object QueriesExt {
          |kc1 AS (SELECT cid, vec, ${nrmSql("vec")} AS cnrm FROM
          |  (SELECT cid, list_transform(vec, x -> x / n) AS vec FROM
          |    (SELECT cid, vec, ${nrmSql("vec")} AS n FROM km0))),
-         |kaf AS (SELECT e.vec_id, c.cid, ${cosSql("e.embedding", "c.vec")} / (e.nrm * c.cnrm) AS cs
+         |kaf AS (SELECT e.vec_id, c.cid, ${dotSql("e.embedding", "c.vec")} / (e.nrm * c.cnrm) AS cs
          |  FROM emb e, kc1 c),
          |krf AS (SELECT vec_id, cid FROM (SELECT vec_id, cid,
          |  row_number() OVER (PARTITION BY vec_id ORDER BY cs DESC, cid) rn FROM kaf) WHERE rn = 1),
@@ -2741,7 +2738,7 @@ object QueriesExt {
          |q AS (SELECT vec_id AS query_id, embedding, nrm FROM emb WHERE vec_id < 10),
          |probes AS (SELECT query_id, cid FROM (SELECT q.query_id, c.cid,
          |    row_number() OVER (PARTITION BY q.query_id
-         |      ORDER BY ${cosSql("q.embedding", "c.vec")} / (q.nrm * c.cnrm) DESC, c.cid) rn
+         |      ORDER BY ${dotSql("q.embedding", "c.vec")} / (q.nrm * c.cnrm) DESC, c.cid) rn
          |  FROM q, kc1 c) WHERE rn <= 2),
          |qres AS (SELECT p.query_id, p.cid, ${subSql("e.embedding", "c.vec")} AS rq
          |  FROM probes p JOIN emb e ON e.vec_id = p.query_id JOIN kc1 c USING (cid)),
@@ -2992,25 +2989,18 @@ object QueriesExt {
     */
   private lazy val stCurateIncrement: Q = "st_curate_increment" -> ((
     (s: SparkSession, dir: String) => withStatePartitions(s, 8) {
-      val tmpPath = scratchDir("stcurate")
-      val tmp = tmpPath.toString
-      try {
+      scratchTree("stcurate") { tmp =>
         val d = docs(s, dir).select(col("doc_id"), col("text"))
         d.repartition(4).write.parquet(s"$tmp/topic")
         val thr = math.log(0.5 / 0.5)
-        val q = s.readStream.schema(d.schema)
+        runToEnd(tmp)(s.readStream.schema(d.schema)
           .option("maxFilesPerTrigger", "1").parquet(s"$tmp/topic")
           .where(qualityLogitCol > lit(thr))
           .select(sha2(col("text").cast("binary"), 256).as("sha"))
           .dropDuplicates("sha")
-          .writeStream
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .option("checkpointLocation", s"$tmp/ckpt")
-          .format("parquet").option("path", s"$tmp/sink")
-          .start()
-        q.awaitTermination()
-        s.read.parquet(s"$tmp/sink").localCheckpoint(true)
-      } finally rmTree(tmpPath.toFile)
+          .writeStream.format("parquet").option("path", s"$tmp/sink"))
+        s.read.parquet(s"$tmp/sink")
+      }
     },
     s"""SELECT DISTINCT sha256(text) AS sha FROM documents
        |WHERE $qualityLogitSql > ${math.log(0.5 / 0.5)}""".stripMargin))
@@ -3048,9 +3038,7 @@ object QueriesExt {
     */
   private lazy val stLshDedupIncrement: Q = "st_lsh_dedup_increment" -> ((
     (s: SparkSession, dir: String) => withStatePartitions(s, 8) {
-      val tmpPath = scratchDir("stlsh")
-      val tmp = tmpPath.toString
-      try {
+      scratchTree("stlsh") { tmp =>
         val d = docs(s, dir).select(col("doc_id"), col("text"))
         d.repartition(4).write.parquet(s"$tmp/topic")
         // Seed the index with its SCHEMA (zero rows) at the batch_id=-1
@@ -3058,23 +3046,19 @@ object QueriesExt {
         // append to — no exists-branch.
         Dedup.minHashBands(d.limit(0), "doc_id", "text", n = 3, numHashes = 12, bands = 4)
           .write.parquet(s"$tmp/index/batch_id=-1")
-        val q = s.readStream.schema(d.schema)
+        runToEnd(tmp)(s.readStream.schema(d.schema)
           .option("maxFilesPerTrigger", "1").parquet(s"$tmp/topic")
           .writeStream
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .option("checkpointLocation", s"$tmp/ckpt")
-          .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
+          .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
             // Probe-then-persist, crash-idempotent under foreachBatch's
             // at-least-once replay: per-batch OVERWRITE partitions plus a
             // probe that excludes the current batch_id — see
             // [[graft.operators.Dedup.lshIncrementStep]].
             Dedup.lshIncrementStep(batch.toDF(), s"$tmp/index", s"$tmp/pairs",
               batchId, "doc_id", "text", n = 3, numHashes = 12, bands = 4)
-          }
-          .start()
-        q.awaitTermination()
-        s.read.parquet(s"$tmp/pairs").drop("batch_id").distinct().localCheckpoint(true)
-      } finally rmTree(tmpPath.toFile)
+          })
+        s.read.parquet(s"$tmp/pairs").drop("batch_id").distinct()
+      }
     },
     minhashOracleWhere("")))
 
@@ -3091,9 +3075,7 @@ object QueriesExt {
     */
   private lazy val stAnnServe: Q = "st_ann_serve" -> ((
     (s: SparkSession, dir: String) => withStatePartitions(s, 8) {
-      val tmpPath = scratchDir("stann")
-      val tmp = tmpPath.toString
-      try {
+      scratchTree("stann") { tmp =>
         val e = emb(s, dir)
         val queries = e.where(col("vec_id") >= 100 && col("vec_id") < 120)
         queries.repartition(4).write.parquet(s"$tmp/topic")
@@ -3110,20 +3092,16 @@ object QueriesExt {
         // re-plans per batch against the one cached file index. Frozen
         // index => identical per-query results, same oracle.
         val assigned = s.read.parquet(s"$tmp/index")
-        val q = s.readStream.schema(queries.schema)
+        runToEnd(tmp)(s.readStream.schema(queries.schema)
           .option("maxFilesPerTrigger", "1").parquet(s"$tmp/topic")
           .writeStream
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .option("checkpointLocation", s"$tmp/ckpt")
-          .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
+          .foreachBatch { (batch: Dataset[Row], _: Long) =>
             Similarity.topKIvfPrebuilt(batch.toDF(), assigned, cents,
                 "vec_id", "embedding", k = 5, nProbe = 2)
               .write.mode("append").parquet(s"$tmp/out")
-          }
-          .start()
-        q.awaitTermination()
-        s.read.parquet(s"$tmp/out").localCheckpoint(true)
-      } finally rmTree(tmpPath.toFile)
+          })
+        s.read.parquet(s"$tmp/out")
+      }
     },
     annIvfOracle))
 
@@ -3140,9 +3118,7 @@ object QueriesExt {
     */
   private lazy val stExactContamination: Q = "st_exact_contamination" -> ((
     (s: SparkSession, dir: String) => withStatePartitions(s, 8) {
-      val tmpPath = scratchDir("stcontam")
-      val tmp = tmpPath.toString
-      try {
+      scratchTree("stcontam") { tmp =>
         val d = docs(s, dir)
         val corpus = d.where(col("doc_id") % 5 === 0 && col("doc_id") % 97 =!= 0)
           .select("doc_id", "text")
@@ -3154,20 +3130,16 @@ object QueriesExt {
         // loop (round 15, the st_ann_serve fix): per-batch `read.parquet`
         // re-listed and re-indexed a table that never changes mid-run.
         val bg = s.read.parquet(s"$tmp/bench")
-        val q = s.readStream.schema(corpus.schema)
+        runToEnd(tmp)(s.readStream.schema(corpus.schema)
           .option("maxFilesPerTrigger", "1").parquet(s"$tmp/topic")
           .writeStream
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .option("checkpointLocation", s"$tmp/ckpt")
-          .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
+          .foreachBatch { (batch: Dataset[Row], _: Long) =>
             graft.operators.Dedup.exactContaminationAgainstGrams(
                 batch.toDF(), "doc_id", "text", bg, minLen = 20)
               .write.mode("append").parquet(s"$tmp/out")
-          }
-          .start()
-        q.awaitTermination()
-        s.read.parquet(s"$tmp/out").localCheckpoint(true)
-      } finally rmTree(tmpPath.toFile)
+          })
+        s.read.parquet(s"$tmp/out")
+      }
     },
     exactContaminationGate._2._2))
 
@@ -3387,17 +3359,13 @@ object QueriesExt {
     * gate hashes every stage's declared semantics at once.
     */
   private lazy val dedupSemantic: Q = {
-    def cosSql(a: String, b: String) =
-      s"list_reduce(list_prepend(0.0, list_transform(list_zip($a,$b), x -> x[1]::DOUBLE * x[2]::DOUBLE)), (acc,v)->acc+v)"
-    def nrmSql(v: String) =
-      s"sqrt(list_reduce(list_prepend(0.0, list_transform($v, x -> x::DOUBLE * x::DOUBLE)), (a,b)->a+b))"
     // Band sizing by the density rule (operator scaladoc): 8 bands × 8 bits
     // → 256 buckets/band, so a 1250-vector cell at sf0.1 packs ~5 per
     // bucket — candidate volume stays linear-ish; 16×4 would pack ~78 and
     // pay C(78,2) per bucket (measured 6.9 s vs 1.9 s, identical gate).
     val k = 4; val iters = 1; val bands = 8; val rows = 8; val thr = 0.4
     val assigns = (0 to iters).map { i =>
-      s"""a$i AS (SELECT e.vec_id, c.cid, ${cosSql("e.embedding", "c.vec")} / (e.nrm * c.cnrm) AS cs
+      s"""a$i AS (SELECT e.vec_id, c.cid, ${dotSql("e.embedding", "c.vec")} / (e.nrm * c.cnrm) AS cs
          |  FROM emb e, cents$i c),
          |r$i AS (SELECT vec_id, cid FROM (SELECT vec_id, cid,
          |  row_number() OVER (PARTITION BY vec_id ORDER BY cs DESC, cid) rn FROM a$i) WHERE rn = 1)""".stripMargin
@@ -3419,9 +3387,6 @@ object QueriesExt {
         .mkString(" + ")
       s"SELECT vec_id, cid, $b AS band, ($bucket)::BIGINT AS bucket FROM cells"
     }.mkString(" UNION ALL ")
-    val cos = (a: String, b: String) =>
-      s"list_reduce(list_prepend(0.0, list_transform(list_zip($a.embedding,$b.embedding)," +
-        s" x -> x[1]::DOUBLE * x[2]::DOUBLE)), (acc,v)->acc+v)/($a.nrm*$b.nrm)"
     "x_dedup_semantic" -> ((
       (s: SparkSession, dir: String) =>
         Dedup.semanticDedup(emb(s, dir), "vec_id", "embedding",
@@ -3441,7 +3406,7 @@ object QueriesExt {
          |  JOIN q ON q.cid=a.cid AND q.band=a.band AND q.bucket=a.bucket),
          |pairs AS (SELECT id_a, id_b
          |  FROM cand JOIN cells na ON na.vec_id = id_a JOIN cells nb ON nb.vec_id = id_b
-         |  WHERE ${cos("na", "nb")} > $thr),
+         |  WHERE ${pairCosSql("na", "nb")} > $thr),
          |edges AS (SELECT id_a AS u, id_b AS v FROM pairs UNION SELECT id_b, id_a FROM pairs),
          |reach(id, r) AS (SELECT u AS id, u AS r FROM (SELECT DISTINCT u FROM edges) t
          |  UNION SELECT e.v, reach.r FROM reach JOIN edges e ON e.u = reach.id),
@@ -3577,33 +3542,28 @@ object QueriesExt {
     * their offending line (pinned by sha) with null fields.
     */
   private lazy val jsonlIngest: Q = "x_jsonl_ingest" -> ((
-    (s: SparkSession, dir: String) => {
-      val tmpPath = scratchDir("jsonl")
-      val tmp = tmpPath.toString
-      try {
-        docs(s, dir).select(
-            when(col("doc_id") % 11 === 0,
-              concat(lit("{broken "), substring(col("text"), 1, 10)))
-              .otherwise(to_json(struct(col("doc_id"), col("source"), col("text"))))
-              .as("value"))
-          .repartition(4)
-          .write.text(s"$tmp/in")
-        val schema = org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("doc_id",
-            org.apache.spark.sql.types.LongType),
-          org.apache.spark.sql.types.StructField("source",
-            org.apache.spark.sql.types.StringType),
-          org.apache.spark.sql.types.StructField("text",
-            org.apache.spark.sql.types.StringType)))
-        val r = graft.sources.JsonlSource.read(s, s"$tmp/in", schema)
-        r.select(col("doc_id"), col("source"),
-            length(col("text")).as("n_text_chars"),
-            when(col(graft.sources.JsonlSource.corruptField).isNotNull,
-              sha2(col(graft.sources.JsonlSource.corruptField).cast("binary"), 256))
-              .as("corrupt_sha"),
-            col(graft.sources.JsonlSource.corruptField).isNotNull.as("is_corrupt"))
-          .localCheckpoint(true)
-      } finally rmTree(tmpPath.toFile)
+    (s: SparkSession, dir: String) => scratchTree("jsonl") { tmp =>
+      docs(s, dir).select(
+          when(col("doc_id") % 11 === 0,
+            concat(lit("{broken "), substring(col("text"), 1, 10)))
+            .otherwise(to_json(struct(col("doc_id"), col("source"), col("text"))))
+            .as("value"))
+        .repartition(4)
+        .write.text(s"$tmp/in")
+      val schema = org.apache.spark.sql.types.StructType(Seq(
+        org.apache.spark.sql.types.StructField("doc_id",
+          org.apache.spark.sql.types.LongType),
+        org.apache.spark.sql.types.StructField("source",
+          org.apache.spark.sql.types.StringType),
+        org.apache.spark.sql.types.StructField("text",
+          org.apache.spark.sql.types.StringType)))
+      val r = graft.sources.JsonlSource.read(s, s"$tmp/in", schema)
+      r.select(col("doc_id"), col("source"),
+          length(col("text")).as("n_text_chars"),
+          when(col(graft.sources.JsonlSource.corruptField).isNotNull,
+            sha2(col(graft.sources.JsonlSource.corruptField).cast("binary"), 256))
+            .as("corrupt_sha"),
+          col(graft.sources.JsonlSource.corruptField).isNotNull.as("is_corrupt"))
     },
     """SELECT CASE WHEN doc_id % 11 = 0 THEN NULL ELSE doc_id END AS doc_id,
       |  CASE WHEN doc_id % 11 = 0 THEN NULL ELSE source END AS source,
@@ -4069,29 +4029,21 @@ object QueriesExt {
           (col("_us") >= recentUs && col("_us") < cutUs && col("event_id") % 3 === 1))
       val outCols = Seq(col("ts"), col("event_type"))
       val topicSchema = ev.select(outCols: _*).schema
-      val tmpPath = scratchDir("stslide")
-      val tmp = tmpPath.toString
-      try {
+      scratchTree("stslide") { tmp =>
         stageLateTopic(lab, outCols, recentUs, cutUs,
           Seq((new java.sql.Timestamp(mxUs / 1000L + 4 * 3600 * 1000L), "___wm"))
             .toDF("ts", "event_type"), tmp)
-        val q = s.readStream.schema(topicSchema)
+        runToEnd(tmp)(s.readStream.schema(topicSchema)
           .option("maxFilesPerTrigger", "1").parquet(s"$tmp/topic")
           .withWatermark("ts", "10 minutes")
           .groupBy(window(col("ts"), "2 hours", "1 hour").as("w"), col("event_type"))
           .agg(count(lit(1)).as("n"))
           .select(date_format(col("w.start"), "yyyy-MM-dd HH:mm:ss").as("window_start"),
             col("event_type"), col("n"))
-          .writeStream
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .outputMode("append")
-          .format("parquet").option("path", s"$tmp/out")
-          .option("checkpointLocation", s"$tmp/ckpt")
-          .start()
-        q.awaitTermination()
+          .writeStream.outputMode("append")
+          .format("parquet").option("path", s"$tmp/out"))
         s.read.parquet(s"$tmp/out").where(col("event_type") =!= "___wm")
-          .localCheckpoint(true)
-      } finally rmTree(tmpPath.toFile)
+      }
     },
     """WITH b AS (SELECT epoch_us(min(ts)) mn, epoch_us(max(ts)) mx FROM events),
       |cut AS (SELECT mn + (mx - mn) * 6 // 10 AS cutus,
@@ -4165,9 +4117,7 @@ object QueriesExt {
           (col("_us") >= recentUs && col("_us") < cutUs && col("event_id") % 3 === 1))
       val outCols = Seq(col("ts"), col("event_type"), col("value"))
       val topicSchema = ev.select(outCols: _*).schema
-      val tmpPath = scratchDir("stlate")
-      val tmp = tmpPath.toString
-      try {
+      scratchTree("stlate") { tmp =>
         // Five sequential single-file batches (shared [[stageLateTopic]]
         // layout). FileStreamSource orders by modification time (ms
         // precision); each write is a full Spark job (>100 ms wall), so
@@ -4175,7 +4125,7 @@ object QueriesExt {
         stageLateTopic(lab, outCols, recentUs, cutUs,
           Seq((new java.sql.Timestamp(mxUs / 1000L + 2 * 3600 * 1000L), "___wm", 0.0))
             .toDF("ts", "event_type", "value"), tmp)
-        val q = s.readStream.schema(topicSchema)
+        runToEnd(tmp)(s.readStream.schema(topicSchema)
           .option("maxFilesPerTrigger", "1").parquet(s"$tmp/topic")
           .withWatermark("ts", "10 minutes")
           .groupBy(window(col("ts"), "1 hour").as("w"), col("event_type"))
@@ -4183,16 +4133,10 @@ object QueriesExt {
             sum(col("value").cast("decimal(18,2)")).cast("double").as("sum_value"))
           .select(date_format(col("w.start"), "yyyy-MM-dd HH:mm:ss").as("window_start"),
             col("event_type"), col("n"), col("sum_value"))
-          .writeStream
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .outputMode("append")
-          .format("parquet").option("path", s"$tmp/out")
-          .option("checkpointLocation", s"$tmp/ckpt")
-          .start()
-        q.awaitTermination()
+          .writeStream.outputMode("append")
+          .format("parquet").option("path", s"$tmp/out"))
         s.read.parquet(s"$tmp/out").where(col("event_type") =!= "___wm")
-          .localCheckpoint(true)
-      } finally rmTree(tmpPath.toFile)
+      }
     },
     """WITH b AS (SELECT epoch_us(min(ts)) mn, epoch_us(max(ts)) mx FROM events),
       |cut AS (SELECT mn + (mx - mn) * 6 // 10 AS cutus,
@@ -5341,39 +5285,22 @@ object QueriesExt {
       // checkpointed frame.
       val duels = btDuels(s, dir)
         .select("winner", "loser", "event_id").localCheckpoint(true)
-      val tmpPath = scratchDir("stbt")
-      val tmp = tmpPath.toString
-      try {
+      scratchTree("stbt") { tmp =>
         (0L until 4L).foreach { b =>
           duels.where(pmod(col("event_id"), lit(4L)) === b)
             .select("winner", "loser")
             .repartition(1).write.mode("append").parquet(s"$tmp/topic")
         }
-        val schema = duels.select("winner", "loser").schema
-        // seed the state dir so the accumulated read never hits missing-path
-        duels.select("winner", "loser").limit(0)
-          .groupBy("winner", "loser").agg(count(lit(1)).as("n"))
-          .withColumn("batch_id", lit(-1L))
-          .write.partitionBy("batch_id").parquet(s"$tmp/state")
-        val q = s.readStream.schema(schema)
+        val stream = s.readStream.schema(duels.select("winner", "loser").schema)
           .option("maxFilesPerTrigger", "1").parquet(s"$tmp/topic")
-          .writeStream
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .option("checkpointLocation", s"$tmp/ckpt")
-          .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], bid: Long) =>
-            batch.toDF().groupBy("winner", "loser").agg(count(lit(1)).as("n"))
-              .write.mode("overwrite").parquet(s"$tmp/state/batch_id=$bid")
-          }
-          .start()
-        q.awaitTermination()
-        val accumulated = s.read.parquet(s"$tmp/state").drop("batch_id")
+        val accumulated = foldBatches(tmp, stream)(
+            _.groupBy("winner", "loser").agg(count(lit(1)).as("n")))
           .groupBy("winner", "loser").agg(sum("n").as("n"))
         operators.Preference.bradleyTerryFromCounts(accumulated,
             "winner", "loser", "n", iters = 8, lambda = 0.5)
           .select(col("id").as("event_type"),
             round(col("strength"), 6).as("strength"), col("wins"), col("games"))
-          .localCheckpoint(true)
-      } finally rmTree(tmpPath.toFile)
+      }
     },
     prefBradleyTerry._2._2))
 
@@ -5387,32 +5314,28 @@ object QueriesExt {
     * revenue (shuffle-order-immune, the q1 pattern).
     */
   private lazy val joinBucketed: Q = "x_join_bucketed" -> ((
-    (s: SparkSession, dir: String) => {
-      val tmpPath = scratchDir("bkt")
-      val tmp = tmpPath.toString
-      try {
-        val l = s.read.parquet(s"$dir/lineitem.parquet")
-          .select("l_orderkey", "l_extendedprice", "l_discount")
-        val o = s.read.parquet(s"$dir/orders.parquet")
-          .select(col("o_orderkey").as("l_orderkey"), col("o_orderstatus"))
-        operators.Bucketing.writeBucketed(l, "graft_bkt_lineitem", s"$tmp/l",
-          Seq("l_orderkey"), numBuckets = 8)
-        operators.Bucketing.writeBucketed(o, "graft_bkt_orders", s"$tmp/o",
-          Seq("l_orderkey"), numBuckets = 8)
-        val j = operators.Bucketing.colocatedJoin(s,
-          "graft_bkt_lineitem", "graft_bkt_orders", Seq("l_orderkey"))
-        val price = col("l_extendedprice").cast("decimal(18,2)")
-        val disc = col("l_discount").cast("decimal(18,2)")
-        j.groupBy("o_orderstatus")
-          .agg(
-            sum(price * (lit(1).cast("decimal(18,2)") - disc)).cast("double").as("revenue"),
-            count(lit(1)).as("n_items"))
-          .localCheckpoint(true)
-      } finally {
-        s.sql("DROP TABLE IF EXISTS graft_bkt_lineitem")
-        s.sql("DROP TABLE IF EXISTS graft_bkt_orders")
-        rmTree(tmpPath.toFile)
-      }
+    // The catalog entries go after the scratch tree: the result is
+    // materialized before either is dropped.
+    (s: SparkSession, dir: String) => try scratchTree("bkt") { tmp =>
+      val l = s.read.parquet(s"$dir/lineitem.parquet")
+        .select("l_orderkey", "l_extendedprice", "l_discount")
+      val o = s.read.parquet(s"$dir/orders.parquet")
+        .select(col("o_orderkey").as("l_orderkey"), col("o_orderstatus"))
+      operators.Bucketing.writeBucketed(l, "graft_bkt_lineitem", s"$tmp/l",
+        Seq("l_orderkey"), numBuckets = 8)
+      operators.Bucketing.writeBucketed(o, "graft_bkt_orders", s"$tmp/o",
+        Seq("l_orderkey"), numBuckets = 8)
+      val j = operators.Bucketing.colocatedJoin(s,
+        "graft_bkt_lineitem", "graft_bkt_orders", Seq("l_orderkey"))
+      val price = col("l_extendedprice").cast("decimal(18,2)")
+      val disc = col("l_discount").cast("decimal(18,2)")
+      j.groupBy("o_orderstatus")
+        .agg(
+          sum(price * (lit(1).cast("decimal(18,2)") - disc)).cast("double").as("revenue"),
+          count(lit(1)).as("n_items"))
+    } finally {
+      s.sql("DROP TABLE IF EXISTS graft_bkt_lineitem")
+      s.sql("DROP TABLE IF EXISTS graft_bkt_orders")
     },
     """SELECT o_orderstatus,
       |  CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2)) *
@@ -5432,27 +5355,22 @@ object QueriesExt {
     * kills the fact SCAN.
     */
   private lazy val joinDpp: Q = "x_join_dpp" -> ((
-    (s: SparkSession, dir: String) => {
-      val tmpPath = scratchDir("dpp")
-      val tmp = tmpPath.toString
-      try {
-        s.read.parquet(s"$dir/events.parquet").where(col("value").isNotNull)
-          .write.partitionBy("event_type").parquet(s"$tmp/fact")
-        val fact = s.read.parquet(s"$tmp/fact")
-        import s.implicits._
-        // The dim must be a FILE scan for DPP to key on its filter — an
-        // in-memory Seq gets constant-folded (ConvertToLocalRelation) and
-        // leaves no selective predicate (pinned in ParquetLayoutSpec).
-        Seq(("click", 3.0), ("purchase", 2.5), ("view", 0.5),
-          ("error", 0.1), ("signup", 1.0)).toDF("event_type", "weight")
-          .write.parquet(s"$tmp/dim")
-        val dim = s.read.parquet(s"$tmp/dim").where(col("weight") >= 2.0)
-        fact.join(broadcast(dim), Seq("event_type"))
-          .groupBy("event_type")
-          .agg(count(lit(1)).as("n"),
-            sum(col("value").cast("decimal(18,2)")).cast("double").as("sum_value"))
-          .localCheckpoint(true)
-      } finally rmTree(tmpPath.toFile)
+    (s: SparkSession, dir: String) => scratchTree("dpp") { tmp =>
+      s.read.parquet(s"$dir/events.parquet").where(col("value").isNotNull)
+        .write.partitionBy("event_type").parquet(s"$tmp/fact")
+      val fact = s.read.parquet(s"$tmp/fact")
+      import s.implicits._
+      // The dim must be a FILE scan for DPP to key on its filter — an
+      // in-memory Seq gets constant-folded (ConvertToLocalRelation) and
+      // leaves no selective predicate (pinned in ParquetLayoutSpec).
+      Seq(("click", 3.0), ("purchase", 2.5), ("view", 0.5),
+        ("error", 0.1), ("signup", 1.0)).toDF("event_type", "weight")
+        .write.parquet(s"$tmp/dim")
+      val dim = s.read.parquet(s"$tmp/dim").where(col("weight") >= 2.0)
+      fact.join(broadcast(dim), Seq("event_type"))
+        .groupBy("event_type")
+        .agg(count(lit(1)).as("n"),
+          sum(col("value").cast("decimal(18,2)")).cast("double").as("sum_value"))
     },
     """SELECT event_type, count(*)::BIGINT AS n,
       |  CAST(sum(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS sum_value
@@ -5489,35 +5407,21 @@ object QueriesExt {
   private lazy val stCorpusDigest: Q = "st_corpus_digest" -> ((
     (s: SparkSession, dir: String) => withStatePartitions(s, 8) {
       val d = docs(s, dir).select("doc_id", "source", "text")
-      val tmpPath = scratchDir("stdig")
-      val tmp = tmpPath.toString
-      try {
+      scratchTree("stdig") { tmp =>
         (0L until 4L).foreach { b =>
           d.where(pmod(col("doc_id"), lit(4L)) === b)
             .repartition(1).write.mode("append").parquet(s"$tmp/topic")
         }
-        graft.operators.CorpusStats.corpusDigest(d.limit(0), Seq("source"), "text")
-          .withColumn("batch_id", lit(-1L))
-          .write.partitionBy("batch_id").parquet(s"$tmp/state")
-        val q = s.readStream.schema(d.schema)
+        val stream = s.readStream.schema(d.schema)
           .option("maxFilesPerTrigger", "1").parquet(s"$tmp/topic")
-          .writeStream
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .option("checkpointLocation", s"$tmp/ckpt")
-          .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], bid: Long) =>
-            graft.operators.CorpusStats.corpusDigest(batch.toDF(), Seq("source"), "text")
-              .write.mode("overwrite").parquet(s"$tmp/state/batch_id=$bid")
-          }
-          .start()
-        q.awaitTermination()
-        s.read.parquet(s"$tmp/state").drop("batch_id")
+        foldBatches(tmp, stream)(
+            graft.operators.CorpusStats.corpusDigest(_, Seq("source"), "text"))
           .groupBy("source").agg(
             sum("n_docs").as("n_docs"),
             bit_xor(col("digest_xor")).as("digest_xor"),
             (sum(col("digest_sum").cast("decimal(28,0)")) % lit(2305843009213693951L))
               .cast("long").as("digest_sum"))
-          .localCheckpoint(true)
-      } finally rmTree(tmpPath.toFile)
+      }
     },
     corpusDigestGate._2._2))
 
@@ -5744,35 +5648,21 @@ object QueriesExt {
     (s: SparkSession, dir: String) => withStatePartitions(s, 8) {
       val ev = s.read.parquet(s"$dir/events.parquet").where(col("value").isNotNull)
         .select("event_id", "user_id", "value")
-      val tmpPath = scratchDir("strladv")
-      val tmp = tmpPath.toString
-      try {
+      scratchTree("strladv") { tmp =>
         (0L until 4L).foreach { b =>
           ev.where(pmod(col("event_id"), lit(4L)) === b)
             .repartition(1).write.mode("append").parquet(s"$tmp/topic")
         }
-        operators.RlOps.rewardMoments(ev.limit(0), Seq("user_id"), "value")
-          .withColumn("batch_id", lit(-1L))
-          .write.partitionBy("batch_id").parquet(s"$tmp/state")
-        val q = s.readStream.schema(ev.schema)
+        val stream = s.readStream.schema(ev.schema)
           .option("maxFilesPerTrigger", "1").parquet(s"$tmp/topic")
-          .writeStream
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .option("checkpointLocation", s"$tmp/ckpt")
-          .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], bid: Long) =>
-            operators.RlOps.rewardMoments(batch.toDF(), Seq("user_id"), "value")
-              .write.mode("overwrite").parquet(s"$tmp/state/batch_id=$bid")
-          }
-          .start()
-        q.awaitTermination()
-        val moments = s.read.parquet(s"$tmp/state").drop("batch_id")
+        val moments = foldBatches(tmp, stream)(
+            operators.RlOps.rewardMoments(_, Seq("user_id"), "value"))
           .groupBy("user_id").agg(
             sum("m_n").as("m_n"), sum("m_sum").as("m_sum"), sum("m_sumsq").as("m_sumsq"))
         operators.RlOps.advantageFromMoments(ev, moments, Seq("user_id"), "value")
           .select(col("event_id"), col("user_id"),
             round(col("advantage"), 6).as("advantage"), col("n_samples"))
-          .localCheckpoint(true)
-      } finally rmTree(tmpPath.toFile)
+      }
     },
     """SELECT event_id, user_id,
       |  round(CASE WHEN s IS NULL OR s = 0 THEN 0.0 ELSE (value - m) / s END, 6) AS advantage,
@@ -6036,18 +5926,14 @@ object QueriesExt {
   private lazy val stDqChecks: Q = "st_dq_checks" -> ((
     (s: SparkSession, dir: String) => withStatePartitions(s, 8) {
       import graft.operators.Quality, Quality.DqCheck._
-      val tmpPath = scratchDir("stdq")
-      val tmp = tmpPath.toString
-      try {
+      scratchTree("stdq") { tmp =>
         val ev = sources.EventsTable.load(s, dir)
           .select(col("event_id"), col("user_id"), col("event_type"), col("value"))
         ev.write.parquet(s"$tmp/topic")
         val totals = scala.collection.mutable.Map.empty[String, Long]
-        val q = s.readStream.schema(ev.schema).parquet(s"$tmp/topic")
+        runToEnd(tmp)(s.readStream.schema(ev.schema).parquet(s"$tmp/topic")
           .writeStream
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .option("checkpointLocation", s"$tmp/ckpt")
-          .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
+          .foreachBatch { (batch: DataFrame, _: Long) =>
             Quality.evaluate(batch, Seq(
               NotNull("user_id"),
               InRange("value", 0.0, 15.0),
@@ -6055,13 +5941,10 @@ object QueriesExt {
               .collect().foreach { r =>
                 totals.updateWith(r.getString(0))(v => Some(v.getOrElse(0L) + r.getLong(1)))
               }
-          }
-          .start()
-        q.awaitTermination()
+          })
         import s.implicits._
-        // driver-local result — the temp topic/checkpoint can go right away
         totals.toSeq.toDF("check_name", "violations")
-      } finally rmTree(tmpPath.toFile)
+      }
     },
     """SELECT 'not_null:user_id' AS check_name,
       |       count(*) FILTER (WHERE user_id IS NULL) AS violations FROM events
@@ -6317,15 +6200,13 @@ object QueriesExt {
       val ranked = graft.operators.Quality.rankBlend(
         docs(s, dir).select(col("doc_id"), col("source"), col("n_chars")),
         "source", "doc_id", signals = Seq(col("n_chars")))
-      val tmpPath = scratchDir("cur")
-      try {
+      scratchTree("cur") { tmp =>
         graft.sinks.ParquetLayout.writePartitioned(
           ranked.select("doc_id", "source", "n_chars", "decile"),
-          s"$tmpPath/cur", partitionCols = Seq("decile"), sortCols = Seq("n_chars"))
-        s.read.parquet(s"$tmpPath/cur").where(col("decile") <= 2)
+          s"$tmp/cur", partitionCols = Seq("decile"), sortCols = Seq("n_chars"))
+        s.read.parquet(s"$tmp/cur").where(col("decile") <= 2)
           .select(col("doc_id"), col("source"), col("decile").cast("int").as("decile"))
-          .localCheckpoint(true)
-      } finally rmTree(tmpPath.toFile)
+      }
     },
     """WITH r AS (SELECT doc_id, source,
       |  round(percent_rank() OVER (PARTITION BY source ORDER BY n_chars, doc_id), 6) AS blend
@@ -6591,9 +6472,7 @@ object QueriesExt {
     */
   private lazy val stSketchQuantile: Q = "st_sketch_quantile" -> ((
     (s: SparkSession, dir: String) => withStatePartitions(s, 8) {
-      val tmpPath = scratchDir("stqnt")
-      val tmp = tmpPath.toString
-      try {
+      scratchTree("stqnt") { tmp =>
         val li = s.read.parquet(s"$dir/lineitem.parquet")
           .select("l_returnflag", "l_orderkey", "l_linenumber", "l_extendedprice")
         // Stage the 4 micro-batch files WITHOUT a full-table exchange
@@ -6605,27 +6484,14 @@ object QueriesExt {
           li.where(pmod(col("l_orderkey"), lit(4)) === i).coalesce(1)
             .write.mode("append").parquet(s"$tmp/topic")
         }
-        def sampleOf(df: DataFrame) = graft.operators.Sketches.quantileSampleRows(
-          df, Seq("l_returnflag"),
-          concat_ws("_", col("l_orderkey"), col("l_linenumber")),
-          col("l_extendedprice"), k = 512)
-        // seed the state dir so the accumulated read never hits missing-path
-        sampleOf(li.limit(0)).withColumn("batch_id", lit(-1L))
-          .write.partitionBy("batch_id").parquet(s"$tmp/state")
-        val q = s.readStream.schema(li.schema)
+        val stream = s.readStream.schema(li.schema)
           .option("maxFilesPerTrigger", "1").parquet(s"$tmp/topic")
-          .writeStream
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .option("checkpointLocation", s"$tmp/ckpt")
-          .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], bid: Long) =>
-            sampleOf(batch.toDF())
-              .write.mode("overwrite").parquet(s"$tmp/state/batch_id=$bid")
-          }
-          .start()
-        q.awaitTermination()
         val merged = graft.operators.Sketches.quantileSampleMerge(
           Seq("l_returnflag"), 512,
-          s.read.parquet(s"$tmp/state").drop("batch_id"))
+          foldBatches(tmp, stream)(graft.operators.Sketches.quantileSampleRows(
+            _, Seq("l_returnflag"),
+            concat_ws("_", col("l_orderkey"), col("l_linenumber")),
+            col("l_extendedprice"), k = 512)))
         val sq = merged.groupBy("l_returnflag")
           .agg(expr("percentile(v, 0.5)").as("_sp50"))
         val ex = exactPriceBand(li.select("l_returnflag", "l_extendedprice"))
@@ -6633,8 +6499,7 @@ object QueriesExt {
           .select(col("l_returnflag"), round(col("_p50"), 6).as("exact_p50"),
             round(col("_sp50"), 6).as("sample_p50"),
             (col("_sp50") >= col("_lo") && col("_sp50") <= col("_hi")).as("in_band"))
-          .localCheckpoint(true)
-      } finally rmTree(tmpPath.toFile)
+      }
     },
     sketchQuantileSample._2._2))
 
@@ -6650,9 +6515,7 @@ object QueriesExt {
     */
   private lazy val stSketchHll: Q = "st_sketch_hll" -> ((
     (s: SparkSession, dir: String) => withStatePartitions(s, 8) {
-      val tmpPath = scratchDir("sthll")
-      val tmp = tmpPath.toString
-      try {
+      scratchTree("sthll") { tmp =>
         val li = s.read.parquet(s"$dir/lineitem.parquet")
           .select("l_returnflag", "l_orderkey")
         // Shuffle-free 4-file staging — same rationale as st_sketch_quantile.
@@ -6660,28 +6523,14 @@ object QueriesExt {
           li.where(pmod(col("l_orderkey"), lit(4)) === i).coalesce(1)
             .write.mode("append").parquet(s"$tmp/topic")
         }
-        // seed the state dir so per-batch reads never hit missing-path
-        graft.operators.Sketches.hllRegisters(
-            li.limit(0), Seq("l_returnflag"), col("l_orderkey"), p = 8)
-          .withColumn("batch_id", lit(-1L))
-          .write.partitionBy("batch_id").parquet(s"$tmp/state")
-        val q = s.readStream.schema(li.schema)
+        val stream = s.readStream.schema(li.schema)
           .option("maxFilesPerTrigger", "1").parquet(s"$tmp/topic")
-          .writeStream
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .option("checkpointLocation", s"$tmp/ckpt")
-          .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], bid: Long) =>
-            graft.operators.Sketches.hllRegisters(
-                batch.toDF(), Seq("l_returnflag"), col("l_orderkey"), p = 8)
-              .write.mode("overwrite").parquet(s"$tmp/state/batch_id=$bid")
-          }
-          .start()
-        q.awaitTermination()
         graft.operators.Sketches.hllEstimate(
-          s.read.parquet(s"$tmp/state").drop("batch_id")
+          foldBatches(tmp, stream)(graft.operators.Sketches.hllRegisters(
+              _, Seq("l_returnflag"), col("l_orderkey"), p = 8))
             .groupBy(col("l_returnflag"), col("reg")).agg(max("max_rho").as("max_rho")),
-          Seq("l_returnflag"), p = 8).localCheckpoint(true)
-      } finally rmTree(tmpPath.toFile)
+          Seq("l_returnflag"), p = 8)
+      }
     },
     sketchHll._2._2))
 

@@ -247,35 +247,30 @@ object QueriesParity {
     */
   private val s2SubscribeSink: Q = "s2_subscribe_sink" -> ((
     (s: SparkSession, dir: String) => QueriesExt.withStatePartitions(s, 8) {
-      val tmpPath = QueriesExt.scratchDir("s2")
-      val tmp = tmpPath.toString
-      try {
-      MessageSource.fromEvents(s, dir).write.parquet(s"$tmp/topic")
-      val cfg = PipelineConfig(
-        source = SourceConfig(topic = "events"),
-        target = TargetConfig(table = s"$tmp/sink",
-          skipDuplicatesWith = Seq("kafka_partition", "kafka_offset", "kafka_topic")),
-        transform = Seq(
-          TransformRule("kafka_key", "kafka_key"),
-          TransformRule("kafka_offset", "kafka_offset"),
-          TransformRule("kafka_partition", "kafka_partition"),
-          TransformRule("kafka_topic", "kafka_topic"),
-          TransformRule("kafka_hash", "kafka_hash"),
-          TransformRule("kafka_message", "kafka_message"),
-          TransformRule("k", "k"))).validated
-      val pipe = new Pipeline(cfg, propsSchema,
-        batchTime = Timestamp.valueOf("2024-06-01 12:00:00"))
-      val sink = new graft.sinks.ParquetSink(s"$tmp/sink")
-      val runner = new graft.streaming.StreamRunner(pipe, sink, s"$tmp/ckpt")
-      val stream = s.readStream.schema(MessageSource.schema).parquet(s"$tmp/topic")
-      runner.runAvailableNow(s, stream)
-      // Materialize so the scratch tree (topic, checkpoint, sink) can be
-      // deleted before the gate returns its result.
-      s.read.parquet(s"$tmp/sink")
-        .select("kafka_key", "kafka_offset", "kafka_partition", "kafka_topic",
-          "kafka_hash", "kafka_message", "k")
-        .localCheckpoint(true)
-      } finally QueriesExt.rmTree(tmpPath.toFile)
+      QueriesExt.scratchTree("s2") { tmp =>
+        MessageSource.fromEvents(s, dir).write.parquet(s"$tmp/topic")
+        val cfg = PipelineConfig(
+          source = SourceConfig(topic = "events"),
+          target = TargetConfig(table = s"$tmp/sink",
+            skipDuplicatesWith = Seq("kafka_partition", "kafka_offset", "kafka_topic")),
+          transform = Seq(
+            TransformRule("kafka_key", "kafka_key"),
+            TransformRule("kafka_offset", "kafka_offset"),
+            TransformRule("kafka_partition", "kafka_partition"),
+            TransformRule("kafka_topic", "kafka_topic"),
+            TransformRule("kafka_hash", "kafka_hash"),
+            TransformRule("kafka_message", "kafka_message"),
+            TransformRule("k", "k"))).validated
+        val pipe = new Pipeline(cfg, propsSchema,
+          batchTime = Timestamp.valueOf("2024-06-01 12:00:00"))
+        val sink = new graft.sinks.ParquetSink(s"$tmp/sink")
+        val runner = new graft.streaming.StreamRunner(pipe, sink, s"$tmp/ckpt")
+        val stream = s.readStream.schema(MessageSource.schema).parquet(s"$tmp/topic")
+        runner.runAvailableNow(s, stream)
+        s.read.parquet(s"$tmp/sink")
+          .select("kafka_key", "kafka_offset", "kafka_partition", "kafka_topic",
+            "kafka_hash", "kafka_message", "k")
+      }
     },
     """SELECT user_id::VARCHAR AS kafka_key,
       |  event_id AS kafka_offset,

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.config.K6FilterConfig
@@ -333,8 +333,4 @@ object Joins {
         factB(factTime) >= dimB(lo) && factB(factTime) < dimB(hi))(_ && _)
     factB.join(dimB, cond).drop("_b")
   }
-
-  /** Key equality helper for tests: the join condition `dedupAgainst` uses. */
-  def keyCond(l: DataFrame, r: DataFrame, keys: Seq[String]): Column =
-    keys.map(k => l(k) <=> r(k)).reduce(_ && _)
 }

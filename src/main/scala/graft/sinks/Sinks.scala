@@ -301,10 +301,6 @@ object JdbcSink {
     }
   }
 
-  /** True iff the exception chain denotes a missing table/view, by SQLState
-    * (ANSI/MySQL 42S02, Postgres 42P01, Derby 42X05), vendor code (Oracle
-    * ORA-00942) or, for wrapped analysis errors, message text.
-    */
   /** Duplicate-index detection for the idempotent ensure-index call: Derby
     * X0Y32 ("already exists"), standard 42S11/42S01 variants, Oracle
     * ORA-00955 ("name is already used by an existing object").
@@ -319,6 +315,10 @@ object JdbcSink {
     }
   }
 
+  /** True iff the exception chain denotes a missing table/view, by SQLState
+    * (ANSI/MySQL 42S02, Postgres 42P01, Derby 42X05), vendor code (Oracle
+    * ORA-00942) or, for wrapped analysis errors, message text.
+    */
   private[sinks] def isMissingTable(e: Throwable): Boolean = {
     val chain = Iterator.iterate(e)(_.getCause).takeWhile(_ != null).take(16).toSeq
     chain.exists {
@@ -337,10 +337,15 @@ object JdbcSink {
   */
 final class ParquetSink(path: String) extends GraftSink {
   override def write(df: DataFrame): Unit = df.write.mode("append").parquet(path)
-  override def existing(spark: SparkSession, cols: Seq[String]): Option[DataFrame] =
-    if (new java.io.File(path).exists())
+  /** Resolved through the Hadoop FS API, so a `file://`, `hdfs://` or
+    * `s3a://` target is found like a plain local path.
+    */
+  override def existing(spark: SparkSession, cols: Seq[String]): Option[DataFrame] = {
+    val p = new org.apache.hadoop.fs.Path(path)
+    if (p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p))
       Some(spark.read.parquet(path).select(cols.map(col): _*))
     else None
+  }
 }
 
 /** S10: console sink (`/root/reference/src/console_target.py:10-15`). */

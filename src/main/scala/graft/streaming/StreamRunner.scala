@@ -1,5 +1,8 @@
 package graft.streaming
 
+import java.nio.charset.StandardCharsets.UTF_8
+
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.streaming.Trigger
 
@@ -51,26 +54,43 @@ final class StreamRunner(pipeline: Pipeline, sink: GraftSink, checkpointDir: Str
     * write re-reports those batches once in the NEXT run's xcom
     * (at-least-once reporting).
     */
-  private def summaryDir = java.nio.file.Paths.get(checkpointDir, "graft-summary")
-  private def markerFile = summaryDir.resolve("reported-through")
+  private val summaryDir = new Path(checkpointDir, "graft-summary")
+  private val markerFile = new Path(summaryDir, "reported-through")
+  // The checkpoint's own file system (local, HDFS, S3A, ...), like Spark's
+  // offset and commit logs; resolved from the session the run is on.
+  private lazy val fs: FileSystem =
+    summaryDir.getFileSystem(SparkSession.active.sparkContext.hadoopConfiguration)
+
+  private def readText(p: Path): String = {
+    val in = fs.open(p)
+    try new String(in.readAllBytes(), UTF_8).trim finally in.close()
+  }
+
+  private def writeText(p: Path, text: String): Unit = {
+    val out = fs.create(p, true)
+    try out.write(text.getBytes(UTF_8)) finally out.close()
+  }
+
+  /** Ids of the `batch-<id>` records; other names (the marker, checksum
+    * siblings a local Hadoop FS writes) are skipped.
+    */
+  private def batchIds(): Seq[Long] =
+    if (!fs.exists(summaryDir)) Nil
+    else fs.listStatus(summaryDir).toSeq.map(_.getPath.getName).collect {
+      case StreamRunner.BatchRecord(id) => id.toLong
+    }
 
   /** Highest batch id already reported by a completed run; -1 if none. */
   private def readMarker(): Long =
-    if (java.nio.file.Files.exists(markerFile))
-      java.nio.file.Files.readString(markerFile).trim.toLong
-    else -1L
+    if (fs.exists(markerFile)) readText(markerFile).toLong else -1L
 
   @volatile private var reportFloor: Long = -1L
 
-  def summary: graft.ProcessSummary = {
-    val recs = Option(summaryDir.toFile.listFiles()).getOrElse(Array.empty)
-      .filter(_.getName.startsWith("batch-"))
-      .filter(_.getName.stripPrefix("batch-").toLong > reportFloor)
-      .map { f =>
-        val parts = java.nio.file.Files.readString(f.toPath).trim.split(",").map(_.toLong)
-        graft.ProcessSummary(parts(0), parts(1), parts(2), parts(3), parts(4))
-      }
-    recs.foldLeft(graft.ProcessSummary(0, 0, 0, 0, 0)) { (t, s) =>
+  def summary: graft.ProcessSummary =
+    batchIds().filter(_ > reportFloor).map { id =>
+      val parts = readText(new Path(summaryDir, s"batch-$id")).split(",").map(_.toLong)
+      graft.ProcessSummary(parts(0), parts(1), parts(2), parts(3), parts(4))
+    }.foldLeft(graft.ProcessSummary(0, 0, 0, 0, 0)) { (t, s) =>
       graft.ProcessSummary(
         t.eventCount + s.eventCount,
         t.emptyCount + s.emptyCount,
@@ -78,20 +98,19 @@ final class StreamRunner(pipeline: Pipeline, sink: GraftSink, checkpointDir: Str
         t.errorCount + s.errorCount,
         t.writtenToDbCount + s.writtenToDbCount)
     }
-  }
 
   /** Run the stream to the current end of the source and stop (AvailableNow).
     * `raw` must be a streaming DataFrame in the canonical message shape.
     */
   def runAvailableNow(spark: SparkSession, raw: DataFrame, k6Dim: Option[DataFrame] = None): Unit = {
-    java.nio.file.Files.createDirectories(summaryDir)
+    fs.mkdirs(summaryDir)
     reportFloor = readMarker()
     val query = raw.writeStream
       .trigger(Trigger.AvailableNow())
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         val s = pipeline.run(spark, batch, sink, k6Dim)
-        java.nio.file.Files.writeString(summaryDir.resolve(s"batch-$batchId"),
+        writeText(new Path(summaryDir, s"batch-$batchId"),
           s"${s.eventCount},${s.emptyCount},${s.nonEmptyCount},${s.errorCount},${s.writtenToDbCount}")
         ()
       }
@@ -99,10 +118,10 @@ final class StreamRunner(pipeline: Pipeline, sink: GraftSink, checkpointDir: Str
     query.awaitTermination()
     // Clean completion: everything on disk is now (or has been) reported —
     // advance the marker so the next scheduled run starts its own count.
-    val maxId = Option(summaryDir.toFile.listFiles()).getOrElse(Array.empty)
-      .filter(_.getName.startsWith("batch-"))
-      .map(_.getName.stripPrefix("batch-").toLong)
-      .foldLeft(reportFloor)(math.max)
-    java.nio.file.Files.writeString(markerFile, maxId.toString)
+    writeText(markerFile, batchIds().foldLeft(reportFloor)(math.max).toString)
   }
+}
+
+object StreamRunner {
+  private val BatchRecord = "batch-(\\d+)".r
 }

@@ -210,14 +210,6 @@ object Shim {
     }
   }
 
-  /** The optimized plan's estimated `sizeInBytes` — exposed so specs can
-    * assert [[localCheckpointFreshStats]] actually bounds the estimate
-    * across loop iterations (the plan surface is `private[sql]`).
-    */
-  def planSizeInBytes(df: org.apache.spark.sql.DataFrame): BigInt =
-    df.asInstanceOf[org.apache.spark.sql.classic.Dataset[_]]
-      .queryExecution.optimizedPlan.stats.sizeInBytes
-
   /** Register a named SQL function backed by a `Column => Column` composition
     * of built-in (codegen'd) expressions — unlike `spark.udf.register` this
     * adds no black-box UDF call: the function inlines into the caller's plan

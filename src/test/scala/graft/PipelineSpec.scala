@@ -62,6 +62,20 @@ class PipelineSpec extends SparkSpec {
     assert(s1.xcomJson.contains("\"event_count\":20"))
   }
 
+  test("a file:// sink is found on rerun: no duplicates, delta watermark read") {
+    val out = "file://" + Files.createTempDirectory("graft-uri").toString + "/sink"
+    val pipe = new Pipeline(cfg.copy(transform = cfg.transform :+
+      TransformRule("kafka_timestamp", "ts_no", fun = Some("int-unix-ms -> datetime-no"))),
+      StructType(Seq(StructField("k", LongType))),
+      batchTime = Timestamp.valueOf("2024-06-01 12:00:00"))
+    val sink = new ParquetSink(out)
+    assert(pipe.run(spark, mkRaw(20), sink).writtenToDbCount == 20)
+    assert(pipe.run(spark, mkRaw(20), sink).writtenToDbCount == 0)
+    assert(spark.read.parquet(out).count() == 20)
+    // last message: 1700000000019 ms = 2023-11-14 22:13:20.019 UTC -> Oslo +1
+    assert(sink.maxWatermark(spark, "ts_no").contains(Timestamp.valueOf("2023-11-14 23:13:20.019")))
+  }
+
   test("A2 summary facets ride the write job: exactly ONE source scan/job") {
     val out = Files.createTempDirectory("graft-onescan").toString + "/sink"
     // No dedup keys -> no sink read; the whole run must be the single write

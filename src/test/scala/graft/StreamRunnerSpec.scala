@@ -125,4 +125,30 @@ class StreamRunnerSpec extends SparkSpec {
     assert(next.summary.eventCount == 5, "scheduled run must not re-report prior runs")
     assert(spark.read.parquet(sinkDir).count() == 20)
   }
+
+  test("a file:// checkpoint keeps its run records under <checkpoint>/graft-summary") {
+    val base = Files.createTempDirectory("graft-stream-uri")
+    val srcDir = s"$base/topic"
+    val ckpt = s"file://$base/ckpt"
+    val pipe = new Pipeline(cfg, StructType(Seq(StructField("k", LongType))),
+      batchTime = Timestamp.valueOf("2024-06-01 12:00:00"))
+    val sink = new ParquetSink(s"$base/sink")
+    def stream = spark.readStream.schema(msgSchema).parquet(srcDir)
+    def records = Option(base.resolve("ckpt/graft-summary").toFile.list()).toSeq.flatten
+      .filter(_.matches("batch-\\d+")).sorted
+
+    writeMessages(srcDir, 0, 10)
+    val r1 = new StreamRunner(pipe, sink, ckpt)
+    r1.runAvailableNow(spark, stream)
+    assert(records == Seq("batch-0"))
+    assert(r1.summary.eventCount == 10)
+
+    writeMessages(srcDir, 10, 15)
+    val r2 = new StreamRunner(pipe, sink, ckpt)
+    r2.runAvailableNow(spark, stream)
+    assert(records == Seq("batch-0", "batch-1"))
+    assert(r2.summary.eventCount == 5, "a scheduled run reports only its own batches")
+    assert(r2.summary.writtenToDbCount == 5)
+    assert(spark.read.parquet(s"$base/sink").count() == 15)
+  }
 }

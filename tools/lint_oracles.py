@@ -1,48 +1,41 @@
 #!/usr/bin/env python3
 """Fast syntax/binding lint for every gate's DuckDB oracle SQL.
 
-Usage: lint_oracles.py <sfDir> [oracle_sql.json]
+Usage: lint_oracles.py <sfDir> <oracle_sql.json>
 
-Without the second arg, dumps a fresh oracle_sql.json in ~15s by running
-Verify with a match-nothing gate filter (Verify writes the FULL oracle map
-regardless of the filter):
+The oracle map comes from a two-argument Verify run, which writes every
+gate's oracle:
 
-    sbt -batch 'runMain graft.Verify <sfDir> /tmp/lint_oracles NOMATCH^'
+    sbt -batch 'runMain graft.Verify <sfDir> <outDir>'
+    python3 tools/lint_oracles.py <sfDir> <outDir>/oracle_sql.json
 
-Then EXPLAINs every oracle statement against the registered table views —
+A third Verify argument (a gate-name regex) filters the oracles written as
+well as the gates run, so a filtered dump lints only that family.
+
+EXPLAINs every oracle statement against the registered table views —
 catching typos, wrong column names, and DuckDB-dialect slips in seconds
-instead of discovering them minutes into a full Verify+compare cycle.
-EXPLAIN binds and plans but does not execute, so this lints cheaply even
-for expensive oracles.
+instead of discovering them minutes into a full compare cycle. EXPLAIN
+binds and plans but does not execute, so this lints cheaply even for
+expensive oracles. An empty map is an error, never a silent pass.
 
 Dev tool only (driver-side python); never shipped with the library.
 """
 import glob
 import json
 import os
-import subprocess
 import sys
 
 import duckdb
 
 
 def main() -> None:
-    sf_dir = sys.argv[1]
-    if len(sys.argv) > 2:
-        path = sys.argv[2]
-    else:
-        try:
-            subprocess.run(
-                ["sbt", "-batch", "runMain graft.Verify " + sf_dir + " /tmp/lint_oracles NOMATCH^"],
-                check=True, capture_output=True, text=True)
-        except subprocess.CalledProcessError as e:
-            # capture_output swallows sbt's streams; surface them or the
-            # failure is opaque.
-            print(e.stdout or "", file=sys.stderr)
-            print(e.stderr or "", file=sys.stderr)
-            raise
-        path = "/tmp/lint_oracles/oracle_sql.json"
+    if len(sys.argv) != 3:
+        sys.exit(__doc__)
+    sf_dir, path = sys.argv[1], sys.argv[2]
     oracle = json.load(open(path))
+    if not oracle:
+        print(f"[FAIL] {path} holds no oracles", file=sys.stderr)
+        sys.exit(1)
     con = duckdb.connect()
     for f in glob.glob(os.path.join(sf_dir, "*.parquet")):
         name = os.path.splitext(os.path.basename(f))[0]
