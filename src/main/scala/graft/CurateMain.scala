@@ -2,6 +2,8 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
+import scala.collection.mutable
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
@@ -92,8 +94,17 @@ object CurateMain {
 
   /** Execute the configured curation; writes `<output>/corpus` (partitioned
     * by `split` when splits are configured) and returns the stage report.
+    * Every stage frame the run persists is unpersisted when it returns or
+    * throws.
     */
   def run(spark: SparkSession, cfg: CurateConfig): StageReport = {
+    val cached = mutable.ArrayBuffer.empty[DataFrame]
+    try curate(spark, cfg, frame => { cached += frame; frame.persist(StorageLevel.MEMORY_AND_DISK) })
+    finally cached.foreach(_.unpersist())
+  }
+
+  private def curate(spark: SparkSession, cfg: CurateConfig,
+      persisted: DataFrame => DataFrame): StageReport = {
     val id = col(cfg.idColumn)
     val stages = Seq.newBuilder[(String, Long)]
 
@@ -173,7 +184,7 @@ object CurateMain {
     // generation, keep-one, decontamination, write) re-reads this frame,
     // and connectedComponents' eager checkpoints split the lineage into
     // separate jobs — same persist discipline as the gated flagship.
-    val survivors0 = filtered.persist(StorageLevel.MEMORY_AND_DISK)
+    val survivors0 = persisted(filtered)
     stages += "after_filters" -> rows(survivors0)(_.count())
 
     // Bootstrap-classifier filter (the fastText-filter slot of the CCNet/
@@ -189,7 +200,7 @@ object CurateMain {
             col(seedCol) === cfg.classifierSeedValue, cfg.classifierVocab)
           .where(col("nb_score") >= cfg.classifierMinScore)
           .select(id)
-        survivors0.join(kept, cfg.idColumn).persist(StorageLevel.MEMORY_AND_DISK)
+        persisted(survivors0.join(kept, cfg.idColumn))
       case None => survivors0
     }
     stages += "after_classifier" -> rows(afterClassifier)(_.count())
@@ -206,7 +217,7 @@ object CurateMain {
         afterClassifier.drop(cfg.textColumn)
           .join(seg, cfg.idColumn)
           .withColumnRenamed("text_clean", cfg.textColumn)
-          .persist(StorageLevel.MEMORY_AND_DISK)
+          .transform(persisted)
       case None => afterClassifier
     }
     stages += "after_segment_lm" -> rows(afterSegLm)(_.count())
@@ -222,7 +233,7 @@ object CurateMain {
         afterSegLm.drop(cfg.textColumn)
           .join(cleaned, cfg.idColumn)
           .withColumnRenamed("text_clean", cfg.textColumn)
-          .persist(StorageLevel.MEMORY_AND_DISK)
+          .transform(persisted)
       case None => afterSegLm
     }
     stages += "after_self_dedup" -> rows(afterSelf)(_.count())
@@ -256,7 +267,7 @@ object CurateMain {
         afterSelf.drop(cfg.textColumn)
           .join(cleaned, cfg.idColumn)
           .withColumnRenamed("text_clean", cfg.textColumn)
-          .persist(StorageLevel.MEMORY_AND_DISK)
+          .transform(persisted)
       case None => afterSelf
     }
     stages += "after_exact_substr" -> rows(afterExactSubstr)(_.count())
@@ -267,7 +278,7 @@ object CurateMain {
           Dedup.exact(afterExactSubstr, cfg.idColumn, md5(col(cfg.textColumn)))
             .select(col("kept_id").as(cfg.idColumn)), cfg.idColumn)
       else afterExactSubstr
-    val dd = afterExact.persist(StorageLevel.MEMORY_AND_DISK)
+    val dd = persisted(afterExact)
     stages += "after_exact_dedup" -> rows(dd)(_.count())
 
     // Each optional stage that actually transforms the frame persists its
@@ -285,7 +296,7 @@ object CurateMain {
             Dedup.resolveClustersBy(dd, cfg.idColumn, comp,
               TextAnalysis.qualityScore(col(cfg.textColumn)))
           else Dedup.resolveClusters(dd, cfg.idColumn, comp)
-        resolved.persist(StorageLevel.MEMORY_AND_DISK)
+        persisted(resolved)
       case None => dd
     }
     stages += "after_near_dedup" -> rows(afterNear)(_.count())
@@ -297,7 +308,7 @@ object CurateMain {
           Dedup.decontaminate(afterNear, cfg.idColumn, cfg.textColumn,
               bench, cfg.idColumn, cfg.textColumn, n = cfg.decontaminateN, minHits = 1)
             .where(col("contaminated") === 0).select(id), cfg.idColumn)
-          .persist(StorageLevel.MEMORY_AND_DISK)
+          .transform(persisted)
       case None => afterNear
     }
     // Character-verbatim pass (decontaminate.exact-minlen): drops documents
@@ -312,7 +323,7 @@ object CurateMain {
           Dedup.exactContamination(afterDeconNgram, cfg.idColumn, cfg.textColumn,
               bench, cfg.idColumn, cfg.textColumn, minLen = l)
             .where(col("contaminated") === 0).select(id), cfg.idColumn)
-          .persist(StorageLevel.MEMORY_AND_DISK)
+          .transform(persisted)
       case _ => afterDeconNgram
     }
     stages += "after_decontaminate" -> rows(afterDecon)(_.count())
@@ -329,7 +340,7 @@ object CurateMain {
         graft.operators.Dsir.gumbelTopK(w, cfg.idColumn, cfg.dsirKeep)
           .select(id)
           .join(afterDecon, cfg.idColumn)
-          .persist(StorageLevel.MEMORY_AND_DISK)
+          .transform(persisted)
       case None => afterDecon
     }
     stages += "after_dsir" -> rows(afterDsir)(_.count())
@@ -361,7 +372,7 @@ object CurateMain {
             temperature = cfg.mixtureTemperature)
           .select(id)
           .join(afterSample, cfg.idColumn)
-          .persist(StorageLevel.MEMORY_AND_DISK)
+          .transform(persisted)
       case None => afterSample
     }
     if (cfg.mixtureTotalTokens.isDefined)
@@ -413,13 +424,6 @@ object CurateMain {
         .parquet(s"${cfg.output}/examples").count()
     }
 
-    if (afterMixture ne afterSample) afterMixture.unpersist()
-    if (afterDecon ne afterNear) afterDecon.unpersist()
-    if (afterNear ne dd) afterNear.unpersist()
-    if (afterSelf ne afterSegLm) afterSelf.unpersist()
-    if (afterSegLm ne survivors0) afterSegLm.unpersist()
-    survivors0.unpersist()
-    dd.unpersist()
     StageReport(stages.result(), splitCounts, dqResults)
   }
 }

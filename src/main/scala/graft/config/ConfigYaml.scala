@@ -1,16 +1,24 @@
 package graft.config
 
-import scala.collection.mutable
+import scala.jdk.CollectionConverters._
+
+import org.yaml.snakeyaml.{DumperOptions, LoaderOptions, Yaml}
+import org.yaml.snakeyaml.constructor.SafeConstructor
+import org.yaml.snakeyaml.error.YAMLException
+import org.yaml.snakeyaml.representer.Representer
+import org.yaml.snakeyaml.resolver.Resolver
 
 /** YAML front-end for [[PipelineConfig]] — the engine's "parser" stage
   * (SURVEY §3: `CONSUMER_CONFIG` env YAML → typed config → plan).
   *
-  * Implements the YAML subset the reference's configs actually use
-  * (`/root/reference/README.md:74-169`): nested maps by 2-space indentation,
-  * lists of scalars, lists of flat maps (`- key: value` blocks), `#` comments,
-  * quoted scalars. Zero dependencies by design (this build resolves nothing
-  * beyond Spark + scalatest); a full YAML engine would accept documents this
-  * schema must reject anyway.
+  * Documents are YAML, read by the SnakeYAML jar that ships with the Spark
+  * distribution, and every scalar is read as text: the loader carries no
+  * implicit type resolvers, so `yes`, `null`, `007` and `1.0` stay the
+  * strings they are written as and the typed views below decide what each
+  * field means. Aliases of collections are refused (a recursive alias
+  * could never be converted), a duplicate key keeps its last value, and
+  * every loader error surfaces as a [[ParseError]] carrying its line and
+  * column.
   *
   * Field names, aliases and defaults mirror the reference's pydantic models
   * (`/root/reference/src/config.py:44-117`), including the reference's own
@@ -24,118 +32,66 @@ object ConfigYaml {
 
   final case class ParseError(msg: String) extends RuntimeException(msg)
 
-  // ------------------------------------------------------------------ lexer
-  private final case class Line(indent: Int, text: String)
-
-  private def lines(src: String): List[Line] =
-    src.linesIterator.map { raw =>
-      val noComment = stripComment(raw)
-      val t = noComment.dropWhile(_ == ' ')
-      Line(noComment.length - t.length, t.trim)
-    }.filter(_.text.nonEmpty).toList
-
-  private def stripComment(s: String): String = {
-    var inS = false; var inD = false
-    val out = new StringBuilder
-    var i = 0
-    var break = false
-    while (i < s.length && !break) {
-      val c = s.charAt(i)
-      if (c == '\'' && !inD) inS = !inS
-      else if (c == '"' && !inS) inD = !inD
-      if (c == '#' && !inS && !inD && (i == 0 || s.charAt(i - 1).isWhitespace)) break = true
-      else { out.append(c); i += 1 }
+  /** YAML text → a tree of `Map[String, Any]`, `List[Any]` and `String`
+    * leaves. An empty document is the empty map.
+    */
+  def parseTree(src: String): Map[String, Any] = {
+    val opts = new LoaderOptions
+    opts.setMaxAliasesForCollections(0)
+    val textOnly = new Resolver { override def addImplicitResolvers(): Unit = () }
+    val yaml = new Yaml(new SafeConstructor(opts), new Representer(new DumperOptions),
+      new DumperOptions, opts, textOnly)
+    val doc: Any =
+      try yaml.load[AnyRef](src) catch { case e: YAMLException => throw ParseError(e.getMessage) }
+    doc match {
+      case null => Map.empty
+      case m: java.util.Map[_, _] => toScala(m).asInstanceOf[Map[String, Any]]
+      case other => throw ParseError(s"top level must be a map, got ${toScala(other)}")
     }
-    out.toString
   }
 
-  private def unquote(v: String): String = {
-    val t = v.trim
-    if (t.length >= 2 && ((t.head == '"' && t.last == '"') || (t.head == '\'' && t.last == '\'')))
-      t.substring(1, t.length - 1)
-    else t
+  private def toScala(node: Any): Any = node match {
+    case m: java.util.Map[_, _] => m.asScala.map { case (k, v) => text(k) -> toScala(v) }.toMap
+    case l: java.util.List[_] => l.asScala.map(toScala).toList
+    case leaf => text(leaf)
   }
-
-  // ----------------------------------------------------------------- parser
-  /** Parse a block of lines (all at indent >= `indent`) into a Map or List. */
-  private def parseBlock(ls: List[Line]): Any = {
-    if (ls.isEmpty) return Map.empty[String, Any]
-    val base = ls.head.indent
-    if (ls.head.text.startsWith("- ") || ls.head.text == "-") parseList(ls, base)
-    else parseMap(ls, base)
-  }
-
-  private def parseMap(ls: List[Line], indent: Int): Map[String, Any] = {
-    val out = mutable.LinkedHashMap.empty[String, Any]
-    var rest = ls
-    while (rest.nonEmpty) {
-      val l = rest.head
-      if (l.indent != indent) throw ParseError(s"bad indentation at: '${l.text}'")
-      val idx = l.text.indexOf(':')
-      if (idx < 0) throw ParseError(s"expected 'key: value' at: '${l.text}'")
-      val key = unquote(l.text.substring(0, idx))
-      val inline = l.text.substring(idx + 1).trim
-      rest = rest.tail
-      val (children, remain) = rest.span(_.indent > indent)
-      rest = remain
-      if (inline.nonEmpty) {
-        if (children.nonEmpty) throw ParseError(s"value and nested block for key '$key'")
-        out(key) = unquote(inline)
-      } else if (children.nonEmpty) {
-        out(key) = parseBlock(children)
-      } else if (rest.nonEmpty && rest.head.indent == indent && rest.head.text.startsWith("- ")) {
-        // list items at the SAME indent as their key (valid YAML, used in the
-        // reference's message-filters example)
-        val (items, remain2) = rest.span(l2 => l2.indent >= indent && (l2.text.startsWith("- ") || l2.indent > indent))
-        rest = remain2
-        out(key) = parseList(items, indent)
-      } else out(key) = ""
-    }
-    out.toMap
-  }
-
-  private def parseList(ls: List[Line], indent: Int): List[Any] = {
-    val out = mutable.ListBuffer.empty[Any]
-    var rest = ls
-    while (rest.nonEmpty) {
-      val l = rest.head
-      if (l.indent != indent || !l.text.startsWith("-"))
-        throw ParseError(s"expected list item at: '${l.text}'")
-      val head = l.text.drop(1).trim
-      rest = rest.tail
-      val (children, remain) = rest.span(_.indent > indent)
-      rest = remain
-      if (head.isEmpty) out += parseBlock(children)
-      else if (head.contains(":")) {
-        // '- key: value' — fold the item head into the child map block
-        val virtualHead = Line(indent + 2, head)
-        out += parseBlock(virtualHead :: children.map(c => Line(c.indent, c.text)))
-      } else {
-        if (children.nonEmpty) throw ParseError(s"scalar list item with children: '$head'")
-        out += unquote(head)
-      }
-    }
-    out.toList
-  }
-
-  def parseTree(src: String): Map[String, Any] = parseBlock(lines(src)) match {
-    case m: Map[_, _] => m.asInstanceOf[Map[String, Any]]
-    case other => throw ParseError(s"top level must be a map, got $other")
+  // With no implicit resolvers, only an explicit tag (`!!int 5`) or a
+  // collection used as a key gives anything but a String here.
+  private def text(leaf: Any): String = leaf match {
+    case s: String => s
+    case other => throw ParseError(s"expected a plain scalar, got: $other")
   }
 
   // ------------------------------------------------------------- typed view
-  private def str(m: Map[String, Any], k: String): Option[String] =
-    m.get(k).map(_.toString)
-  private def sub(m: Map[String, Any], k: String): Option[Map[String, Any]] =
+  // One set of accessors for both config documents ([[fromYaml]] and
+  // [[CurateConfig.fromTree]]): a scalar, a sub-map or a list, each failing
+  // with a ParseError when the node has another shape.
+  private[config] def scalar(k: String, v: Any): String = v match {
+    case s: String => s
+    case other => throw ParseError(s"'$k' must be a scalar, got: $other")
+  }
+  private[config] def str(m: Map[String, Any], k: String): Option[String] =
+    m.get(k).map(scalar(k, _))
+  private[config] def sub(m: Map[String, Any], k: String): Option[Map[String, Any]] =
     m.get(k).map {
       case mm: Map[_, _] => mm.asInstanceOf[Map[String, Any]]
       case other => throw ParseError(s"'$k' must be a map, got: $other")
     }
-  private def seqOf(m: Map[String, Any], k: String): Seq[Any] =
+  private[config] def list(m: Map[String, Any], k: String): List[Any] =
     m.get(k).map {
       case l: List[_] => l
       case other => throw ParseError(s"'$k' must be a list, got: $other")
     }.getOrElse(Nil)
+  private[config] def strings(m: Map[String, Any], k: String): List[String] =
+    list(m, k).map(scalar(k, _))
+  private[config] def maps(m: Map[String, Any], k: String): List[Map[String, Any]] =
+    list(m, k).map {
+      case mm: Map[_, _] => mm.asInstanceOf[Map[String, Any]]
+      case other => throw ParseError(s"'$k' entries must be maps, got: $other")
+    }
+  /** A sub-map of scalars (`name: value` pairs); empty when absent. */
+  private[config] def scalars(m: Map[String, Any], k: String): Map[String, String] =
+    sub(m, k).getOrElse(Map.empty).map { case (kk, v) => kk -> scalar(kk, v) }
 
   /** Whitelisted `custom-config` translation (NO eval): oracledb type names →
     * JDBC column type DDL.
@@ -165,22 +121,19 @@ object ConfigYaml {
       },
       groupId = str(s, "group-id").getOrElse("graft"),
       keypathSeparator = str(s, "keypath-seperator").orElse(str(s, "keypath-separator")).getOrElse("."),
-      messageFieldsFilter = seqOf(s, "message-fields-filter").map(_.toString),
-      flagFieldConfig = seqOf(s, "flag-field-config").map(_.toString),
-      messageFilters = seqOf(s, "message-filters").map {
-        case m: Map[_, _] =>
-          val mm = m.asInstanceOf[Map[String, Any]]
-          MessageFilter(
-            str(mm, "key").getOrElse(throw ParseError("message-filter needs 'key'")),
-            str(mm, "allowed_value").getOrElse(throw ParseError("message-filter needs 'allowed_value'")))
-        case other => throw ParseError(s"message-filters entries must be maps, got: $other")
+      messageFieldsFilter = strings(s, "message-fields-filter"),
+      flagFieldConfig = strings(s, "flag-field-config"),
+      messageFilters = maps(s, "message-filters").map { mm =>
+        MessageFilter(
+          str(mm, "key").getOrElse(throw ParseError("message-filter needs 'key'")),
+          str(mm, "allowed_value").getOrElse(throw ParseError("message-filter needs 'allowed_value'")))
       },
       pollTimeoutSec = str(s, "poll-timeout").map(_.toInt).getOrElse(10),
       schemaRegistryUrl = str(s, "schema-registry-url"))
 
     val target = TargetConfig(
       table = str(t, "table").getOrElse(throw ParseError("target.table is required")),
-      skipDuplicatesWith = seqOf(t, "skip-duplicates-with").map(_.toString),
+      skipDuplicatesWith = strings(t, "skip-duplicates-with"),
       k6Filter = sub(t, "k6-filter").map { k6 =>
         K6FilterConfig(
           filterTable = str(k6, "filter-table").getOrElse(throw ParseError("k6-filter.filter-table is required")),
@@ -194,30 +147,24 @@ object ConfigYaml {
           deltaTable = str(d, "table").getOrElse(throw ParseError("delta.table is required")),
           deltaColumn = str(d, "column").getOrElse(throw ParseError("delta.column is required")))
       },
-      columnTypes = seqOf(t, "custom-config").map {
-        case m: Map[_, _] =>
-          val mm = m.asInstanceOf[Map[String, Any]]
-          val method = str(mm, "method").getOrElse("")
-          if (method != "oracledb.Cursor.setinputsizes")
-            throw ParseError(s"custom-config method not whitelisted: '$method'")
-          val value = str(mm, "value").getOrElse("")
-          val sqlType = bindTypeWhitelist.getOrElse(value,
-            throw ParseError(s"custom-config value not whitelisted: '$value'"))
-          ColumnTypeOverride(
-            column = str(mm, "name").getOrElse(throw ParseError("custom-config needs 'name'")),
-            sqlType = sqlType)
-        case other => throw ParseError(s"custom-config entries must be maps, got: $other")
+      columnTypes = maps(t, "custom-config").map { mm =>
+        val method = str(mm, "method").getOrElse("")
+        if (method != "oracledb.Cursor.setinputsizes")
+          throw ParseError(s"custom-config method not whitelisted: '$method'")
+        val value = str(mm, "value").getOrElse("")
+        val sqlType = bindTypeWhitelist.getOrElse(value,
+          throw ParseError(s"custom-config value not whitelisted: '$value'"))
+        ColumnTypeOverride(
+          column = str(mm, "name").getOrElse(throw ParseError("custom-config needs 'name'")),
+          sqlType = sqlType)
       })
 
-    val transform = seqOf(root, "transform").map {
-      case m: Map[_, _] =>
-        val mm = m.asInstanceOf[Map[String, Any]]
-        TransformRule(
-          src = str(mm, "src").getOrElse(throw ParseError("transform rule needs 'src'")),
-          dst = str(mm, "dst").getOrElse(throw ParseError("transform rule needs 'dst'")),
-          fun = str(mm, "fun"),
-          allowUndefined = str(mm, "allow_undefined").exists(v => v == "true" || v == "True"))
-      case other => throw ParseError(s"transform entries must be maps, got: $other")
+    val transform = maps(root, "transform").map { mm =>
+      TransformRule(
+        src = str(mm, "src").getOrElse(throw ParseError("transform rule needs 'src'")),
+        dst = str(mm, "dst").getOrElse(throw ParseError("transform rule needs 'dst'")),
+        fun = str(mm, "fun"),
+        allowUndefined = str(mm, "allow_undefined").exists(v => v == "true" || v == "True"))
     }
 
     // Embedded curation chain: the full training-data stage battery over

@@ -118,8 +118,22 @@ object CurateConfig {
   val scriptPanel: Seq[String] =
     Seq("Latin", "Cyrillic", "Greek", "Arabic", "Hebrew", "Han", "Hangul", "Devanagari")
 
-  /** YAML → [[CurateConfig]], over the same zero-dependency subset parser as
-    * [[ConfigYaml]]. Unknown keys fail loudly — a typo'd filter silently
+  /** Allowed keys of each section block of a curation document. */
+  private val sectionKeys: Map[String, Set[String]] = Map(
+    "filters" -> Set("min-words", "max-words", "min-quality", "max-dup-word-frac",
+      "max-top-bigram-frac", "gopher", "html-strip", "allowed-scripts"),
+    "dedup" -> Set("exact", "near-threshold", "keep", "self-minlen", "exact-substr-minlen"),
+    "decontaminate" -> Set("against", "n", "exact-minlen"),
+    "sample" -> Set("stratum-column", "default-percent", "rates", "k-per-stratum", "weight-column"),
+    "mixture" -> Set("total-tokens", "weights", "source-column", "temperature"),
+    "segment-lm" -> Set("tokens", "min-score"),
+    "examples" -> Set("len", "eod"),
+    "dq" -> Set("not-null", "unique", "accepted", "fail-on-violation"),
+    "classifier" -> Set("seed-column", "seed-value", "min-score", "vocab"),
+    "dsir" -> Set("target-column", "target-value", "keep", "buckets"))
+
+  /** YAML → [[CurateConfig]], read by [[ConfigYaml.parseTree]] like the
+    * consumer config. Unknown keys fail loudly — a typo'd filter silently
     * curating nothing is the config bug this layer exists to catch.
     */
   def fromYaml(src: String): CurateConfig = fromTree(ConfigYaml.parseTree(src))
@@ -128,38 +142,30 @@ object CurateConfig {
     * ([[fromYaml]]) and the `curate:` subtree embedded in a consumer config
     * ([[ConfigYaml.fromYaml]], round-12 verdict item 7). `defaultInput`
     * carries the consumer sink's table path so an embedded block may omit
-    * `input` and curate what the pipeline just landed.
+    * `input` and curate what the pipeline just landed. Reads through the
+    * same typed accessors as [[ConfigYaml.fromYaml]].
     */
   def fromTree(tree: Map[String, Any], defaultInput: Option[String] = None): CurateConfig = {
-    val known = Set("input", "output", "id-column", "text-column",
-      "filters", "nfc", "dedup", "decontaminate", "sample", "split", "dq",
-      "mixture", "examples", "segment-lm", "classifier", "dsir")
-    val unknown = tree.keySet -- known
+    import ConfigYaml.{ParseError, maps, scalar, scalars, str, sub}
+    val unknown = tree.keySet -- sectionKeys.keySet --
+      Set("input", "output", "id-column", "text-column", "nfc", "split")
     require(unknown.isEmpty, s"unknown curate config keys: ${unknown.mkString(", ")}")
-
-    def str(m: Map[String, Any], k: String): Option[String] =
-      m.get(k).map(_.toString)
-    def sub(m: Map[String, Any], k: String): Map[String, Any] = m.get(k) match {
-      case Some(x: Map[_, _]) => x.asInstanceOf[Map[String, Any]]
-      case Some(other) => throw ConfigYaml.ParseError(s"$k: expected a map, got $other")
-      case None => Map.empty
+    val block = sectionKeys.map { case (section, allowed) =>
+      val b = sub(tree, section).getOrElse(Map.empty[String, Any])
+      val unknownKeys = b.keySet -- allowed
+      require(unknownKeys.isEmpty, s"unknown $section keys: ${unknownKeys.mkString(", ")}")
+      section -> b
     }
-    val filters = sub(tree, "filters")
-    val dedup = sub(tree, "dedup")
-    val decon = sub(tree, "decontaminate")
-    val sample = sub(tree, "sample")
-    val unknownF = filters.keySet -- Set("min-words", "max-words", "min-quality",
-      "max-dup-word-frac", "max-top-bigram-frac", "gopher", "html-strip",
-      "allowed-scripts")
-    require(unknownF.isEmpty, s"unknown filters keys: ${unknownF.mkString(", ")}")
-    val unknownD = dedup.keySet -- Set("exact", "near-threshold", "keep", "self-minlen",
-      "exact-substr-minlen")
-    require(unknownD.isEmpty, s"unknown dedup keys: ${unknownD.mkString(", ")}")
-    val unknownC = decon.keySet -- Set("against", "n", "exact-minlen")
-    require(unknownC.isEmpty, s"unknown decontaminate keys: ${unknownC.mkString(", ")}")
-    val unknownS = sample.keySet --
-      Set("stratum-column", "default-percent", "rates", "k-per-stratum", "weight-column")
-    require(unknownS.isEmpty, s"unknown sample keys: ${unknownS.mkString(", ")}")
+    val filters = block("filters")
+    val dedup = block("dedup")
+    val decon = block("decontaminate")
+    val sample = block("sample")
+    val mixture = block("mixture")
+    val segLm = block("segment-lm")
+    val examples = block("examples")
+    val dq = block("dq")
+    val classifier = block("classifier")
+    val dsir = block("dsir")
     // Weighted and percent modes must not half-combine: k without a weight
     // column (or with rates) silently sampling uniformly is the failure
     // mode to refuse.
@@ -169,45 +175,28 @@ object CurateConfig {
       "sample: k-per-stratum requires weight-column and stratum-column, and excludes rates/default-percent")
     require(!sample.contains("weight-column") || sample.contains("k-per-stratum"),
       "sample: weight-column without k-per-stratum does nothing")
-    // dq block: input-contract checks before any curation stage. Column
-    // lists are comma-separated scalars (the zero-dependency YAML subset has
-    // no inline flow lists); `accepted` is a nested column -> csv map.
-    val mixture = sub(tree, "mixture")
-    val unknownM = mixture.keySet -- Set("total-tokens", "weights", "source-column", "temperature")
-    require(unknownM.isEmpty, s"unknown mixture keys: ${unknownM.mkString(", ")}")
     // Same half-specified-stage guard as sample/decontaminate: weights
     // without a budget (or vice versa) must fail loudly, not no-op.
     require(mixture.isEmpty || (mixture.contains("total-tokens") && mixture.contains("weights")),
       "mixture: requires both total-tokens and weights")
-    val segLm = sub(tree, "segment-lm")
-    val unknownL = segLm.keySet -- Set("tokens", "min-score")
-    require(unknownL.isEmpty, s"unknown segment-lm keys: ${unknownL.mkString(", ")}")
     // Same half-specified-stage guard: min-score without tokens runs nothing.
     require(segLm.isEmpty || segLm.contains("tokens"),
       "segment-lm: requires tokens (min-score alone does nothing)")
-    val examples = sub(tree, "examples")
-    val unknownE = examples.keySet -- Set("len", "eod")
-    require(unknownE.isEmpty, s"unknown examples keys: ${unknownE.mkString(", ")}")
     // Same half-specified-stage guard: `eod` without `len` slices nothing.
     require(examples.isEmpty || examples.contains("len"),
       "examples: requires len (eod alone does nothing)")
-    val dq = sub(tree, "dq")
-    val unknownQ = dq.keySet -- Set("not-null", "unique", "accepted", "fail-on-violation")
-    require(unknownQ.isEmpty, s"unknown dq keys: ${unknownQ.mkString(", ")}")
-    val classifier = sub(tree, "classifier")
-    val unknownCl = classifier.keySet -- Set("seed-column", "seed-value", "min-score", "vocab")
-    require(unknownCl.isEmpty, s"unknown classifier keys: ${unknownCl.mkString(", ")}")
     // Same half-specified-stage guard: a seed value/threshold without the
     // seed column keys no stage; a column without a value seeds nothing.
     require(classifier.isEmpty ||
       (classifier.contains("seed-column") && classifier.contains("seed-value")),
       "classifier: requires seed-column and seed-value")
-    val dsir = sub(tree, "dsir")
-    val unknownDs = dsir.keySet -- Set("target-column", "target-value", "keep", "buckets")
-    require(unknownDs.isEmpty, s"unknown dsir keys: ${unknownDs.mkString(", ")}")
     require(dsir.isEmpty || (dsir.contains("target-column") &&
       dsir.contains("target-value") && dsir.contains("keep")),
       "dsir: requires target-column, target-value and keep")
+    // Column lists (dq `not-null`/`unique`, `accepted` values,
+    // `allowed-scripts`) stay comma-separated scalars, `not-null: doc_id,text`:
+    // the form every existing curation document uses. A YAML list there is a
+    // collection where a scalar is expected and fails as a ParseError.
     def csv(s: String): Seq[String] = s.split(',').toSeq.map(_.trim).filter(_.nonEmpty)
     // A half-specified stage must fail loudly, not silently skip: CurateMain
     // keys the sample stage off `stratum-column` and the decontaminate stage
@@ -220,16 +209,9 @@ object CurateConfig {
     require(!dedup.contains("keep") || dedup.contains("near-threshold"),
       "dedup.keep: requires near-threshold (keep alone runs no near-dup stage)")
 
-    val splits: Seq[(String, Double)] = tree.get("split") match {
-      case Some(xs: List[_]) => xs.map {
-        case m: Map[_, _] =>
-          val mm = m.asInstanceOf[Map[String, Any]]
-          require(mm.size == 1, s"each split entry is one `name: percent`, got $mm")
-          mm.head match { case (k, v) => k -> v.toString.toDouble }
-        case other => throw ConfigYaml.ParseError(s"split entry: expected `name: percent`, got $other")
-      }
-      case Some(other) => throw ConfigYaml.ParseError(s"split: expected a list, got $other")
-      case None => Nil
+    val splits: Seq[(String, Double)] = maps(tree, "split").map { mm =>
+      require(mm.size == 1, s"each split entry is one `name: percent`, got $mm")
+      mm.head match { case (k, v) => k -> scalar(k, v).toDouble }
     }
     CurateConfig(
       input = str(tree, "input").orElse(defaultInput).getOrElse(""),
@@ -254,19 +236,19 @@ object CurateConfig {
       nearDupKeepBest = str(dedup, "keep") match {
         case Some("best") => true
         case Some("first") | None => false
-        case Some(other) => throw ConfigYaml.ParseError(
+        case Some(other) => throw ParseError(
           s"dedup.keep: expected best|first, got $other")
       },
       decontaminateAgainst = str(decon, "against"),
       decontaminateN = str(decon, "n").map(_.toInt).getOrElse(8),
       decontaminateExactMinLen = str(decon, "exact-minlen").map(_.toInt),
       sampleStratum = str(sample, "stratum-column"),
-      sampleRates = sub(sample, "rates").map { case (k, v) => k -> v.toString.toDouble },
+      sampleRates = scalars(sample, "rates").map { case (k, v) => k -> v.toDouble },
       sampleDefault = str(sample, "default-percent").map(_.toDouble).getOrElse(100.0),
       sampleKPerStratum = str(sample, "k-per-stratum").map(_.toInt),
       sampleWeightColumn = str(sample, "weight-column"),
       mixtureTotalTokens = str(mixture, "total-tokens").map(_.toLong),
-      mixtureWeights = sub(mixture, "weights").map { case (k, v) => k -> v.toString.toDouble },
+      mixtureWeights = scalars(mixture, "weights").map { case (k, v) => k -> v.toDouble },
       mixtureSourceColumn = str(mixture, "source-column").getOrElse("source"),
       mixtureTemperature = str(mixture, "temperature").map(_.toDouble).getOrElse(1.0),
       splits = splits,
@@ -274,7 +256,7 @@ object CurateConfig {
       exampleEod = str(examples, "eod").getOrElse("<|eod|>"),
       dqNotNull = str(dq, "not-null").map(csv).getOrElse(Nil),
       dqUnique = str(dq, "unique").map(csv).getOrElse(Nil),
-      dqAccepted = sub(dq, "accepted").map { case (k, v) => k -> csv(v.toString) },
+      dqAccepted = scalars(dq, "accepted").map { case (k, v) => k -> csv(v) },
       dqFailOnViolation = str(dq, "fail-on-violation").exists(_.toBoolean),
       classifierSeedColumn = str(classifier, "seed-column"),
       classifierSeedValue = str(classifier, "seed-value").getOrElse(""),

@@ -285,43 +285,42 @@ object JdbcSink {
     }
   }
 
+  /** `e` and its causes, at most 16 deep (a cyclic cause chain ends there). */
+  private def causes(e: Throwable): Iterator[Throwable] =
+    Iterator.iterate(e)(_.getCause).takeWhile(_ != null).take(16)
+
   /** Retriable write failures for the idempotent-replay flush: deadlock
     * (SQLState 40001, Oracle ORA-00060), Derby lock timeouts (40XL1/40XL2),
     * and unique-key violation (23505 — two writers passed the same row's
     * NOT EXISTS; replay skips it).
     */
-  private[sinks] def isRetriableWrite(e: java.sql.SQLException): Boolean = {
-    val chain = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null).take(16).toSeq
-    chain.exists {
+  private[sinks] def isRetriableWrite(e: java.sql.SQLException): Boolean =
+    causes(e).exists {
       case s: java.sql.SQLException =>
         val state = Option(s.getSQLState).getOrElse("")
         state == "40001" || state == "40XL1" || state == "40XL2" || state == "23505" ||
           s.getErrorCode == 60
       case _ => false
     }
-  }
 
   /** Duplicate-index detection for the idempotent ensure-index call: Derby
     * X0Y32 ("already exists"), standard 42S11/42S01 variants, Oracle
     * ORA-00955 ("name is already used by an existing object").
     */
-  private[sinks] def isIndexAlreadyExists(e: java.sql.SQLException): Boolean = {
-    val chain = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null).take(16).toSeq
-    chain.exists {
+  private[sinks] def isIndexAlreadyExists(e: java.sql.SQLException): Boolean =
+    causes(e).exists {
       case s: java.sql.SQLException =>
         val state = Option(s.getSQLState).getOrElse("")
         state == "X0Y32" || state == "42S11" || s.getErrorCode == 955
       case _ => false
     }
-  }
 
   /** True iff the exception chain denotes a missing table/view, by SQLState
     * (ANSI/MySQL 42S02, Postgres 42P01, Derby 42X05), vendor code (Oracle
     * ORA-00942) or, for wrapped analysis errors, message text.
     */
-  private[sinks] def isMissingTable(e: Throwable): Boolean = {
-    val chain = Iterator.iterate(e)(_.getCause).takeWhile(_ != null).take(16).toSeq
-    chain.exists {
+  private[sinks] def isMissingTable(e: Throwable): Boolean =
+    causes(e).exists {
       case s: java.sql.SQLException =>
         val state = Option(s.getSQLState).getOrElse("")
         state == "42S02" || state == "42P01" || state == "42X05" || s.getErrorCode == 942
@@ -329,7 +328,6 @@ object JdbcSink {
         val m = Option(other.getMessage).getOrElse("")
         m.matches("(?is).*(table or view does not exist|table or view .* not found|table .* (does not exist|not found)).*")
     }
-  }
 }
 
 /** Parquet-backed sink for the file test pyramid; append semantics like the

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Dataset, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{ExpiredTimerInfo, OutputMode, StatefulProcessor, TimeMode, TimerValues, TTLConfig, ValueState}
 
-import Sessionize.{Event, KeyState, Session, SessionState}
+import Sessionize.{Event, KeyState, Session}
 
 /** The event-time sessionizer on `transformWithState` — the third state
   * shape of the 4.x API in this repo (named [[ValueState]] + EVENT-TIME
@@ -13,10 +13,10 @@ import Sessionize.{Event, KeyState, Session, SessionState}
   * registered timers and a `handleExpiredTimer` callback instead of
   * `GroupStateTimeout.EventTimeTimeout`.
   *
-  * The state-transition LOGIC is [[Sessionize]]'s, verbatim — open
-  * session + at-most-one pre-start straggler run, the same merge windows,
-  * bridge check and batch-equivalence argument — re-wired onto the new
-  * API's state/timer surface. One timer per key (the earliest close
+  * The state-transition LOGIC is [[Sessionize]]'s pure `absorb`/`expire`
+  * pair — open session + at-most-one pre-start straggler run, the same
+  * merge windows, bridge check and batch-equivalence argument — wired onto
+  * the new API's state/timer surface. One timer per key (the earliest close
   * deadline); on every update the old timer is deleted and the new
   * deadline registered, so timer state is O(keys) like the value state.
   * Gated against the SAME batch oracle as `st_sessionize`, which makes
@@ -33,57 +33,26 @@ object SessionizeTws {
       state = getHandle.getValueState[KeyState](
         "session", Encoders.product[KeyState], TTLConfig.NONE)
 
-    private def emit(userId: Long, s: SessionState): Session =
-      Session(userId, s.start, s.last, s.n, s.sum)
-    private def deadline(ks: KeyState): Long =
-      math.min(ks.cur.last + gapMs, ks.strag.map(_.last + gapMs).getOrElse(Long.MaxValue))
-
-    private def rearm(wm: Long, ks: KeyState): Unit = {
-      getHandle.listTimers().foreach(getHandle.deleteTimer)
-      getHandle.registerTimer(math.max(deadline(ks), wm + 1))
+    /** Write the key's next state and re-arm its one timer at the earliest
+      * close deadline (clamped above the watermark), or clear the state
+      * (the timer that just fired is dropped by Spark).
+      */
+    private def settle(wm: Long, next: Option[KeyState]): Unit = next match {
+      case Some(ks) =>
+        state.update(ks)
+        getHandle.listTimers().foreach(getHandle.deleteTimer)
+        getHandle.registerTimer(math.max(Sessionize.deadline(gapMs)(ks), wm + 1))
+      case None => state.clear()
     }
 
     override def handleInputRows(
         key: Long,
         rows: Iterator[Event],
         timerValues: TimerValues): Iterator[Session] = {
-      val sorted = rows.toSeq.sortBy(_.ts.getTime)
-      var closed = List.empty[Session]
-      var cur = if (state.exists()) Some(state.get().cur) else None
-      var strag = if (state.exists()) state.get().strag else None
-      sorted.foreach { e =>
-        val t = e.ts.getTime
-        cur match {
-          case Some(s) if t - s.last <= gapMs && s.start - t <= gapMs =>
-            cur = Some(SessionState(math.min(s.start, t), math.max(s.last, t), s.n + 1, s.sum + e.value))
-          case Some(s) if t - s.last > gapMs =>
-            closed ::= emit(key, s)
-            cur = Some(SessionState(t, t, 1, e.value))
-          case Some(_) =>
-            strag match {
-              case Some(s) if t - s.last <= gapMs && s.start - t <= gapMs =>
-                strag = Some(SessionState(math.min(s.start, t), math.max(s.last, t), s.n + 1, s.sum + e.value))
-              case other =>
-                other.foreach(s => closed ::= emit(key, s))
-                strag = Some(SessionState(t, t, 1, e.value))
-            }
-          case None =>
-            cur = Some(SessionState(t, t, 1, e.value))
-        }
-      }
-      (cur, strag) match {
-        case (Some(c), Some(s)) if c.start - s.last <= gapMs =>
-          cur = Some(SessionState(math.min(s.start, c.start), math.max(s.last, c.last),
-            c.n + s.n, c.sum + s.sum))
-          strag = None
-        case _ => ()
-      }
-      cur.foreach { c =>
-        val ks = KeyState(c, strag)
-        state.update(ks)
-        rearm(timerValues.getCurrentWatermarkInMs(), ks)
-      }
-      closed.reverseIterator
+      val (closed, next) = Sessionize.absorb(gapMs, key)(
+        if (state.exists()) Some(state.get()) else None, rows)
+      settle(timerValues.getCurrentWatermarkInMs(), next)
+      closed.iterator
     }
 
     override def handleExpiredTimer(
@@ -91,21 +60,10 @@ object SessionizeTws {
         timerValues: TimerValues,
         expiredTimerInfo: ExpiredTimerInfo): Iterator[Session] = {
       if (!state.exists()) return Iterator.empty
-      val ks = state.get()
       val wm = timerValues.getCurrentWatermarkInMs()
-      var out = List.empty[Session]
-      var strag = ks.strag
-      var cur: Option[SessionState] = Some(ks.cur)
-      strag.filter(s => wm >= s.last + gapMs).foreach { s => out ::= emit(key, s); strag = None }
-      cur.filter(s => wm >= s.last + gapMs).foreach { s => out ::= emit(key, s); cur = None }
-      cur match {
-        case None => state.clear()
-        case Some(c) =>
-          val ks2 = KeyState(c, strag)
-          state.update(ks2)
-          rearm(wm, ks2)
-      }
-      out.reverseIterator
+      val (closed, next) = Sessionize.expire(gapMs, key)(state.get(), wm)
+      settle(wm, next)
+      closed.iterator
     }
   }
 

@@ -15,7 +15,7 @@ class BucketingSpec extends SparkSpec {
   import spark.implicits._
 
   private def scratch(): java.nio.file.Path =
-    java.nio.file.Files.createTempDirectory("graft-bkt-spec")
+    scratchDir("graft-bkt-spec")
 
   private def rm(f: java.io.File): Unit = {
     Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(): Unit

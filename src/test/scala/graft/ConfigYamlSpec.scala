@@ -144,4 +144,36 @@ class ConfigYamlSpec extends AnyFunSuite {
     intercept[IllegalArgumentException](
       ConfigYaml.fromYaml(yaml.replace("dedup:", "dedupe:")))
   }
+
+  private val minimal =
+    "source:\n  topic: t\ntarget:\n  table: t\ntransform:\n  - src: a\n    dst: b\n"
+
+  test("flow lists parse as lists") {
+    val cfg = ConfigYaml.fromYaml(minimal.replace("  table: t\n",
+      "  table: t\n  skip-duplicates-with: [kafka_partition, kafka_offset]\n"))
+    assert(cfg.target.skipDuplicatesWith == Seq("kafka_partition", "kafka_offset"))
+  }
+
+  test("quoted scalars unescape") {
+    val cfg = ConfigYaml.fromYaml(minimal.replace("  topic: t\n",
+      "  topic: t\n  message-filters:\n    - key: status\n      allowed_value: 'it''s'\n"))
+    assert(cfg.source.messageFilters == Seq(MessageFilter("status", "it's")))
+  }
+
+  test("a collection where a scalar is expected raises ParseError") {
+    intercept[ConfigYaml.ParseError](ConfigYaml.fromYaml(minimal.replace("topic: t", "topic: [a]")))
+    intercept[ConfigYaml.ParseError](
+      CurateConfig.fromYaml("input: a\noutput: b\ndq:\n  not-null: [a, b]\n"))
+  }
+
+  test("malformed YAML raises ParseError naming its position") {
+    val e = intercept[ConfigYaml.ParseError](
+      ConfigYaml.fromYaml(minimal.replace("topic: t", "topic: a: b")))
+    assert(e.getMessage.contains("line 2"))
+  }
+
+  test("a collection alias raises ParseError") {
+    intercept[ConfigYaml.ParseError](
+      ConfigYaml.fromYaml(minimal + "columns: &cols [a, b]\nsame-columns: *cols\n"))
+  }
 }

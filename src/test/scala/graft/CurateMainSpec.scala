@@ -74,7 +74,7 @@ class CurateMainSpec extends SparkSpec {
   }
 
   test("CurateMain.run: weighted sample stage keeps exactly k per stratum") {
-    val out = java.nio.file.Files.createTempDirectory("graft-curate-w").toString
+    val out = scratchDir("graft-curate-w").toString
     val cfg = CurateConfig.fromYaml(
       s"""input: /root/testdata/sf0.001/documents.parquet
          |output: $out
@@ -96,7 +96,7 @@ class CurateMainSpec extends SparkSpec {
   }
 
   test("CurateMain.run end-to-end on sf0.001: stages monotone, dups removed, splits cover") {
-    val out = java.nio.file.Files.createTempDirectory("graft-curate").toString
+    val out = scratchDir("graft-curate").toString
     val cfg = CurateConfig.fromYaml(
       yaml.replace("IN", "/root/testdata/sf0.001/documents.parquet").replace("OUT", out))
     val report = CurateMain.run(spark, cfg)
@@ -148,8 +148,8 @@ class CurateMainSpec extends SparkSpec {
   }
 
   test("CurateMain.run: examples export slices the train split only, exact-L rows") {
-    val out = java.nio.file.Files.createTempDirectory("graft-curate-ex").toString
-    val in = java.nio.file.Files.createTempDirectory("graft-curate-ex-in").toString
+    val out = scratchDir("graft-curate-ex").toString
+    val in = scratchDir("graft-curate-ex-in").toString
     (1 to 40).map(i => (i.toLong, (1 to 10).map(j => s"w${i}_$j").mkString(" "), "s"))
       .toDF("doc_id", "text", "source")
       .write.parquet(s"$in/docs.parquet")
@@ -174,7 +174,7 @@ class CurateMainSpec extends SparkSpec {
   }
 
   test("CurateMain.run: segment-lm prunes the low-likelihood window, scripts allow-list drops foreign docs") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-seg").toString
+    val dir = scratchDir("graft-seg").toString
     val rare = "qqxyzzy wobblefrak zimzam"
     val common = (1 to 40).map(_ => "alpha beta gamma delta").mkString(" ")
     Seq(
@@ -213,7 +213,7 @@ class CurateMainSpec extends SparkSpec {
   }
 
   test("CurateMain.run: exact-substr cut removes every copy of a cross-doc repeat") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-exsub").toString
+    val dir = scratchDir("graft-exsub").toString
     val shared = (1 to 8).map(i => s"boiler$i").mkString(" ") // 63 chars, one corpus-wide repeat
     Seq(
       (1L, s"alpha one two three four $shared", "s0"),
@@ -245,7 +245,7 @@ class CurateMainSpec extends SparkSpec {
   }
 
   test("CurateMain.run: exact-minlen decontamination catches a sub-token verbatim leak the n-gram flag misses") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-exdecon").toString
+    val dir = scratchDir("graft-exdecon").toString
     // The 30-char leak sits INSIDE one long token of doc 1, so the
     // token-level n-gram flag can never fire (no shared token), but the
     // character-verbatim pass must.
@@ -300,8 +300,8 @@ class CurateMainSpec extends SparkSpec {
   }
 
   test("CurateMain.run: repetition filters drop degenerate docs") {
-    val out = java.nio.file.Files.createTempDirectory("graft-curate3").toString
-    val in = java.nio.file.Files.createTempDirectory("graft-curate3-in").toString
+    val out = scratchDir("graft-curate3").toString
+    val in = scratchDir("graft-curate3-in").toString
     val uniq = (1 to 30).map(i => s"w$i").mkString(" ")
     Seq(
       (1L, uniq, "srcA"),
@@ -319,8 +319,8 @@ class CurateMainSpec extends SparkSpec {
   }
 
   test("CurateMain.run: default min-words drops empty and whitespace-only docs") {
-    val out = java.nio.file.Files.createTempDirectory("graft-curate4").toString
-    val in = java.nio.file.Files.createTempDirectory("graft-curate4-in").toString
+    val out = scratchDir("graft-curate4").toString
+    val in = scratchDir("graft-curate4-in").toString
     Seq((1L, "one real doc", "s"), (2L, "", "s"), (3L, "   ", "s"))
       .toDF("doc_id", "text", "source")
       .write.parquet(s"$in/docs.parquet")
@@ -331,8 +331,8 @@ class CurateMainSpec extends SparkSpec {
   }
 
   test("CurateMain.run: filters dropping EVERY row reports zeros, not a readback crash") {
-    val out = java.nio.file.Files.createTempDirectory("graft-curate-empty").toString
-    val in = java.nio.file.Files.createTempDirectory("graft-curate-empty-in").toString
+    val out = scratchDir("graft-curate-empty").toString
+    val in = scratchDir("graft-curate-empty-in").toString
     Seq((1L, "too short", "s"), (2L, "also short", "s"))
       .toDF("doc_id", "text", "source")
       .write.parquet(s"$in/docs.parquet")
@@ -348,8 +348,8 @@ class CurateMainSpec extends SparkSpec {
   }
 
   test("CurateMain.run: dq block reports violations, fail-on-violation aborts, clean input passes") {
-    val out = java.nio.file.Files.createTempDirectory("graft-curate-dq").toString
-    val in = java.nio.file.Files.createTempDirectory("graft-curate-dq-in").toString
+    val out = scratchDir("graft-curate-dq").toString
+    val in = scratchDir("graft-curate-dq-in").toString
     Seq(
       (1L, "alpha beta gamma delta", "src0"),
       (1L, "epsilon zeta eta theta", "src0"),     // duplicate doc_id
@@ -375,7 +375,7 @@ class CurateMainSpec extends SparkSpec {
     val ex = intercept[CurateMain.DqViolation] { CurateMain.run(spark, failing) }
     assert(ex.getMessage.contains("unique:doc_id=1"))
     // clean input with the same contract passes and reports zeros
-    val cleanIn = java.nio.file.Files.createTempDirectory("graft-curate-dq-clean").toString
+    val cleanIn = scratchDir("graft-curate-dq-clean").toString
     Seq((1L, "alpha beta", "src0"), (2L, "gamma delta", "src1"))
       .toDF("doc_id", "text", "source").write.mode("overwrite").parquet(cleanIn)
     val cleanCfg = CurateConfig.fromYaml(
@@ -414,7 +414,7 @@ class CurateMainSpec extends SparkSpec {
   }
 
   test("CurateMain.run: gopher+keep-best+mixture stages execute and report") {
-    val tmp = java.nio.file.Files.createTempDirectory("curate-mix").toString
+    val tmp = scratchDir("curate-mix").toString
     val docsTxt = (1 to 13).flatMap(_ => Seq("the", "brown", "fox", "and", "dog")).mkString(" ")
     val near = docsTxt + " extra"
     Seq(
@@ -452,7 +452,7 @@ class CurateMainSpec extends SparkSpec {
   }
 
   test("CurateMain.run: classifier and dsir stages filter and select as configured") {
-    val tmp = java.nio.file.Files.createTempDirectory("curate-cls").toString
+    val tmp = scratchDir("curate-cls").toString
     // Good docs (lang=en) speak fruit; junk docs speak spam. Two UNLABELED
     // rows (lang=xx) carry one vocabulary each: the classifier must keep
     // the fruit-speaking one and drop the spam-speaking one; DSIR then
@@ -488,6 +488,33 @@ class CurateMainSpec extends SparkSpec {
     assert(kept.size == 3)
   }
 
+  test("CurateMain.run: unpersists every stage frame it persisted") {
+    val tmp = scratchDir("curate-cache").toString
+    val fruit = "apple pear plum cherry grape melon kiwi lime"
+    Seq((1L, s"$fruit one", "en"), (2L, s"$fruit two", "en"), (3L, s"$fruit two", "en"),
+      (4L, "spam junk casino pills scam popup ads", "de"), (5L, s"$fruit five", "xx"))
+      .toDF("doc_id", "text", "lang").write.parquet(s"$tmp/in")
+    Seq((9L, s"quiz on $fruit five", "bench")).toDF("doc_id", "text", "lang").write.parquet(s"$tmp/bench")
+    // One run per combination that persists a frame no later stage reuses:
+    // classifier with segment-lm, exact-substr with exact dedup,
+    // decontaminate with exact-minlen, and dsir. (Each stage re-joins its
+    // input, so turning them all on in one run makes the analyzed plan too
+    // large for a spec.)
+    Seq(
+      "classifier:\n  seed-column: lang\n  seed-value: en\n  min-score: -100\n" +
+        "segment-lm:\n  tokens: 2\n  min-score: -100\ndedup:\n  exact: false",
+      "dedup:\n  exact: true\n  exact-substr-minlen: 40",
+      s"dedup:\n  exact: false\ndecontaminate:\n  against: $tmp/bench\n  n: 3\n  exact-minlen: 20",
+      "dedup:\n  exact: false\ndsir:\n  target-column: lang\n  target-value: en\n  keep: 2"
+    ).foreach { stages =>
+      val cfg = CurateConfig.fromYaml(s"input: $tmp/in\noutput: $tmp/out\n$stages\n")
+      val before = spark.sparkContext.getPersistentRDDs.keySet
+      CurateMain.run(spark, cfg)
+      val left = spark.sparkContext.getPersistentRDDs.keySet -- before
+      assert(left.isEmpty, s"RDDs still persisted after a run with\n$stages")
+    }
+  }
+
   test("CurateConfig.fromYaml: classifier/dsir blocks parse and guard") {
     val cfg = CurateConfig.fromYaml(
       """input: a
@@ -514,7 +541,7 @@ class CurateMainSpec extends SparkSpec {
   }
 
   test("CurateMain.run: gopher honors configured min-words, not the published 50-word floor") {
-    val tmp = java.nio.file.Files.createTempDirectory("curate-gmin").toString
+    val tmp = scratchDir("curate-gmin").toString
     // 30 words, stopword-rich, alpha, mean length in range: passes every
     // gopher rule except (formerly) the hardcoded 50-word floor.
     val thirty = (1 to 6).flatMap(_ => Seq("the", "brown", "fox", "and", "dog")).mkString(" ")
@@ -532,7 +559,7 @@ class CurateMainSpec extends SparkSpec {
   }
 
   test("CurateMain.run: no-op config passes everything through unchanged") {
-    val out = java.nio.file.Files.createTempDirectory("graft-curate2").toString
+    val out = scratchDir("graft-curate2").toString
     val cfg = CurateConfig(
       input = "/root/testdata/sf0.001/documents.parquet",
       output = out, minWords = 0, dedupExact = false)

@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 import java.sql.Timestamp
 
 import org.apache.spark.sql.Row
@@ -75,9 +74,9 @@ class GraftMainSpec extends SparkSpec {
        |""".stripMargin
 
   test("k6-filter config runs end-to-end through GraftMain.execute (file-backed dim)") {
-    val src = Files.createTempDirectory("graft-e2e-src").toString
-    val dimDir = Files.createTempDirectory("graft-e2e-dim").toString
-    val sink = Files.createTempDirectory("graft-e2e-sink").toString + "/out"
+    val src = scratchDir("graft-e2e-src").toString
+    val dimDir = scratchDir("graft-e2e-dim").toString
+    val sink = scratchDir("graft-e2e-sink").toString + "/out"
     writeEvents(src)
     writeDim(dimDir)
     val env = mkEnv(Map(
@@ -101,9 +100,9 @@ class GraftMainSpec extends SparkSpec {
   }
 
   test("subscribe strategy also threads the dim (StreamRunner path)") {
-    val src = Files.createTempDirectory("graft-e2e-sub").toString
-    val dimDir = Files.createTempDirectory("graft-e2e-subdim").toString
-    val sink = Files.createTempDirectory("graft-e2e-subsink").toString + "/out"
+    val src = scratchDir("graft-e2e-sub").toString
+    val dimDir = scratchDir("graft-e2e-subdim").toString
+    val sink = scratchDir("graft-e2e-subsink").toString + "/out"
     writeDim(dimDir)
     // subscribe path reads the canonical message shape from `<src>/topic`
     val raw = (1L to 4L).map(i =>
@@ -114,7 +113,7 @@ class GraftMainSpec extends SparkSpec {
       "CONSUMER_CONFIG" -> yamlFor(sink).replace("strategy: assign", "strategy: subscribe"),
       "GRAFT_SOURCE_DIR" -> src,
       "GRAFT_K6_DIM_DIR" -> dimDir,
-      "GRAFT_CHECKPOINT_DIR" -> (Files.createTempDirectory("graft-e2e-ckpt").toString),
+      "GRAFT_CHECKPOINT_DIR" -> (scratchDir("graft-e2e-ckpt").toString),
       "GRAFT_PAYLOAD_SCHEMA" -> "k LONG"))
 
     val summary = GraftMain.execute(env)
@@ -127,9 +126,9 @@ class GraftMainSpec extends SparkSpec {
 
   test("warm subscribe runs compile no new classes; each run keeps its batch time") {
     import org.apache.spark.metrics.source.CodegenMetrics
-    val src = Files.createTempDirectory("graft-e2e-warm").toString
-    val dimDir = Files.createTempDirectory("graft-e2e-warmdim").toString
-    val sink = Files.createTempDirectory("graft-e2e-warmsink").toString + "/out"
+    val src = scratchDir("graft-e2e-warm").toString
+    val dimDir = scratchDir("graft-e2e-warmdim").toString
+    val sink = scratchDir("graft-e2e-warmsink").toString + "/out"
     writeDim(dimDir)
     // `$$BATCH_TIME` and a relative date anchored to it: the two columns
     // whose value changes from run to run
@@ -144,7 +143,7 @@ class GraftMainSpec extends SparkSpec {
       "CONSUMER_CONFIG" -> yaml,
       "GRAFT_SOURCE_DIR" -> src,
       "GRAFT_K6_DIM_DIR" -> dimDir,
-      "GRAFT_CHECKPOINT_DIR" -> (Files.createTempDirectory("graft-e2e-warmckpt").toString),
+      "GRAFT_CHECKPOINT_DIR" -> (scratchDir("graft-e2e-warmckpt").toString),
       "GRAFT_PAYLOAD_SCHEMA" -> "k LONG, d STRING"))
 
     // three runs of four new messages each over one checkpoint; every

@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 
 import graft.sinks.ParquetLayout
@@ -10,7 +8,7 @@ class ParquetLayoutSpec extends SparkSpec {
   import spark.implicits._
 
   test("partitioned write prunes directories and bounds files per partition") {
-    val out = Files.createTempDirectory("graft-layout").toString + "/t"
+    val out = scratchDir("graft-layout").toString + "/t"
     val df = (0 until 10000)
       .map(i => (f"2024-01-${i % 3 + 1}%02d", i.toLong, i * 1.5))
       .toDF("dt", "k", "v")
@@ -38,7 +36,7 @@ class ParquetLayoutSpec extends SparkSpec {
   }
 
   test("dynamic partition pruning: star join reads only the dim-selected fact dirs") {
-    val out = Files.createTempDirectory("graft-dpp").toString + "/fact"
+    val out = scratchDir("graft-dpp").toString + "/fact"
     val fact = (0 until 5000)
       .map(i => (Seq("a", "b", "c", "d", "e")(i % 5), i.toLong, i * 1.0))
       .toDF("part", "k", "v")
@@ -54,7 +52,7 @@ class ParquetLayoutSpec extends SparkSpec {
     // an in-memory Seq dim gets its filter constant-folded away by
     // ConvertToLocalRelation, leaving no selective predicate for DPP to
     // key on — the same trap a user hits joining a literal lookup table.
-    val dimPath = Files.createTempDirectory("graft-dpp-dim").toString + "/dim"
+    val dimPath = scratchDir("graft-dpp-dim").toString + "/dim"
     Seq(("a", 10), ("b", 1), ("c", 1), ("d", 1), ("e", 20))
       .toDF("part", "w").write.parquet(dimPath)
     val dim = spark.read.parquet(dimPath).where(col("w") >= 10)
@@ -67,7 +65,7 @@ class ParquetLayoutSpec extends SparkSpec {
 
   test("IVF cell layout: probes read a partition-pruned subset of cells") {
     import graft.operators.Similarity
-    val out = Files.createTempDirectory("graft-ivf-layout").toString + "/ivf"
+    val out = scratchDir("graft-ivf-layout").toString + "/ivf"
     val vecs = (0 until 200)
       .map(i => (i.toLong, Array(math.cos(i * 0.7).toFloat, math.sin(i * 0.7).toFloat)))
       .toDF("vec_id", "embedding")
@@ -104,7 +102,7 @@ class ParquetLayoutSpec extends SparkSpec {
 
   test("curriculum layout: a decile-head reader prunes to its buckets") {
     import graft.operators.Quality
-    val out = Files.createTempDirectory("graft-cur-layout").toString + "/cur"
+    val out = scratchDir("graft-cur-layout").toString + "/cur"
     val docs = (1 to 400).map(i => (i.toLong, s"src${i % 2}", (i * 37 % 991) + 10))
       .toDF("doc_id", "source", "n_chars")
     val ranked = Quality.rankBlend(docs, "source", "doc_id", Seq(col("n_chars")))

@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 import java.sql.Timestamp
 
 import org.apache.spark.sql.types._
@@ -35,7 +34,7 @@ class PipelineSpec extends SparkSpec {
       TransformRule("$$BATCH_TIME", "lastet_tid"))).validated
 
   test("run + rerun: incremental consumption writes no duplicates; summary accounts") {
-    val out = Files.createTempDirectory("graft-pipe").toString + "/sink"
+    val out = scratchDir("graft-pipe").toString + "/sink"
     val pipe = new Pipeline(cfg, StructType(Seq(StructField("k", LongType))),
       batchTime = Timestamp.valueOf("2024-06-01 12:00:00"))
     val sink = new ParquetSink(out)
@@ -63,7 +62,7 @@ class PipelineSpec extends SparkSpec {
   }
 
   test("a file:// sink is found on rerun: no duplicates, delta watermark read") {
-    val out = "file://" + Files.createTempDirectory("graft-uri").toString + "/sink"
+    val out = "file://" + scratchDir("graft-uri").toString + "/sink"
     val pipe = new Pipeline(cfg.copy(transform = cfg.transform :+
       TransformRule("kafka_timestamp", "ts_no", fun = Some("int-unix-ms -> datetime-no"))),
       StructType(Seq(StructField("k", LongType))),
@@ -77,7 +76,7 @@ class PipelineSpec extends SparkSpec {
   }
 
   test("A2 summary facets ride the write job: exactly ONE source scan/job") {
-    val out = Files.createTempDirectory("graft-onescan").toString + "/sink"
+    val out = scratchDir("graft-onescan").toString + "/sink"
     // No dedup keys -> no sink read; the whole run must be the single write
     // job, with BOTH observe() metrics filled by it (with a real Kafka source
     // a second facet pass would re-read the topic).
@@ -93,7 +92,7 @@ class PipelineSpec extends SparkSpec {
   }
 
   test("delta watermark from the sink (S11/A1)") {
-    val out = Files.createTempDirectory("graft-wm").toString + "/sink"
+    val out = scratchDir("graft-wm").toString + "/sink"
     val pipe = new Pipeline(cfg.copy(transform = cfg.transform :+
       TransformRule("kafka_timestamp", "ts_no", fun = Some("int-unix-ms -> datetime-no"))),
       StructType(Seq(StructField("k", LongType))))

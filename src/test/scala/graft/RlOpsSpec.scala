@@ -209,7 +209,7 @@ class RlOpsSpec extends SparkSpec {
     // own output. Simulate the replay directly: write four batch moment
     // partitions, re-write batch 2, and assert the accumulated normalizer
     // is byte-equal to the no-crash accumulation AND to the one-shot fit.
-    val dir = java.nio.file.Files.createTempDirectory("graft-replay")
+    val dir = scratchDir("graft-replay")
     try {
       val rows = (1 to 80).map(i => (s"p${i % 4}", (i * 13 % 29).toDouble, i % 4))
       val df = rows.toDF("prompt", "r", "bid")

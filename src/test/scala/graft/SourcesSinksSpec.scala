@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 
 import graft.sinks.JdbcSink
@@ -96,7 +94,7 @@ class SourcesSinksSpec extends SparkSpec {
   }
 
   private def derbyUrl(): String = {
-    val dir = Files.createTempDirectory("graft-derby").toString
+    val dir = scratchDir("graft-derby").toString
     s"jdbc:derby:$dir/db;create=true"
   }
 
@@ -211,7 +209,7 @@ class SourcesSinksSpec extends SparkSpec {
   test("JsonlSource: good lines round-trip typed, corrupt lines carry their raw bytes, field-level nulls stay per-field") {
     import spark.implicits._
     import org.apache.spark.sql.types._
-    val dir = Files.createTempDirectory("jsonl-spec").toString
+    val dir = scratchDir("jsonl-spec").toString
     val lines = Seq(
       """{"id": 1, "name": "alpha", "n": 10}""",
       """not json at all""",

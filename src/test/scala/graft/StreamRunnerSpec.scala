@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 import java.sql.Timestamp
 
 import org.apache.spark.sql.types.{LongType, StructField, StructType}
@@ -35,7 +34,7 @@ class StreamRunnerSpec extends SparkSpec {
       TransformRule("k", "k"))).validated
 
   test("AvailableNow drains the log, commits offsets, resumes with only new data") {
-    val base = Files.createTempDirectory("graft-stream").toString
+    val base = scratchDir("graft-stream").toString
     val srcDir = s"$base/topic"
     val sinkDir = s"$base/sink"
     val ckpt = s"$base/ckpt"
@@ -72,7 +71,7 @@ class StreamRunnerSpec extends SparkSpec {
   }
 
   test("crash-resumed run reports the WHOLE logical run; next scheduled run only its own") {
-    val base = Files.createTempDirectory("graft-stream-crash").toString
+    val base = scratchDir("graft-stream-crash").toString
     val srcDir = s"$base/topic"
     val sinkDir = s"$base/sink"
     val ckpt = s"$base/ckpt"
@@ -127,7 +126,7 @@ class StreamRunnerSpec extends SparkSpec {
   }
 
   test("a file:// checkpoint keeps its run records under <checkpoint>/graft-summary") {
-    val base = Files.createTempDirectory("graft-stream-uri")
+    val base = scratchDir("graft-stream-uri")
     val srcDir = s"$base/topic"
     val ckpt = s"file://$base/ckpt"
     val pipe = new Pipeline(cfg, StructType(Seq(StructField("k", LongType))),

@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 
@@ -28,7 +26,7 @@ class StreamingLshRestartSpec extends SparkSpec {
       .write.parquet(s"$tmp/index/batch_id=-1")
 
   test("stop after half the topic, resume from checkpoint: final pairs == batch LSH answer") {
-    val tmp = Files.createTempDirectory("stlsh-restart").toString
+    val tmp = scratchDir("stlsh-restart").toString
     try {
       val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
         .select(col("doc_id"), col("text"))
@@ -73,7 +71,7 @@ class StreamingLshRestartSpec extends SparkSpec {
     // Round 15 (verdict item 3): no seedIndex() here — the step itself must
     // create the empty batch_id=-1 partition on first contact instead of
     // failing with a path-not-found AnalysisException inside foreachBatch.
-    val tmp = Files.createTempDirectory("stlsh-cold").toString
+    val tmp = scratchDir("stlsh-cold").toString
     try {
       val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
         .select(col("doc_id"), col("text"))
@@ -98,7 +96,7 @@ class StreamingLshRestartSpec extends SparkSpec {
   }
 
   test("crash replay of a batch (body re-runs, commit lost) leaves index and pairs unchanged") {
-    val tmp = Files.createTempDirectory("stlsh-crash").toString
+    val tmp = scratchDir("stlsh-crash").toString
     try {
       val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
         .select(col("doc_id"), col("text"))

@@ -49,7 +49,7 @@ class TsVariantsSpec extends SparkSpec {
   }
 
   private def variants(): Seq[(String, String)] = {
-    val root = java.nio.file.Files.createTempDirectory("ts-variants").toString
+    val root = scratchDir("ts-variants").toString
     Seq("nanos-long" -> LongType, "timestamp" -> TimestampType,
         "timestamp-ntz" -> TimestampNTZType).map { case (name, t) =>
       val dir = s"$root/$name"

@@ -33,7 +33,7 @@ class ZOrderTriangleSpec extends SparkSpec {
   }
 
   test("z-ordered layout skips row groups on EITHER dimension (executed metric)") {
-    val tmp = java.nio.file.Files.createTempDirectory("zorder").toString
+    val tmp = scratchDir("zorder").toString
     // 256x256 grid, one row per cell; small row groups so statistics have
     // resolution at this size.
     val grid = spark.range(256L * 256L)
