@@ -14,6 +14,8 @@ import org.apache.spark.sql.SparkSession
   *   - session TZ pinned UTC so timestamp semantics are deployment-invariant
   *     (the reference's Europe/Oslo wall-clock outputs are produced by
   *     explicit `from_utc_timestamp` conversions, never by session TZ).
+  *   - a 1000-entry codegen cache, set by [[builder]] only (a static conf):
+  *     a host session that runs graft repeatedly passes it with `--conf`.
   */
 object GraftSession {
 
@@ -68,7 +70,8 @@ object GraftSession {
     "spark.sql.artifact.isolation.enabled" -> "false")
 
   /** Builder for a new graft session on `master`: the graft settings, a
-    * shuffle width from [[defaultShufflePartitions]] and no UI. The default
+    * shuffle width from [[defaultShufflePartitions]], no UI and a codegen
+    * cache that keeps a run's generated classes for the next run. The default
     * master is the one `spark-submit` (or `spark-shell`) was given, so a
     * submitted run keeps its cluster; without one it is
     * `local[$SPARK_GRAFT_CPUS]`, else `local[*]`. Call [[configure]] on the
@@ -83,6 +86,12 @@ object GraftSession {
       .appName("graft")
       .config("spark.sql.shuffle.partitions", defaultShufflePartitions(master))
       .config("spark.ui.enabled", "false")
+      // A static conf, read once per JVM when CodeGenerator sizes its cache
+      // on first use, so it cannot go in `settings`. 1000 entries hold the
+      // classes of a curate run (135) and a subscribe tick (about 32) with
+      // headroom; at Spark's default of 100 every curate run after the
+      // first compiles its classes again.
+      .config("spark.sql.codegen.cache.maxEntries", "1000")
       .config(settings.toMap)
 
   /** Session for every main: the active or default session when one exists

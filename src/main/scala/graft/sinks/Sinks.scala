@@ -311,7 +311,7 @@ object JdbcSink {
     causes(e).exists {
       case s: java.sql.SQLException =>
         val state = Option(s.getSQLState).getOrElse("")
-        state == "X0Y32" || state == "42S11" || s.getErrorCode == 955
+        state == "X0Y32" || state == "42S11" || state == "42S01" || s.getErrorCode == 955
       case _ => false
     }
 

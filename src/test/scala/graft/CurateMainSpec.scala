@@ -131,6 +131,27 @@ class CurateMainSpec extends SparkSpec {
       """"splits":{"test":52,"train":320,"val":52},"dq":{}}""")
   }
 
+  test("CurateMain.run: a second CurateMain.run in one session compiles no new classes") {
+    import org.apache.spark.metrics.source.CodegenMetrics
+    val out = scratchDir("graft-curate-warm").toString
+    val vocab = "spark batch stream join table window merge query row column data sort".split(" ")
+    def doc(i: Int) = (0 until 30).map(j => vocab((i * 7 + j * j) % vocab.length)).mkString(" ")
+    (0 until 40).map(i => (i.toLong, doc(i % 30), s"src${i % 3}")).toDF("doc_id", "text", "source")
+      .write.parquet(s"$out/in")
+    Seq((1000L, doc(1))).toDF("doc_id", "text").write.parquet(s"$out/bench")
+    // The end-to-end config plus decontamination: more generated classes
+    // than Spark's default 100-entry codegen cache holds.
+    val cfg = CurateConfig.fromYaml(
+      yaml.replace("IN", s"$out/in").replace("OUT", s"$out/run") +
+        s"decontaminate:\n  against: $out/bench\n  n: 8\n")
+    val first = CurateMain.run(spark, cfg)
+    val compiledBefore = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    val second = CurateMain.run(spark, cfg)
+    val compiled = CodegenMetrics.METRIC_COMPILATION_TIME.getCount - compiledBefore
+    assert(second == first)
+    assert(compiled == 0, s"the second run compiled $compiled classes")
+  }
+
   test("CurateConfig.fromYaml: examples block parses and guards") {
     val cfg = CurateConfig.fromYaml(
       "input: a\noutput: b\nexamples:\n  len: 128\n  eod: <eos>")
@@ -498,8 +519,9 @@ class CurateMainSpec extends SparkSpec {
     // One run per combination that persists a frame no later stage reuses:
     // classifier with segment-lm, exact-substr with exact dedup,
     // decontaminate with exact-minlen, and dsir. (Each stage re-joins its
-    // input, so turning them all on in one run makes the analyzed plan too
-    // large for a spec.)
+    // input, and the description Spark writes of every query prints each
+    // cached stage below it in full, so turning them all on in one run is
+    // too slow for a spec.)
     Seq(
       "classifier:\n  seed-column: lang\n  seed-value: en\n  min-score: -100\n" +
         "segment-lm:\n  tokens: 2\n  min-score: -100\ndedup:\n  exact: false",

@@ -31,11 +31,23 @@ class GraftSessionSpec extends SparkSpec {
         .asInstanceOf[scala.collection.Map[String, String]]
       assert(options.get("spark.master").contains("local[3]"))
       assert(options.get("spark.sql.shuffle.partitions").contains(expect(3)))
+      assert(options.get("spark.sql.codegen.cache.maxEntries").contains("1000"))
       assert(!options.contains("spark.graft.configured"))
     } finally prior match {
       case Some(m) => System.setProperty("spark.master", m)
       case None => System.clearProperty("spark.master")
     }
+  }
+
+  test("configure: a live session keeps the builder's codegen cache bound and is not asked to set it") {
+    // A static conf: setting it on a live session throws.
+    intercept[org.apache.spark.sql.AnalysisException] {
+      spark.conf.set("spark.sql.codegen.cache.maxEntries", "1000")
+    }
+    val fresh = spark.newSession()
+    assert(!fresh.conf.getOption("spark.graft.configured").contains("true"))
+    GraftSession.configure(fresh)
+    assert(fresh.conf.get("spark.sql.codegen.cache.maxEntries") == "1000")
   }
 
   test("get(): a configured session registers no function again") {
