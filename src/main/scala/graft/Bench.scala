@@ -72,10 +72,8 @@ object Bench {
         s"\"" + k + s"""\":{"la1":$la,"gcMs":$gc,""" + mj }
       .mkString("{", ",", "}")
     val (passed, failed) = results.partition(_._2 >= 0.0)
-    val total = passed.map(_._2).sum
-    val failedArr = failed.map("\"" + _._1 + "\"").mkString("[", ",", "]")
-    val line = s"""{"metric":"total","value":$total,"unit":"sec","passed":${passed.size},"failed":$failedArr,"queries":$qs,"sf":"$sfDir"}"""
-    println(line)
+    val summary = summaryLine(passed.map(_._2).sum, passed.size, failed.map(_._1), sfDir)
+    println(summary)
     // Subset runs (positional args) are local iteration aids — they must
     // never overwrite the full-board artifact-of-record. Guard on the
     // registry size too, not just `only`: an env-override invocation that
@@ -83,7 +81,7 @@ object Bench {
     // board and has no business becoming the record (this exact failure
     // shipped once: a 9-query subset landed as BENCH_local_r08.json).
     if (only.isEmpty && results.size == SparkEntry.queries.size)
-      writeArtifact(line, round, seed, order, telemetry)
+      writeArtifact(summary, qs, round, seed, order, telemetry, spark.sparkContext.defaultParallelism)
     spark.stop()
   }
 
@@ -128,24 +126,45 @@ object Bench {
       .map(b => math.max(0L, b.getCollectionTime)).sum
   }
 
+  /** The last stdout line: the total over the passed gates, the passed
+    * count and the failed gates. The per-gate times go to the artifact only,
+    * so the line stays short enough for a reader that keeps only the tail of
+    * stdout; a failed list longer than [[MaxListedFailures]] names is cut
+    * there (`nFailed` still counts them all; the artifact's per-gate times
+    * mark every failed gate with -1).
+    */
+  private[graft] def summaryLine(total: Double, passed: Int, failed: Seq[String], sf: String): String = {
+    val failedArr = failed.take(MaxListedFailures).map("\"" + _ + "\"").mkString("[", ",", "]")
+    s"""{"metric":"total","value":$total,"unit":"sec","passed":$passed,"nFailed":${failed.size},"failed":$failedArr,"sf":"$sf"}"""
+  }
+
+  private[graft] val MaxListedFailures = 40
+
+  /** The artifact's file name, keyed on the round and on the cores the board
+    * ran on, so an 8-core run does not overwrite the 32-core board.
+    */
+  private[graft] def artifactName(round: Int, cores: Int): String = f"BENCH_local_r$round%02d_c$cores.json"
+
   /** Artifact-of-record: persist the full per-query JSON in-repo so bench
     * totals never depend on a truncated stdout capture. `SPARK_GRAFT_BENCH_OUT`
-    * overrides the path. The payload is stamped with the round (see
-    * inferRound), git HEAD sha + working-tree-dirty flag, the shuffle seed
-    * and realized execution order (reproducibility), and per-gate
-    * {la1, gcMs} telemetry so outliers in official runs self-diagnose
-    * without a manual same-JVM A/B session. Best-effort — a read-only cwd
-    * or missing git must not fail the bench.
+    * overrides the path. The payload is the summary line plus the per-gate
+    * times (-1 for a failed gate), stamped with the round (see
+    * inferRound), the cores, git HEAD sha + working-tree-dirty flag, the
+    * shuffle seed and realized execution order (reproducibility), and
+    * per-gate {la1, gcMs} telemetry so outliers in official runs
+    * self-diagnose without a manual same-JVM A/B session. Best-effort — a
+    * read-only cwd or missing git must not fail the bench.
     */
-  private def writeArtifact(line: String, round: Int, seed: Long,
-      order: Seq[String], telemetry: String): Unit = try {
+  private def writeArtifact(summary: String, queries: String, round: Int, seed: Long,
+      order: Seq[String], telemetry: String, cores: Int): Unit = try {
     import java.nio.file.{Files, Paths}
     val (sha, dirty) = gitStamp()
     val out = sys.env.get("SPARK_GRAFT_BENCH_OUT").map(Paths.get(_))
-      .getOrElse(Paths.get(f"BENCH_local_r$round%02d.json"))
+      .getOrElse(Paths.get(artifactName(round, cores)))
     val orderArr = order.map("\"" + _ + "\"").mkString("[", ",", "]")
     // Splice provenance fields into the (known-object-shaped) JSON line.
-    val stamped = s"""{"round":$round,"gitSha":"$sha","gitDirty":$dirty,"seed":$seed,"order":$orderArr,"telemetry":$telemetry,""" + line.stripPrefix("{")
+    val stamped = s"""{"round":$round,"cores":$cores,"gitSha":"$sha","gitDirty":$dirty,"seed":$seed,"order":$orderArr,"telemetry":$telemetry,""" +
+      summary.stripSuffix("}") + s""","queries":$queries}"""
     Files.writeString(out, stamped + "\n")
   } catch { case scala.util.control.NonFatal(e) =>
     System.err.println(s"[bench] artifact write skipped: ${e.getMessage}")

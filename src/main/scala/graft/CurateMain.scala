@@ -25,15 +25,14 @@ import graft.operators.Dedup
   * `CURATE_CONFIG_FILE` env). Report JSON goes to `<output>/report.json`
   * and stdout.
   *
-  * Scale shape: identical to the gated flagship (`x_corpus_pipeline`) —
-  * the post-dedup survivor frame is the persisted stage boundary feeding
-  * pair generation / keep-one / decontamination / projection; at 100 TB
-  * that boundary becomes a parquet write between jobs. Stage counts ride
-  * the stage frames that are already materialized, so the report costs no
-  * extra corpus scans beyond one `count()` per configured stage on its
-  * cached or trivially-derived frame (a stage that is off reports its
-  * input's count) and one aggregation over the written corpus for its
-  * rows, tokens and split sizes.
+  * Scale shape: every stage that runs ends at one boundary. Its result is
+  * persisted, the stage's `count()` fills the cache, and the next stage
+  * reads a one-line leaf over the filled cache, so no plan (and no
+  * description Spark writes of a query) nests the stages before it. At
+  * 100 TB the boundary is a parquet write between jobs. The report costs
+  * no extra corpus scans beyond that one `count()` per configured stage (a
+  * stage that is off reports its input's count) and one aggregation over
+  * the written corpus for its rows, tokens and split sizes.
   */
 object CurateMain {
 
@@ -108,20 +107,39 @@ object CurateMain {
     val id = col(cfg.idColumn)
     val stages = Seq.newBuilder[(String, Long)]
 
-    // Stage row counts. A stage that is off passes its input frame through,
-    // so it reports the count already taken instead of running the same job
-    // again. The count itself is the lambda written on each `stages +=`
-    // line, which keeps every count job's Spark call site on its stage's
-    // line (job-to-stage attribution reads the call site).
+    // The stage boundary. `corpus` is the frame the next stage reads. A
+    // stage that runs sets it to its result, and the count on the stage's
+    // `stages +=` line goes through `boundary`: persist the result, fill the
+    // cache with that count (written on the stage's line, which keeps the
+    // job's Spark call site there; job-to-stage attribution reads the call
+    // site), then make `corpus` a one-line leaf over the filled cache
+    // (`Shim.cachedLeaf`). Every later plan starts at that materialized
+    // leaf instead of nesting the plans of the stages before it. A stage
+    // that is off leaves `corpus` as it is, and its line reports the count
+    // taken at the last boundary without running a job.
+    var corpus: DataFrame = null
     var last: (DataFrame, Long) = (null, 0L)
-    def rows(frame: DataFrame)(count: DataFrame => Long): Long = {
-      val n = if (frame eq last._1) last._2 else count(frame)
-      last = (frame, n)
-      n
+    def boundary(count: DataFrame => Long): Long = {
+      if (!(corpus eq last._1)) {
+        val frame = persisted(corpus)
+        val n = count(frame)
+        corpus = org.apache.spark.sql.graft.Shim.cachedLeaf(frame)
+        last = (corpus, n)
+      }
+      last._2
     }
+    // The two ways a stage derives its result from its input: keep the
+    // rows whose id `ids` lists, or replace the text with the `text_clean`
+    // of `cleaned` (rows it lacks drop).
+    def keep(frame: DataFrame, ids: DataFrame): DataFrame =
+      frame.join(ids.select(id), cfg.idColumn)
+    def rewriteText(frame: DataFrame, cleaned: DataFrame): DataFrame =
+      frame.drop(cfg.textColumn)
+        .join(cleaned.select(id, col("text_clean")), cfg.idColumn)
+        .withColumnRenamed("text_clean", cfg.textColumn)
 
     val raw = spark.read.parquet(cfg.input)
-    stages += "input" -> rows(raw)(_.count())
+    stages += "input" -> raw.count()
 
     // Input-contract gate BEFORE any curation: one extra scan (all checks
     // ride a single aggregation — Quality.evaluate), O(checks) result rows.
@@ -153,7 +171,7 @@ object CurateMain {
     // null text yields a null count and is dropped by the bound predicate.
     val nWords = when(length(trim(col(cfg.textColumn))) === 0, lit(0))
       .otherwise(size(Dedup.tokens(col(cfg.textColumn))))
-    val lenQual = base
+    corpus = base
       .where(nWords >= cfg.minWords && nWords <= cfg.maxWords)
       .where(TextAnalysis.qualityScore(col(cfg.textColumn)) >= cfg.minQuality)
       // Gopher battery rides the same scan-absorbed predicate chain; its
@@ -172,20 +190,12 @@ object CurateMain {
     // Repetition facets (Gopher-style) only when the config asks — their
     // top-bigram plan is relational (explode + keyed agg), not a per-row
     // projection like the bounds above, so the join is pay-for-what-you-use.
-    val filtered =
-      if (cfg.maxDupWordFrac < 1.0 || cfg.maxTopBigramFrac < 1.0)
-        lenQual.join(
-          graft.operators.Repetition.metrics(lenQual, cfg.idColumn, cfg.textColumn)
-            .where(col("dup_word_frac") <= cfg.maxDupWordFrac &&
-              col("top_bigram_frac") <= cfg.maxTopBigramFrac)
-            .select(id), cfg.idColumn)
-      else lenQual
-    // Stage boundary: every downstream consumer (exact-dup grouping, pair
-    // generation, keep-one, decontamination, write) re-reads this frame,
-    // and connectedComponents' eager checkpoints split the lineage into
-    // separate jobs — same persist discipline as the gated flagship.
-    val survivors0 = persisted(filtered)
-    stages += "after_filters" -> rows(survivors0)(_.count())
+    if (cfg.maxDupWordFrac < 1.0 || cfg.maxTopBigramFrac < 1.0)
+      corpus = keep(corpus,
+        graft.operators.Repetition.metrics(corpus, cfg.idColumn, cfg.textColumn)
+          .where(col("dup_word_frac") <= cfg.maxDupWordFrac &&
+            col("top_bigram_frac") <= cfg.maxTopBigramFrac))
+    stages += "after_filters" -> boundary(_.count())
 
     // Bootstrap-classifier filter (the fastText-filter slot of the CCNet/
     // LLaMA recipes): fit NB on THIS corpus with the configured seed
@@ -193,50 +203,32 @@ object CurateMain {
     // after the cheap bounds so the (one-aggregation) fit trains on
     // already-sane documents; docs with no vocabulary evidence drop —
     // nothing argues for keeping them.
-    val afterClassifier = cfg.classifierSeedColumn match {
-      case Some(seedCol) =>
-        val kept = graft.operators.Classifier.nbTrainScore(
-            survivors0, cfg.idColumn, cfg.textColumn,
-            col(seedCol) === cfg.classifierSeedValue, cfg.classifierVocab)
-          .where(col("nb_score") >= cfg.classifierMinScore)
-          .select(id)
-        persisted(survivors0.join(kept, cfg.idColumn))
-      case None => survivors0
+    cfg.classifierSeedColumn.foreach { seedCol =>
+      corpus = keep(corpus, graft.operators.Classifier.nbTrainScore(
+          corpus, cfg.idColumn, cfg.textColumn,
+          col(seedCol) === cfg.classifierSeedValue, cfg.classifierVocab)
+        .where(col("nb_score") >= cfg.classifierMinScore))
     }
-    stages += "after_classifier" -> rows(afterClassifier)(_.count())
+    stages += "after_classifier" -> boundary(_.count())
 
     // CCNet-order sub-document pruning BEFORE dedup: dedup keys must see the
     // cleaned text (a doc whose boilerplate window died is a different
     // document). Docs whose every window fails drop out (n_kept = 0).
-    val afterSegLm = cfg.segmentLmTokens match {
-      case Some(n) =>
-        val seg = graft.operators.UnigramLm.segmentFilter(
-            afterClassifier, cfg.idColumn, cfg.textColumn, n, cfg.segmentLmMinScore)
-          .where(col("n_kept") > 0)
-          .select(id, col("text_clean"))
-        afterClassifier.drop(cfg.textColumn)
-          .join(seg, cfg.idColumn)
-          .withColumnRenamed("text_clean", cfg.textColumn)
-          .transform(persisted)
-      case None => afterClassifier
+    cfg.segmentLmTokens.foreach { n =>
+      corpus = rewriteText(corpus, graft.operators.UnigramLm.segmentFilter(
+          corpus, cfg.idColumn, cfg.textColumn, n, cfg.segmentLmMinScore)
+        .where(col("n_kept") > 0))
     }
-    stages += "after_segment_lm" -> rows(afterSegLm)(_.count())
+    stages += "after_segment_lm" -> boundary(_.count())
 
     // Intra-document self-dedup (cut later occurrences of repeated spans)
     // BEFORE exact dedup for the same reason as segment-lm: the dedup key
     // must hash the cleaned text.
-    val afterSelf = cfg.selfDedupMinLen match {
-      case Some(l) =>
-        val cleaned = Dedup.removeSelfDupText(
-            afterSegLm, cfg.idColumn, cfg.textColumn, minLen = l)
-          .select(id, col("text_clean"))
-        afterSegLm.drop(cfg.textColumn)
-          .join(cleaned, cfg.idColumn)
-          .withColumnRenamed("text_clean", cfg.textColumn)
-          .transform(persisted)
-      case None => afterSegLm
+    cfg.selfDedupMinLen.foreach { l =>
+      corpus = rewriteText(corpus,
+        Dedup.removeSelfDupText(corpus, cfg.idColumn, cfg.textColumn, minLen = l))
     }
-    stages += "after_self_dedup" -> rows(afterSelf)(_.count())
+    stages += "after_self_dedup" -> boundary(_.count())
 
     // Corpus-wide ExactSubstr cut (Lee et al. remove-every-occurrence) AFTER
     // the per-document cuts and BEFORE exact dedup: the hash key must see
@@ -259,129 +251,90 @@ object CurateMain {
     // contamination forensics over spans longer than minLen. If a run
     // needs both, compute the cut by grams and the report by SA on the
     // (much smaller) post-cut corpus.
-    val afterExactSubstr = cfg.exactSubstrMinLen match {
-      case Some(l) =>
-        val cleaned = Dedup.exactSubstrCutByGrams(
-            afterSelf, cfg.idColumn, cfg.textColumn, minLen = l)
-          .select(id, col("text_clean"))
-        afterSelf.drop(cfg.textColumn)
-          .join(cleaned, cfg.idColumn)
-          .withColumnRenamed("text_clean", cfg.textColumn)
-          .transform(persisted)
-      case None => afterSelf
+    cfg.exactSubstrMinLen.foreach { l =>
+      corpus = rewriteText(corpus,
+        Dedup.exactSubstrCutByGrams(corpus, cfg.idColumn, cfg.textColumn, minLen = l))
     }
-    stages += "after_exact_substr" -> rows(afterExactSubstr)(_.count())
+    stages += "after_exact_substr" -> boundary(_.count())
 
-    val afterExact =
-      if (cfg.dedupExact)
-        afterExactSubstr.join(
-          Dedup.exact(afterExactSubstr, cfg.idColumn, md5(col(cfg.textColumn)))
-            .select(col("kept_id").as(cfg.idColumn)), cfg.idColumn)
-      else afterExactSubstr
-    val dd = persisted(afterExact)
-    stages += "after_exact_dedup" -> rows(dd)(_.count())
+    if (cfg.dedupExact)
+      corpus = keep(corpus, Dedup.exact(corpus, cfg.idColumn, md5(col(cfg.textColumn)))
+        .select(col("kept_id").as(cfg.idColumn)))
+    stages += "after_exact_dedup" -> boundary(_.count())
 
-    // Each optional stage that actually transforms the frame persists its
-    // result: the next stage's count(), the sample/split math, and the final
-    // write all re-read it, and the near-dup/decontaminate subtrees (n-gram
-    // explodes, CC iteration) are the most expensive plans in the run.
-    val afterNear = cfg.nearDupThreshold match {
-      case Some(t) =>
-        val comp = Dedup.connectedComponents(
-          Dedup.jaccardPairs(dd, cfg.idColumn, cfg.textColumn, n = 3, threshold = t))
-        // `keep: best` retains each cluster's highest-quality member (the
-        // production choice when near-dups differ); default keeps min id.
-        val resolved =
-          if (cfg.nearDupKeepBest)
-            Dedup.resolveClustersBy(dd, cfg.idColumn, comp,
-              TextAnalysis.qualityScore(col(cfg.textColumn)))
-          else Dedup.resolveClusters(dd, cfg.idColumn, comp)
-        persisted(resolved)
-      case None => dd
+    cfg.nearDupThreshold.foreach { t =>
+      val comp = Dedup.connectedComponents(
+        Dedup.jaccardPairs(corpus, cfg.idColumn, cfg.textColumn, n = 3, threshold = t))
+      // `keep: best` retains each cluster's highest-quality member (the
+      // production choice when near-dups differ); default keeps min id.
+      corpus =
+        if (cfg.nearDupKeepBest)
+          Dedup.resolveClustersBy(corpus, cfg.idColumn, comp,
+            TextAnalysis.qualityScore(col(cfg.textColumn)))
+        else Dedup.resolveClusters(corpus, cfg.idColumn, comp)
     }
-    stages += "after_near_dedup" -> rows(afterNear)(_.count())
+    stages += "after_near_dedup" -> boundary(_.count())
 
-    val afterDeconNgram = cfg.decontaminateAgainst match {
-      case Some(path) =>
-        val bench = spark.read.parquet(path)
-        afterNear.join(
-          Dedup.decontaminate(afterNear, cfg.idColumn, cfg.textColumn,
-              bench, cfg.idColumn, cfg.textColumn, n = cfg.decontaminateN, minHits = 1)
-            .where(col("contaminated") === 0).select(id), cfg.idColumn)
-          .transform(persisted)
-      case None => afterNear
+    cfg.decontaminateAgainst.foreach { path =>
+      val bench = spark.read.parquet(path)
+      corpus = keep(corpus, Dedup.decontaminate(corpus, cfg.idColumn, cfg.textColumn,
+          bench, cfg.idColumn, cfg.textColumn, n = cfg.decontaminateN, minHits = 1)
+        .where(col("contaminated") === 0))
+      // Character-verbatim pass (decontaminate.exact-minlen): drops
+      // documents sharing a verbatim >= minLen-code-point substring with the
+      // benchmark — catches leaks the token n-gram flag misses (whitespace/
+      // punctuation variants inside tokens, sub-token splices). Broadcast
+      // gram semi-join: the corpus side never shuffles. It reads the n-gram
+      // pass's result twice, so that result is persisted (and filled by the
+      // stage's count) rather than computed twice.
+      cfg.decontaminateExactMinLen.foreach { l =>
+        val ngramClean = persisted(corpus)
+        corpus = keep(ngramClean, Dedup.exactContamination(ngramClean, cfg.idColumn,
+            cfg.textColumn, bench, cfg.idColumn, cfg.textColumn, minLen = l)
+          .where(col("contaminated") === 0))
+      }
     }
-    // Character-verbatim pass (decontaminate.exact-minlen): drops documents
-    // sharing a verbatim >= minLen-code-point substring with the benchmark
-    // — catches leaks the token n-gram flag misses (whitespace/punctuation
-    // variants inside tokens, sub-token splices). Broadcast gram semi-join:
-    // the corpus side never shuffles.
-    val afterDecon = (cfg.decontaminateAgainst, cfg.decontaminateExactMinLen) match {
-      case (Some(path), Some(l)) =>
-        val bench = spark.read.parquet(path)
-        afterDeconNgram.join(
-          Dedup.exactContamination(afterDeconNgram, cfg.idColumn, cfg.textColumn,
-              bench, cfg.idColumn, cfg.textColumn, minLen = l)
-            .where(col("contaminated") === 0).select(id), cfg.idColumn)
-          .transform(persisted)
-      case _ => afterDeconNgram
-    }
-    stages += "after_decontaminate" -> rows(afterDecon)(_.count())
+    stages += "after_decontaminate" -> boundary(_.count())
 
     // DSIR selection (importance resampling toward the configured target
     // slice): runs on the decontaminated corpus so weights are fit on what
     // could actually ship; the Gumbel noise is a content hash, so the kept
     // set is append-stable and retry-safe like every selection here.
-    val afterDsir = cfg.dsirTargetColumn match {
-      case Some(tc) =>
-        val w = graft.operators.Dsir.importanceWeights(
-          afterDecon, cfg.idColumn, cfg.textColumn,
-          col(tc) === cfg.dsirTargetValue, cfg.dsirBuckets)
-        graft.operators.Dsir.gumbelTopK(w, cfg.idColumn, cfg.dsirKeep)
-          .select(id)
-          .join(afterDecon, cfg.idColumn)
-          .transform(persisted)
-      case None => afterDecon
+    cfg.dsirTargetColumn.foreach { tc =>
+      val w = graft.operators.Dsir.importanceWeights(
+        corpus, cfg.idColumn, cfg.textColumn,
+        col(tc) === cfg.dsirTargetValue, cfg.dsirBuckets)
+      corpus = keep(corpus, graft.operators.Dsir.gumbelTopK(w, cfg.idColumn, cfg.dsirKeep))
     }
-    stages += "after_dsir" -> rows(afterDsir)(_.count())
+    stages += "after_dsir" -> boundary(_.count())
 
-    val afterSample = (cfg.sampleStratum, cfg.sampleKPerStratum) match {
+    (cfg.sampleStratum, cfg.sampleKPerStratum) match {
       case (Some(stratum), Some(k)) =>
         // Weighted mode: k per stratum, inclusion probability ∝ the weight
         // column (config validation guarantees weightColumn is set and the
         // percent-mode keys are absent).
-        graft.operators.Mixture.weightedSample(
-          afterDsir, cfg.idColumn, col(cfg.sampleWeightColumn.get), stratum, k)
+        corpus = graft.operators.Mixture.weightedSample(
+          corpus, cfg.idColumn, col(cfg.sampleWeightColumn.get), stratum, k)
       case (Some(stratum), None) =>
-        Dedup.stratifiedSample(afterDsir, id, col(stratum),
+        corpus = Dedup.stratifiedSample(corpus, id, col(stratum),
           cfg.sampleRates, cfg.sampleDefault)
-      case _ => afterDsir
+      case _ =>
     }
-    stages += "after_sample" -> rows(afterSample)(_.count())
+    stages += "after_sample" -> boundary(_.count())
 
     // Token-budgeted mixture assembly — the final "build the training mix"
     // stage; selection joins back so the corpus keeps its full columns.
-    val afterMixture = cfg.mixtureTotalTokens match {
-      case Some(total) =>
-        // Persisted like every transforming stage: the after_mixture count,
-        // splitAssign, and the final write would otherwise each re-run the
-        // mixture subtree (bucket totals + two keep branches + window).
-        graft.operators.Mixture.mixtureSample(
-            afterSample, cfg.idColumn, cfg.mixtureSourceColumn,
-            nWords.cast("long"), cfg.mixtureWeights, total,
-            temperature = cfg.mixtureTemperature)
-          .select(id)
-          .join(afterSample, cfg.idColumn)
-          .transform(persisted)
-      case None => afterSample
+    cfg.mixtureTotalTokens.foreach { total =>
+      corpus = keep(corpus, graft.operators.Mixture.mixtureSample(
+        corpus, cfg.idColumn, cfg.mixtureSourceColumn,
+        nWords.cast("long"), cfg.mixtureWeights, total,
+        temperature = cfg.mixtureTemperature))
+      stages += "after_mixture" -> boundary(_.count())
     }
-    if (cfg.mixtureTotalTokens.isDefined)
-      stages += "after_mixture" -> afterMixture.count()
 
     val (out, partitionCols) =
-      if (cfg.splits.nonEmpty)
-        (Dedup.splitAssign(afterMixture, id, cfg.splits), Seq("split"))
-      else (afterMixture, Nil)
+      if (cfg.splits.nonEmpty) (Dedup.splitAssign(corpus, id, cfg.splits), Seq("split"))
+      else (corpus, Nil)
 
     val writer = out.write.mode("overwrite")
     (if (partitionCols.nonEmpty) writer.partitionBy(partitionCols: _*) else writer)

@@ -54,28 +54,36 @@ object Shim {
       exp.extraOptimizations = exp.extraOptimizations :+ rule
   }
 
-  /** Execute `df` and return the `numFiles` metric of every parquet scan in
-    * the EXECUTED plan — descending through AQE stages, exchange reuse and
-    * (dynamic-partition-pruning) subqueries, which is why this needs the
-    * `private[sql]` plan surfaces. The partition-pruning specs assert on
-    * this: "the probe touched ≤ nProbe/nCells of the files" is a metrics
-    * fact, not a plan-string grep.
+  /** Execute `df` and return every node of its EXECUTED plan — descending
+    * through AQE stages, exchange reuse and (dynamic-partition-pruning)
+    * subqueries, which is why this needs the `private[sql]` plan surfaces.
+    * The executed-metric probes below read their facts off these nodes.
     */
-  def scannedFileCounts(df: org.apache.spark.sql.DataFrame): Seq[Long] = {
-    import org.apache.spark.sql.execution._
-    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+  private def executedNodes(df: org.apache.spark.sql.DataFrame): Seq[org.apache.spark.sql.execution.SparkPlan] = {
     df.collect()
-    def scans(p: SparkPlan): Seq[FileSourceScanExec] = p match {
-      case f: FileSourceScanExec => Seq(f)
-      case a: AdaptiveSparkPlanExec => scans(a.executedPlan)
-      case q: QueryStageExec => scans(q.plan)
-      case r: exchange.ReusedExchangeExec => scans(r.child)
-      case other =>
-        other.children.flatMap(scans) ++ other.subqueries.flatMap(scans)
-    }
-    val qe = df.asInstanceOf[org.apache.spark.sql.classic.Dataset[_]].queryExecution
-    scans(qe.executedPlan).distinct.map(_.metrics("numFiles").value)
+    nodes(df.asInstanceOf[org.apache.spark.sql.classic.Dataset[_]].queryExecution.executedPlan).distinct
   }
+
+  private def nodes(p: org.apache.spark.sql.execution.SparkPlan): Seq[org.apache.spark.sql.execution.SparkPlan] = {
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    p match {
+      case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)
+      case q: QueryStageExec => nodes(q.plan)
+      case r: org.apache.spark.sql.execution.exchange.ReusedExchangeExec => nodes(r.child)
+      case other => other +: (other.children.flatMap(nodes) ++ other.subqueries.flatMap(nodes))
+    }
+  }
+
+  private def fileScans(df: org.apache.spark.sql.DataFrame): Seq[org.apache.spark.sql.execution.FileSourceScanExec] =
+    executedNodes(df).collect { case f: org.apache.spark.sql.execution.FileSourceScanExec => f }
+
+  /** Execute `df` and return the `numFiles` metric of every parquet scan in
+    * the executed plan. The partition-pruning specs assert on this: "the
+    * probe touched ≤ nProbe/nCells of the files" is a metrics fact, not a
+    * plan-string grep.
+    */
+  def scannedFileCounts(df: org.apache.spark.sql.DataFrame): Seq[Long] =
+    fileScans(df).map(_.metrics("numFiles").value)
 
   /** Execute `df` and return the summed `numOutputRows` of every parquet
     * scan in the executed plan — rows SURVIVING parquet-level pruning
@@ -84,43 +92,17 @@ object Shim {
     * asserted on this: fewer scan output rows for the same logical result
     * is the executed-metric definition of a working clustering layout.
     */
-  def scanOutputRows(df: org.apache.spark.sql.DataFrame): Long = {
-    import org.apache.spark.sql.execution._
-    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
-    df.collect()
-    def scans(p: SparkPlan): Seq[FileSourceScanExec] = p match {
-      case f: FileSourceScanExec => Seq(f)
-      case a: AdaptiveSparkPlanExec => scans(a.executedPlan)
-      case q: QueryStageExec => scans(q.plan)
-      case r: exchange.ReusedExchangeExec => scans(r.child)
-      case other =>
-        other.children.flatMap(scans) ++ other.subqueries.flatMap(scans)
-    }
-    val qe = df.asInstanceOf[org.apache.spark.sql.classic.Dataset[_]].queryExecution
-    scans(qe.executedPlan).distinct
-      .map(_.metrics.get("numOutputRows").map(_.value).getOrElse(0L)).sum
-  }
+  def scanOutputRows(df: org.apache.spark.sql.DataFrame): Long =
+    fileScans(df).map(_.metrics.get("numOutputRows").map(_.value).getOrElse(0L)).sum
 
   /** Execute `df` and return total records written into EVERY shuffle
     * exchange of the executed plan (AQE stages and exchange reuse included).
     * Shuffle-VOLUME claims ("the bounded agg moves O(k·P) rows, not O(N)")
     * are asserted on this — an executed-metric fact, not a plan-string grep.
     */
-  def shuffleRecordsWritten(df: org.apache.spark.sql.DataFrame): Long = {
-    import org.apache.spark.sql.execution._
-    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
-    df.collect()
-    def exchanges(p: SparkPlan): Seq[exchange.ShuffleExchangeExec] = p match {
-      case s: exchange.ShuffleExchangeExec => s +: s.children.flatMap(exchanges)
-      case a: AdaptiveSparkPlanExec => exchanges(a.executedPlan)
-      case q: QueryStageExec => exchanges(q.plan)
-      case r: exchange.ReusedExchangeExec => exchanges(r.child)
-      case other => other.children.flatMap(exchanges) ++ other.subqueries.flatMap(exchanges)
-    }
-    val qe = df.asInstanceOf[org.apache.spark.sql.classic.Dataset[_]].queryExecution
-    exchanges(qe.executedPlan).distinct
+  def shuffleRecordsWritten(df: org.apache.spark.sql.DataFrame): Long =
+    executedNodes(df).collect { case s: org.apache.spark.sql.execution.exchange.ShuffleExchangeExec => s }
       .map(_.metrics.get("shuffleRecordsWritten").map(_.value).getOrElse(0L)).sum
-  }
 
   /** What a [[org.apache.spark.sql.SparkSessionExtensions]] instance would
     * inject at session build time — `buildPlannerStrategies` /
@@ -210,6 +192,40 @@ object Shim {
     }
   }
 
+  /** A frame over the MATERIALIZED cache of the persisted `df`, with a
+    * [[org.apache.spark.sql.execution.LogicalRDD]] as its whole plan — the
+    * one-shot stage-boundary primitive of [[graft.CurateMain]]. Call it
+    * after an action has filled the cache: the leaf then reads the cached
+    * rows and runs no job of its own.
+    *
+    * A frame read through its `InMemoryRelation` keeps the cached plan
+    * below it, and Spark's description of every query prints that plan in
+    * full, nested once per cached stage under it; a `LogicalRDD` prints as
+    * one line. `LogicalRDD.fromDataset` keeps the origin's statistics (the
+    * cache's measured size, so broadcast planning does not change), and the
+    * leaf takes the cached scan's output partitioning and ordering (the
+    * first of a join's partitionings, as `fromDataset` does), so a
+    * downstream join or aggregate on the same key adds no exchange.
+    */
+  def cachedLeaf(df: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
+    import org.apache.spark.sql.catalyst.plans.physical.PartitioningCollection
+    import org.apache.spark.sql.execution.LogicalRDD
+    val ds = df.asInstanceOf[org.apache.spark.sql.classic.Dataset[org.apache.spark.sql.Row]]
+    val qe = ds.queryExecution
+    val l = LogicalRDD.fromDataset(qe.toRdd, ds, isStreaming = false)
+    val leaf = nodes(qe.executedPlan).collectFirst {
+      case s: org.apache.spark.sql.execution.columnar.InMemoryTableScanExec =>
+        def first(p: org.apache.spark.sql.catalyst.plans.physical.Partitioning)
+            : org.apache.spark.sql.catalyst.plans.physical.Partitioning = p match {
+          case c: PartitioningCollection => first(c.partitionings.head)
+          case _ => p
+        }
+        new LogicalRDD(l.output, l.rdd, first(s.outputPartitioning), s.outputOrdering,
+          isStreaming = false)(ds.sparkSession, Some(l.computeStats()), Some(l.constraints))
+    }
+    org.apache.spark.sql.classic.Dataset.ofRows(ds.sparkSession, leaf.getOrElse(l))
+  }
+
   /** Register a named SQL function backed by a `Column => Column` composition
     * of built-in (codegen'd) expressions — unlike `spark.udf.register` this
     * adds no black-box UDF call: the function inlines into the caller's plan
@@ -237,26 +253,13 @@ object Shim {
     * `optionalBucketSet` — a None means the scan is bucketed but unpruned
     * (reported as total/total).
     */
-  def selectedBuckets(df: org.apache.spark.sql.DataFrame): Seq[(Int, Int)] = {
-    import org.apache.spark.sql.execution._
-    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
-    df.collect()
-    def scans(p: SparkPlan): Seq[FileSourceScanExec] = p match {
-      case f: FileSourceScanExec => Seq(f)
-      case a: AdaptiveSparkPlanExec => scans(a.executedPlan)
-      case q: QueryStageExec => scans(q.plan)
-      case r: exchange.ReusedExchangeExec => scans(r.child)
-      case other =>
-        other.children.flatMap(scans) ++ other.subqueries.flatMap(scans)
-    }
-    val qe = df.asInstanceOf[org.apache.spark.sql.classic.Dataset[_]].queryExecution
-    scans(qe.executedPlan).distinct.flatMap { s =>
+  def selectedBuckets(df: org.apache.spark.sql.DataFrame): Seq[(Int, Int)] =
+    fileScans(df).flatMap { s =>
       s.relation.bucketSpec.map { spec =>
         (s.optionalBucketSet.map(_.cardinality()).getOrElse(spec.numBuckets),
           spec.numBuckets)
       }
     }
-  }
 
   /** Partition-preserving `mapPartitions` over INTERNAL rows — the
     * zero-codec path for per-partition scans of corpus-sized frames

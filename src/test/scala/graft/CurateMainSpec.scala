@@ -518,22 +518,38 @@ class CurateMainSpec extends SparkSpec {
     Seq((9L, s"quiz on $fruit five", "bench")).toDF("doc_id", "text", "lang").write.parquet(s"$tmp/bench")
     // One run per combination that persists a frame no later stage reuses:
     // classifier with segment-lm, exact-substr with exact dedup,
-    // decontaminate with exact-minlen, and dsir. (Each stage re-joins its
-    // input, and the description Spark writes of every query prints each
-    // cached stage below it in full, so turning them all on in one run is
-    // too slow for a spec.)
+    // decontaminate with exact-minlen, and dsir; then all of them at once
+    // with a split. Each stage joins a frame derived from its input back
+    // onto that input, so the last run only finishes (in seconds) when
+    // every stage reads its input through a one-line leaf: Spark's
+    // description of a query otherwise prints each cached stage below it
+    // in full, nested, and grows as the product of the stages.
+    val allOn =
+      "classifier:\n  seed-column: lang\n  seed-value: en\n  min-score: -100\n" +
+        "segment-lm:\n  tokens: 2\n  min-score: -100\n" +
+        "dedup:\n  exact: true\n  exact-substr-minlen: 40\n" +
+        s"decontaminate:\n  against: $tmp/bench\n  n: 3\n  exact-minlen: 20\n" +
+        "dsir:\n  target-column: lang\n  target-value: en\n  keep: 2\n" +
+        "split:\n  - train: 80\n  - val: 20"
     Seq(
       "classifier:\n  seed-column: lang\n  seed-value: en\n  min-score: -100\n" +
         "segment-lm:\n  tokens: 2\n  min-score: -100\ndedup:\n  exact: false",
       "dedup:\n  exact: true\n  exact-substr-minlen: 40",
       s"dedup:\n  exact: false\ndecontaminate:\n  against: $tmp/bench\n  n: 3\n  exact-minlen: 20",
-      "dedup:\n  exact: false\ndsir:\n  target-column: lang\n  target-value: en\n  keep: 2"
+      "dedup:\n  exact: false\ndsir:\n  target-column: lang\n  target-value: en\n  keep: 2",
+      allOn
     ).foreach { stages =>
       val cfg = CurateConfig.fromYaml(s"input: $tmp/in\noutput: $tmp/out\n$stages\n")
       val before = spark.sparkContext.getPersistentRDDs.keySet
-      CurateMain.run(spark, cfg)
+      val report = CurateMain.run(spark, cfg)
       val left = spark.sparkContext.getPersistentRDDs.keySet -- before
       assert(left.isEmpty, s"RDDs still persisted after a run with\n$stages")
+      if (stages == allOn)
+        assert(report.json ==
+          """{"stages":{"input":5,"after_filters":5,"after_classifier":5,"after_segment_lm":5,""" +
+          """"after_self_dedup":5,"after_exact_substr":5,"after_exact_dedup":4,"after_near_dedup":4,""" +
+          """"after_decontaminate":4,"after_dsir":2,"after_sample":2,"written":2,"written_tokens":2},""" +
+          """"splits":{"train":1,"val":1},"dq":{}}""")
     }
   }
 
