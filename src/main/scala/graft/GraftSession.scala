@@ -16,6 +16,8 @@ import org.apache.spark.sql.SparkSession
   *     explicit `from_utc_timestamp` conversions, never by session TZ).
   *   - a 1000-entry codegen cache, set by [[builder]] only (a static conf):
   *     a host session that runs graft repeatedly passes it with `--conf`.
+  * The streaming state-store provider is not set here: Spark's default
+  * (HDFS-backed) holds unless the host passes another with `--conf`.
   */
 object GraftSession {
 
@@ -46,21 +48,14 @@ object GraftSession {
   private val settings: Seq[(String, String)] = Seq(
     "spark.sql.session.timeZone" -> "UTC",
     "spark.sql.legacy.parquet.nanosAsLong" -> "true",
-    // The Confluent-Avro decode builds its Row schema from the registry at
-    // plan time — that dynamic shape needs the untyped ScalaUDF API.
+    // The Confluent-Avro decode returns rows of the caller's payload schema,
+    // known only at plan time — that dynamic shape needs the untyped
+    // ScalaUDF API.
     "spark.sql.legacy.allowUntypedScalaUDF" -> "true",
     "spark.sql.adaptive.enabled" -> "true",
     "spark.sql.adaptive.coalescePartitions.enabled" -> "true",
     "spark.sql.adaptive.skewJoin.enabled" -> "true",
     "spark.sql.parquet.aggregatePushdown" -> "true",
-    // Streaming state store: RocksDB when SPARK_GRAFT_ROCKSDB=1 — the
-    // production choice once keyed state (sessionization, stream-stream
-    // join buffers, dedup keys) outgrows executor heap; the default
-    // HDFS-backed in-memory provider is faster for the small local gates.
-    "spark.sql.streaming.stateStore.providerClass" -> (
-      if (sys.env.get("SPARK_GRAFT_ROCKSDB").contains("1"))
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
-      else "org.apache.spark.sql.execution.streaming.state.HDFSBackedStateStoreProvider"),
     // Each streaming query runs on a clone of the session; with artifact
     // isolation on, every clone gets a new executor classloader, and
     // Spark's codegen cache (keyed on classloader and source) then misses

@@ -53,12 +53,10 @@ final case class ProcessSummary(
 final class Pipeline(
     val cfg: PipelineConfig,
     payloadSchema: StructType,
-    avroWriterSchemaJson: Option[String] = None,
     val batchTime: Timestamp = new Timestamp(System.currentTimeMillis()),
-    /** id → writer schema JSON, registry-resolved at plan build. When
-      * non-empty, S5 dispatches per message on the wire schema id (the
-      * production shape — schema evolution means mixed ids in one read);
-      * `avroWriterSchemaJson` alone keeps the single-schema fast path.
+    /** id → writer schema JSON, supplied at plan build; required by the Avro
+      * schema-mode, which dispatches per message on the wire schema id (the
+      * production shape — schema evolution means mixed ids in one read).
       */
     avroSchemasById: Map[Int, String] = Map.empty) {
 
@@ -66,12 +64,9 @@ final class Pipeline(
   def envelope(raw: DataFrame): DataFrame = cfg.source.schemaMode match {
     case SchemaMode.Json => Envelope.json(raw, cfg.source, payloadSchema)
     case SchemaMode.Str => Envelope.string(raw, cfg.source)
-    case SchemaMode.Avro if avroSchemasById.nonEmpty =>
-      Envelope.avroMulti(raw, cfg.source, avroSchemasById, payloadSchema)
     case SchemaMode.Avro =>
-      val writer = avroWriterSchemaJson.getOrElse(
-        throw new IllegalArgumentException("avro schema-mode requires a writer schema (registry-resolved)"))
-      Envelope.avro(raw, cfg.source, writer, payloadSchema)
+      require(avroSchemasById.nonEmpty, "avro schema-mode requires writer schemas by id (avroSchemasById)")
+      Envelope.avro(raw, cfg.source, avroSchemasById, payloadSchema)
   }
 
   /** Full transform plan minus the sink-side dedup (which needs the sink). */

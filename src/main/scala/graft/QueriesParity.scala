@@ -34,6 +34,20 @@ object QueriesParity {
   private def events(s: SparkSession, dir: String): DataFrame =
     sources.EventsTable.load(s, dir)
 
+  /** The events table as a topic with `value` (BINARY) as the message body:
+    * key = user_id text, partition = user_id mod 8, offset = event_id,
+    * timestamp = epoch ms — the frame [[MessageSource.fromEvents]] builds
+    * around `props`.
+    */
+  private def topicFrame(ev: DataFrame, value: Column): DataFrame =
+    ev.select(
+      col("user_id").cast(StringType).cast(BinaryType).as("key"),
+      value.as("value"),
+      lit("events").as("topic"),
+      pmod(col("user_id"), lit(8)).cast(IntegerType).as("partition"),
+      col("event_id").as("offset"),
+      Conversions.nanosToEpochMs(col("ts")).as("timestamp"))
+
   /** type Q = name -> (query, oracleSql) */
   type Q = (String, ((SparkSession, String) => DataFrame, String))
 
@@ -106,13 +120,7 @@ object QueriesParity {
             StructField("f", DoubleType), StructField("flagged", StringType))))),
           StructField("pi", DoubleType), StructField("nil", StringType),
           StructField("uni", StringType)))
-        val raw = ev.select(
-          col("user_id").cast(StringType).cast(BinaryType).as("key"),
-          rawJson.cast(BinaryType).as("value"),
-          lit("events").as("topic"),
-          pmod(col("user_id"), lit(8)).cast(IntegerType).as("partition"),
-          col("event_id").as("offset"),
-          Conversions.nanosToEpochMs(col("ts")).as("timestamp"))
+        val raw = topicFrame(ev, rawJson.cast(BinaryType))
         Envelope.json(raw, SourceConfig(topic = "events",
             messageFieldsFilter = Seq("meta.secret"),
             flagFieldConfig = Seq("vals.flagged", "nil"),
@@ -156,15 +164,9 @@ object QueriesParity {
       val wire = ConfluentAvro.encode(
         struct(col("event_id").as("id"), col("event_type").as("name")),
         avroSchemaJson, schemaId = 1)
-      val raw = ev.select(
-        col("user_id").cast(StringType).cast(BinaryType).as("key"),
-        wire.as("value"),
-        lit("events").as("topic"),
-        pmod(col("user_id"), lit(8)).cast(IntegerType).as("partition"),
-        col("event_id").as("offset"),
-        Conversions.nanosToEpochMs(col("ts")).as("timestamp"))
+      val raw = topicFrame(ev, wire)
       Envelope.avro(raw, SourceConfig(topic = "events", schemaMode = SchemaMode.Avro),
-          avroSchemaJson, payloadSchema)
+          Map(1 -> avroSchemaJson), payloadSchema)
         .select(col("kafka_offset"), col("kafka_schema_id"),
           col("payload.id").as("id"), col("payload.name").as("name"),
           col("kafka_message"))
@@ -215,16 +217,10 @@ object QueriesParity {
             lit("ræv").as("uni"),
             lit(null).cast(StringType).as("note")),
           avroCanonSchema, schemaId = 7)
-        val raw = ev.select(
-          col("user_id").cast(StringType).cast(BinaryType).as("key"),
-          wire.as("value"),
-          lit("events").as("topic"),
-          pmod(col("user_id"), lit(8)).cast(IntegerType).as("partition"),
-          col("event_id").as("offset"),
-          Conversions.nanosToEpochMs(col("ts")).as("timestamp"))
+        val raw = topicFrame(ev, wire)
         Envelope.avro(raw, SourceConfig(topic = "events", schemaMode = SchemaMode.Avro,
             messageFieldsFilter = Seq("secret"), canonicalMessage = true),
-          avroCanonSchema, payloadSchema)
+          Map(7 -> avroCanonSchema), payloadSchema)
           .select(col("kafka_offset"), col("kafka_schema_id"), col("kafka_message"),
             col("payload.id").as("id"))
       },
@@ -309,15 +305,10 @@ object QueriesParity {
       // and actually reaches the id-dispatch `schemasById.get => None`
       // branch): the error channel must fire in-gate — a constant false
       // kafka_error could not catch a decoder that never says no.
-      val raw = ev.select(
-        col("user_id").cast(StringType).cast(BinaryType).as("key"),
+      val raw = topicFrame(ev,
         when(col("event_id") % 97 === 0, lit(Array[Byte](0, 0, 0, 0, 99, 0)))
-          .when(col("event_id") % 2 === 0, wireV1).otherwise(wireV2).as("value"),
-        lit("events").as("topic"),
-        pmod(col("user_id"), lit(8)).cast(IntegerType).as("partition"),
-        col("event_id").as("offset"),
-        Conversions.nanosToEpochMs(col("ts")).as("timestamp"))
-      Envelope.avroMulti(raw, SourceConfig(topic = "events", schemaMode = SchemaMode.Avro),
+          .when(col("event_id") % 2 === 0, wireV1).otherwise(wireV2))
+      Envelope.avro(raw, SourceConfig(topic = "events", schemaMode = SchemaMode.Avro),
           Map(1 -> avroSchemaJson, 2 -> avroSchemaV2Json), payloadSchema)
         .select(col("kafka_offset"), col("kafka_schema_id"), col("kafka_error"),
           col("payload.id").as("id"), col("payload.name").as("name"),
@@ -348,13 +339,7 @@ object QueriesParity {
     val payload = struct(
       get_json_object(col("props"), "$.k").cast(LongType).as("k"),
       struct(col("user_id").as("id"), secret.as("secret")).as("user"))
-    ev.select(
-      col("user_id").cast(StringType).cast(BinaryType).as("key"),
-      to_json(payload).cast(BinaryType).as("value"),
-      lit("events").as("topic"),
-      pmod(col("user_id"), lit(8)).cast(IntegerType).as("partition"),
-      col("event_id").as("offset"),
-      Conversions.nanosToEpochMs(col("ts")).as("timestamp"))
+    topicFrame(ev, to_json(payload).cast(BinaryType))
   }
   private val nestedSchema = StructType(Seq(
     StructField("k", LongType),
@@ -581,13 +566,7 @@ object QueriesParity {
       val payload = struct(
         get_json_object(col("props"), "$.k").cast(LongType).as("k"),
         struct(col("user_id").cast(StringType).as("ident")).as("person"))
-      val raw = ev.select(
-        col("user_id").cast(StringType).cast(BinaryType).as("key"),
-        to_json(payload).cast(BinaryType).as("value"),
-        lit("events").as("topic"),
-        pmod(col("user_id"), lit(8)).cast(IntegerType).as("partition"),
-        col("event_id").as("offset"),
-        Conversions.nanosToEpochMs(col("ts")).as("timestamp"))
+      val raw = topicFrame(ev, to_json(payload).cast(BinaryType))
       val schema = StructType(Seq(
         StructField("k", LongType),
         StructField("person", StructType(Seq(StructField("ident", StringType))))))
@@ -671,13 +650,7 @@ object QueriesParity {
     (s: SparkSession, dir: String) => {
       val ev = events(s, dir)
       val value = when(col("event_id") % 13 === 0, lit("{not json")).otherwise(col("props"))
-      val raw = ev.select(
-        col("user_id").cast(StringType).cast(BinaryType).as("key"),
-        value.cast(BinaryType).as("value"),
-        lit("events").as("topic"),
-        pmod(col("user_id"), lit(8)).cast(IntegerType).as("partition"),
-        col("event_id").as("offset"),
-        Conversions.nanosToEpochMs(col("ts")).as("timestamp"))
+      val raw = topicFrame(ev, value.cast(BinaryType))
       val env = Envelope.json(raw,
         SourceConfig(topic = "events",
           messageFilters = Seq(MessageFilter("k", "1"), MessageFilter("k", "2"), MessageFilter("k", "3"))),

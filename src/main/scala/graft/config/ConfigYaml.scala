@@ -119,7 +119,6 @@ object ConfigYaml {
         case Some("assign") | None => ConsumerStrategy.Assign
         case Some(other) => throw ParseError(s"unknown strategy: $other")
       },
-      groupId = str(s, "group-id").getOrElse("graft"),
       keypathSeparator = str(s, "keypath-seperator").orElse(str(s, "keypath-separator")).getOrElse("."),
       messageFieldsFilter = strings(s, "message-fields-filter"),
       flagFieldConfig = strings(s, "flag-field-config"),
@@ -127,9 +126,7 @@ object ConfigYaml {
         MessageFilter(
           str(mm, "key").getOrElse(throw ParseError("message-filter needs 'key'")),
           str(mm, "allowed_value").getOrElse(throw ParseError("message-filter needs 'allowed_value'")))
-      },
-      pollTimeoutSec = str(s, "poll-timeout").map(_.toInt).getOrElse(10),
-      schemaRegistryUrl = str(s, "schema-registry-url"))
+      })
 
     val target = TargetConfig(
       table = str(t, "table").getOrElse(throw ParseError("target.table is required")),

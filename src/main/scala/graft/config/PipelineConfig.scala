@@ -76,7 +76,6 @@ final case class SourceConfig(
     schemaMode: SchemaMode = SchemaMode.Json,
     keyDecoder: KeyDecoder = KeyDecoder.Utf8,
     strategy: ConsumerStrategy = ConsumerStrategy.Assign,
-    groupId: String = "graft",
     keypathSeparator: String = ".",
     /** F1: index-free keypaths to remove from payloads (`src/kafka_source.py:85-92`). */
     messageFieldsFilter: Seq[String] = Nil,
@@ -84,13 +83,10 @@ final case class SourceConfig(
     flagFieldConfig: Seq[String] = Nil,
     /** F3: OR-list predicate; mismatch nullifies kafka_message. */
     messageFilters: Seq[MessageFilter] = Nil,
-    pollTimeoutSec: Int = 10,
-    /** Avro mode: schema-registry base URL (resolved & cached driver-side). */
-    schemaRegistryUrl: Option[String] = None,
     /** Opt-in byte-exact `kafka_message` (Python
       * `json.dumps(ensure_ascii=False)` parity). JSON schema-mode: the raw
       * text is re-emitted via [[graft.expressions.PyJsonDumps]] (per-row
-      * insertion order, `", "` separators, float `repr`). Avro modes: the
+      * insertion order, `", "` separators, float `repr`). Avro mode: the
       * decoded struct serializes schema-ordered (= the dict insertion order
       * fastavro produces) with nulls kept, floats widened to double first,
       * then canonicalized the same way — see `Envelope.serializeStruct`;

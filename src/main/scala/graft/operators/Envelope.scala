@@ -91,37 +91,22 @@ object Envelope {
     project(raw, cfg, text, applyMessageFilters(message, struct(text.as("value")), cfg.messageFilters), schemaId = None)
   }
 
-  /** S5: Confluent-Avro schema-mode. The 5-byte wire header is stripped and
-    * the datum decoded against the (registry-resolved, driver-cached) writer
-    * schema; `kafka_schema_id` is the big-endian uint32 at bytes 2–5
-    * (`/root/reference/src/kafka_source.py:129-151`).
+  /** S5: Confluent-Avro schema-mode with per-message schema-id dispatch —
+    * the production shape for any long-lived topic (schema evolution means
+    * mixed ids within one bounded read). Each message decodes against its
+    * own writer schema from `schemasById` (supplied at plan build, see
+    * [[graft.sources.ConfluentAvro.decode]]; one schema is a one-entry map);
+    * fields absent from an older writer schema surface as NULL.
+    * `kafka_schema_id` is the big-endian uint32 at bytes 2–5 and the hash
+    * covers the datum after the 5-byte header
+    * (`/root/reference/src/kafka_source.py:129-151`). A bad magic byte, an id
+    * missing from the map or a corrupt datum routes the row to the ST5 error
+    * channel (`kafka_error = true`, NULL payload/message) — counted, not
+    * fatal, like JSON mode.
     */
-  def avro(raw: DataFrame, cfg: SourceConfig, writerSchemaJson: String, payloadSchema: StructType): DataFrame = {
+  def avro(raw: DataFrame, cfg: SourceConfig, schemasById: Map[Int, String], payloadSchema: StructType): DataFrame = {
     val datum = expr("substring(value, 6, 2147483647)") // payload after magic byte + schema id
-    val payloadRaw = graft.sources.ConfluentAvro.decode(datum, writerSchemaJson, payloadSchema)
-    val payload = PayloadOps(payloadRaw, payloadSchema, cfg.messageFieldsFilter, cfg.flagFieldConfig, cfg.keypathSeparator)
-    val message = when(col("value").isNull, lit(null).cast(StringType))
-      .otherwise(serializeStruct(payload, payloadSchema, cfg))
-    val env = project(raw, cfg, payload, applyMessageFilters(message, payload, cfg.messageFilters),
-      schemaId = Some(Conversions.schemaId(col("value"))),
-      // Reference hashes the Avro *payload* bytes (after the 5-byte header),
-      // not the whole message (`src/kafka_source.py:150`).
-      hashOver = Some(datum))
-    env
-  }
-
-  /** S5 with per-message schema-id dispatch — the production shape for any
-    * long-lived topic (schema evolution means mixed ids within one bounded
-    * read). Each message decodes against its own writer schema from
-    * `schemasById` (plan-time registry resolution, see
-    * [[graft.sources.ConfluentAvro.decodeMulti]]); fields absent from an
-    * older writer schema surface as NULL. A schema id missing from the map
-    * routes the row to the ST5 error channel (`kafka_error = true`, NULL
-    * payload/message) — counted, not fatal.
-    */
-  def avroMulti(raw: DataFrame, cfg: SourceConfig, schemasById: Map[Int, String], payloadSchema: StructType): DataFrame = {
-    val datum = expr("substring(value, 6, 2147483647)")
-    val payloadRaw = graft.sources.ConfluentAvro.decodeMulti(col("value"), schemasById, payloadSchema)
+    val payloadRaw = graft.sources.ConfluentAvro.decode(col("value"), schemasById, payloadSchema)
     val isError = col("value").isNotNull && payloadRaw.isNull
     val resultSchema = PayloadOps.resultSchema(
       payloadSchema, cfg.messageFieldsFilter, cfg.flagFieldConfig, cfg.keypathSeparator)
@@ -131,11 +116,13 @@ object Envelope {
       .otherwise(serializeStruct(payload, payloadSchema, cfg))
     project(raw, cfg, payload, applyMessageFilters(message, payload, cfg.messageFilters),
       schemaId = Some(Conversions.schemaId(col("value"))),
+      // Reference hashes the Avro *payload* bytes (after the 5-byte header),
+      // not the whole message (`src/kafka_source.py:150`).
       hashOver = Some(datum),
       error = Some(isError))
   }
 
-  /** T14 for STRUCT-decoded payloads (Avro modes): `kafka_message`
+  /** T14 for STRUCT-decoded payloads (Avro mode): `kafka_message`
     * serialization, schema-ordered `to_json` by default; with
     * `canonicalMessage`, byte-exact Python `json.dumps(decoded,
     * ensure_ascii=False)` — the reference serializes decoded Avro dicts

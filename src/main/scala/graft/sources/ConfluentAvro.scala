@@ -1,7 +1,5 @@
 package graft.sources
 
-import java.io.ByteArrayInputStream
-
 import scala.collection.concurrent.TrieMap
 
 import org.apache.avro.Schema
@@ -15,10 +13,12 @@ import org.apache.spark.sql.types._
   * runtime ships no spark-avro connector jar), mirroring
   * `/root/reference/src/kafka_source.py:129-151`.
   *
-  * The writer schema is resolved ONCE at plan build (driver-side, via
-  * [[SchemaRegistry]]) and shipped to executors as a JSON string inside the
-  * closure — never a per-row or per-partition HTTP fetch (SURVEY §7.4(6)).
-  * Decoding happens per-row through a deserializer cached per-JVM per-schema.
+  * The caller supplies the writer schemas by id when it builds the plan; they
+  * ship to executors as JSON strings inside the closure — never a per-row or
+  * per-partition registry fetch (SURVEY §7.4(6)). Decoding happens per-row
+  * through a deserializer cached per-JVM per-schema. A message the decoder
+  * cannot read (no wire magic, an id with no schema, a corrupt datum) decodes
+  * to NULL, which the envelope counts as an error: one failure rule.
   *
   * This is the one non-codegen scalar in the engine (an honest trade: the
   * reference's DatumReader path is equally interpreted); everything around it
@@ -52,7 +52,7 @@ object ConfluentAvro {
     case (null, _) => null
     case (r: GenericRecord, st: StructType) =>
       // Probe by name: a field absent from THIS writer schema (older schema
-      // version under multi-id dispatch) is NULL in the reader view;
+      // version under id dispatch) is NULL in the reader view;
       // Record.get(name) would throw on it.
       Row.fromSeq(st.fields.map { f =>
         val af = r.getSchema.getField(f.name)
@@ -74,39 +74,24 @@ object ConfluentAvro {
     case (x, _) => x
   }
 
-  /** Decode Avro datum bytes (wire header already stripped) into a struct
-    * column of `sparkSchema`, using `writerSchemaJson` as both writer and
-    * reader schema.
-    */
-  def decode(datum: Column, writerSchemaJson: String, sparkSchema: StructType): Column = {
-    val fn = (bytes: Array[Byte]) =>
-      if (bytes == null) null
-      else {
-        val dec = DecoderFactory.get().binaryDecoder(new ByteArrayInputStream(bytes), null)
-        val rec = reader(writerSchemaJson).read(null, dec)
-        convert(rec, sparkSchema).asInstanceOf[Row]
-      }
-    udf(fn, sparkSchema).apply(datum)
-  }
-
   /** Per-message schema-id dispatch over FULL wire-format bytes (magic byte +
     * big-endian int32 schema id + datum): each message is decoded against ITS
     * OWN writer schema, looked up in `schemasById` — the reference's
     * per-message `schema_cache` dispatch (`/root/reference/src/kafka_source.py:129-133,153-161`)
-    * and the behavior a long-lived topic with schema evolution requires.
+    * and the behavior a long-lived topic with schema evolution requires. A
+    * single writer schema is a one-entry map.
     *
-    * `schemasById` is resolved ONCE at plan build on the driver (via
-    * [[SchemaRegistry]]) and ships inside the closure — executors never talk
-    * to the registry. Records are projected onto `sparkSchema` BY FIELD NAME,
-    * so a writer schema missing a newer field yields null there (Avro
-    * forward-compat reads without needing per-pair schema resolution).
+    * Records are projected onto `sparkSchema` BY FIELD NAME, so a writer
+    * schema missing a newer field yields null there (Avro forward-compat
+    * reads without needing per-pair schema resolution).
     *
-    * Rows whose schema id is absent from the map decode to NULL — the caller
-    * routes them to the count-and-continue error channel (ST5) instead of
-    * failing the job; at 100 TB a task retry storm over one stray id is the
-    * wrong failure mode.
+    * A message without the wire magic, with an id absent from the map, or
+    * with a datum that does not decode yields NULL — the caller routes it to
+    * the count-and-continue error channel (ST5) instead of failing the job;
+    * at 100 TB a task retry storm over one stray message is the wrong
+    * failure mode.
     */
-  def decodeMulti(value: Column, schemasById: Map[Int, String], sparkSchema: StructType): Column = {
+  def decode(value: Column, schemasById: Map[Int, String], sparkSchema: StructType): Column = {
     val fn = (bytes: Array[Byte]) =>
       // Wire-format check (magic byte 0x00) BEFORE the id read: a non-wire
       // payload's bytes 1-4 are arbitrary, and if they collide with a
@@ -122,8 +107,7 @@ object ConfluentAvro {
             // A malformed/truncated datum under a KNOWN id must also take the
             // count-and-continue channel — an uncaught decode throw here would
             // be a task-retry storm over one stray message, the very failure
-            // mode this path exists to avoid. (The single-schema [[decode]]
-            // stays strict-fatal by design — Avro strict mode, spec'd.)
+            // mode this path exists to avoid.
             try {
               val dec = DecoderFactory.get().binaryDecoder(bytes, 5, bytes.length - 5, null)
               val rec = reader(schemaJson).read(null, dec)
@@ -161,29 +145,5 @@ object ConfluentAvro {
         bos.toByteArray
       }
     udf(fn.asInstanceOf[AnyRef], BinaryType).apply(datum)
-  }
-
-  /** Avro-record → schema mapping used when the Spark schema is derived from
-    * the writer schema (primitive + nested record/array/union-null support —
-    * the shapes the reference's payloads use).
-    */
-  def sparkSchemaFor(avro: Schema): DataType = avro.getType match {
-    case Schema.Type.RECORD =>
-      StructType(avro.getFields.toArray.map { f0 =>
-        val f = f0.asInstanceOf[Schema.Field]
-        StructField(f.name(), sparkSchemaFor(f.schema()), nullable = true)
-      })
-    case Schema.Type.UNION =>
-      import scala.jdk.CollectionConverters._
-      val nonNull = avro.getTypes.asScala.filter(_.getType != Schema.Type.NULL)
-      if (nonNull.size == 1) sparkSchemaFor(nonNull.head) else StringType
-    case Schema.Type.ARRAY => ArrayType(sparkSchemaFor(avro.getElementType))
-    case Schema.Type.MAP => MapType(StringType, sparkSchemaFor(avro.getValueType))
-    case Schema.Type.STRING | Schema.Type.ENUM => StringType
-    case Schema.Type.INT | Schema.Type.LONG => LongType
-    case Schema.Type.FLOAT | Schema.Type.DOUBLE => DoubleType
-    case Schema.Type.BOOLEAN => BooleanType
-    case Schema.Type.BYTES | Schema.Type.FIXED => BinaryType
-    case Schema.Type.NULL => NullType
   }
 }

@@ -64,27 +64,6 @@ object MessageSource {
     "endingTimestamp" -> endMs.toString,
     "startingOffsetsByTimestampStrategy" -> "latest")
 
-  /** Reader options, assign form (`ConsumerStrategy.Assign`): explicit
-    * partition list with per-partition timestamp maps — the literal shape of
-    * the reference's `offsets_for_times([TopicPartition(topic, k, ts), ...])`
-    * over `list_topics().partitions.keys()`
-    * (`/root/reference/src/kafka_source.py:183-190`). The reference learns
-    * the partition set from broker metadata; Spark's `assign` option needs
-    * it stated, so callers pass the same metadata-derived list.
-    */
-  def kafkaOptionsAssign(brokers: String, topic: String, partitions: Seq[Int],
-      startMs: Long, endMs: Long): Map[String, String] = {
-    val parts = partitions.sorted
-    def tsMap(ts: Long) =
-      s"""{"$topic":{${parts.map(p => s""""$p":$ts""").mkString(",")}}}"""
-    Map(
-      "kafka.bootstrap.servers" -> brokers,
-      "assign" -> s"""{"$topic":[${parts.mkString(",")}]}""",
-      "startingOffsetsByTimestamp" -> tsMap(startMs),
-      "endingOffsetsByTimestamp" -> tsMap(endMs),
-      "startingOffsetsByTimestampStrategy" -> "latest")
-  }
-
   /** Envelope `kafka_timestamp` reconstruction: the connector surfaces the
     * broker's `CreateTime` as a microsecond `TimestampType`; the reference
     * persists the raw epoch-ms long (`msg.timestamp()[1]`,

@@ -9,8 +9,9 @@ import org.apache.spark.sql.streaming.{OutputMode, StatefulProcessor, TimeMode, 
   * [[graft.operators.EventAnalytics.funnelStateful]], re-expressed as a
   * [[StatefulProcessor]] with a named [[ValueState]] — the API that brings
   * schema'd state variables, TTL configs, and state-store-backed timers,
-  * and that REQUIRES the RocksDB state-store provider (the production
-  * choice this repo gates behind `SPARK_GRAFT_ROCKSDB=1` everywhere else).
+  * and that REQUIRES the RocksDB state-store provider (its gate sets it for
+  * the query; other graft sessions keep Spark's default provider unless the
+  * host passes another with `--conf`).
   *
   * Keeping both implementations is deliberate: `flatMapGroupsWithState`
   * runs on any provider and is the today-path; this is the forward path,

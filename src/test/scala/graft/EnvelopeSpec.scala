@@ -88,18 +88,6 @@ class EnvelopeSpec extends SparkSpec {
     assert(!msg.contains("\\u001F"), "uppercase hex would be Jackson, not Python")
   }
 
-  test("S5 corrupt Avro bytes are FATAL (strict schema mode), unlike JSON's count-and-continue") {
-    val schemaJson =
-      """{"type":"record","name":"ev","fields":[{"name":"id","type":"long"},{"name":"name","type":"string"}]}"""
-    val payloadSchema = StructType(Seq(StructField("id", LongType), StructField("name", StringType)))
-    // 5-byte header + garbage datum: a long varint promising a huge string
-    val bad = Array[Byte](0, 0, 0, 0, 42) ++ Array.fill(4)(0xff.toByte)
-    val raw = MessageSource.fromRows(spark, Seq((null, bad, "t", 0, 1L, 1700000000000L)))
-    val env = Envelope.avro(raw, SourceConfig(topic = "t", schemaMode = SchemaMode.Avro),
-      schemaJson, payloadSchema)
-    intercept[org.apache.spark.SparkException](env.collect())
-  }
-
   test("S5 Confluent-Avro round trip: wire header, schema id, payload, datum hash") {
     val schemaJson =
       """{"type":"record","name":"ev","fields":[
@@ -112,7 +100,7 @@ class EnvelopeSpec extends SparkSpec {
       lit("t").as("topic"), lit(0).as("partition"),
       col("id").as("offset"), lit(1700000000000L).as("timestamp"))
     val env = Envelope.avro(rawAvro, SourceConfig(topic = "t", schemaMode = SchemaMode.Avro),
-      schemaJson, payloadSchema)
+      Map(42 -> schemaJson), payloadSchema)
     val rows = env.orderBy("kafka_offset").collect()
     assert(rows(0).getAs[Int]("kafka_schema_id") == 42)
     assert(rows(0).getAs[Row]("payload").getAs[Long]("id") == 7L)
@@ -139,7 +127,7 @@ class EnvelopeSpec extends SparkSpec {
       lit("k".getBytes("UTF-8")).as("key"), value.as("value"),
       lit("t").as("topic"), lit(0).as("partition"),
       col("id").as("offset"), lit(1700000000000L).as("timestamp"))
-    val env = Envelope.avroMulti(raw, SourceConfig(topic = "t", schemaMode = SchemaMode.Avro),
+    val env = Envelope.avro(raw, SourceConfig(topic = "t", schemaMode = SchemaMode.Avro),
       Map(1 -> v1, 2 -> v2), payloadSchema)
     val rows = env.orderBy("kafka_offset").collect()
     // v1 message: decodes with its own schema; `extra` (added in v2) is NULL
@@ -169,8 +157,7 @@ class EnvelopeSpec extends SparkSpec {
         |{"name":"id","type":"long"},{"name":"name","type":"string"}]}""".stripMargin
     val payloadSchema = StructType(Seq(StructField("id", LongType), StructField("name", StringType)))
     // valid wire header for registered id 1, then garbage: a varint promising
-    // a huge string (same corpse as the strict-mode test — but multi-schema
-    // dispatch promises count-and-continue, unlike single-schema strict mode)
+    // a huge string — counted and continued, like malformed JSON
     val bad = Array[Byte](0, 0, 0, 0, 1) ++ Array.fill(4)(0xff.toByte)
     val ok = ConfluentAvro.encode(struct(lit(7L).as("id"), lit("fin").as("name")), v1, 1)
     val raw = spark.range(2).select(
@@ -178,7 +165,7 @@ class EnvelopeSpec extends SparkSpec {
       when(col("id") === 0, lit(bad)).otherwise(ok).as("value"),
       lit("t").as("topic"), lit(0).as("partition"),
       col("id").as("offset"), lit(1700000000000L).as("timestamp"))
-    val env = Envelope.avroMulti(raw, SourceConfig(topic = "t", schemaMode = SchemaMode.Avro),
+    val env = Envelope.avro(raw, SourceConfig(topic = "t", schemaMode = SchemaMode.Avro),
       Map(1 -> v1), payloadSchema)
     val rows = env.orderBy("kafka_offset").collect()
     assert(rows(0).getAs[Boolean]("kafka_error"))      // corrupt: flagged, job survives

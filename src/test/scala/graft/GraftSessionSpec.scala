@@ -48,6 +48,14 @@ class GraftSessionSpec extends SparkSpec {
     assert(!fresh.conf.getOption("spark.graft.configured").contains("true"))
     GraftSession.configure(fresh)
     assert(fresh.conf.get("spark.sql.codegen.cache.maxEntries") == "1000")
+    // A state-store provider the host chose (`--conf` on spark-submit)
+    // survives configure.
+    val provider = "spark.sql.streaming.stateStore.providerClass"
+    val rocks = "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
+    val hosted = spark.newSession()
+    hosted.conf.set(provider, rocks)
+    GraftSession.configure(hosted)
+    assert(hosted.conf.get(provider) == rocks)
   }
 
   test("get(): a configured session registers no function again") {

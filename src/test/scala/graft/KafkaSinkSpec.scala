@@ -30,7 +30,7 @@ class KafkaSinkSpec extends SparkSpec {
       lit(1700000000000L).as("timestamp"))
     val payloadSchema = StructType(Seq(StructField("id", LongType), StructField("label", StringType)))
     val env = Envelope.avro(raw, SourceConfig(topic = "out", schemaMode = SchemaMode.Avro),
-      schemaJson, payloadSchema)
+      Map(9 -> schemaJson), payloadSchema)
     val got = env.select(col("kafka_schema_id"), col("payload"))
       .collect().map(r => (r.getInt(0), r.getAs[Row](1).getLong(0), r.getAs[Row](1).getString(1)))
       .sortBy(_._2)

@@ -2,11 +2,12 @@ package graft
 
 import java.sql.Timestamp
 
+import org.apache.spark.sql.functions.{col, lit, struct, when}
 import org.apache.spark.sql.types._
 
 import graft.config._
 import graft.sinks.ParquetSink
-import graft.sources.MessageSource
+import graft.sources.{ConfluentAvro, MessageSource}
 
 /** End-to-end pipeline semantics, mirroring the reference's integration
   * contract (`/root/reference/src/development/test_integration.py:214-237`):
@@ -102,5 +103,59 @@ class PipelineSpec extends SparkSpec {
     assert(wm.isDefined)
     // last message: 1700000000009 ms = 2023-11-14 22:13:20.009 UTC -> Oslo +1
     assert(wm.get == Timestamp.valueOf("2023-11-14 23:13:20.009"))
+  }
+
+  test("avro schema-mode: a corrupt datum and an unknown schema id are counted, not fatal") {
+    val v1 = """{"type":"record","name":"ev","fields":[""" +
+      """{"name":"id","type":"long"},{"name":"name","type":"string"}]}"""
+    def wire(id: Int) = ConfluentAvro.encode(struct(lit(7L).as("id"), lit("fin").as("name")), v1, id)
+    // registered id 1 with a varint promising a huge string as its datum
+    val corrupt = lit(Array[Byte](0, 0, 0, 0, 1) ++ Array.fill(4)(0xff.toByte))
+    val raw = spark.range(3).select(
+      lit(null).cast(BinaryType).as("key"),
+      when(col("id") === 0, wire(1)).when(col("id") === 1, corrupt).otherwise(wire(99)).as("value"),
+      lit("t").as("topic"), lit(0).as("partition"),
+      col("id").as("offset"), (col("id") + 1700000000000L).as("timestamp"))
+    val avroCfg = ConfigYaml.fromYaml(
+      """source:
+        |  topic: t
+        |  schema: avro
+        |target:
+        |  table: unused
+        |transform:
+        |  - src: kafka_offset
+        |    dst: kafka_offset
+        |  - src: kafka_schema_id
+        |    dst: kafka_schema_id
+        |  - src: kafka_error
+        |    dst: kafka_error
+        |  - src: name
+        |    dst: name
+        |  - src: kafka_message
+        |    dst: kafka_message
+        |""".stripMargin)
+    assert(avroCfg.source.schemaMode == SchemaMode.Avro)
+    val payloadSchema = StructType(Seq(StructField("id", LongType), StructField("name", StringType)))
+    val out = scratchDir("graft-avro").toString + "/sink"
+
+    val s = new Pipeline(avroCfg, payloadSchema, avroSchemasById = Map(1 -> v1))
+      .run(spark, raw, new ParquetSink(out))
+    assert(s.eventCount == 3 && s.errorCount == 2 && s.emptyCount == 2
+      && s.nonEmptyCount == 1 && s.writtenToDbCount == 3)
+    val rows = spark.read.parquet(out).orderBy("kafka_offset").collect()
+      .map(r => (r.getLong(0), r.getInt(1), r.getBoolean(2), r.getString(3), r.getString(4)))
+    assert(rows.toSeq == Seq(
+      (0L, 1, false, "fin", """{"id":7,"name":"fin"}"""),
+      (1L, 1, true, null, null),
+      (2L, 99, true, null, null)))
+
+    // No writer schemas: refused while the plan is built, before any job.
+    val sc = spark.sparkContext
+    sc.setJobGroup("avro-no-schemas", "avro schema-mode without writer schemas")
+    val e = try intercept[IllegalArgumentException](
+        new Pipeline(avroCfg, payloadSchema).run(spark, raw, new ParquetSink(out + "-none")))
+      finally sc.clearJobGroup()
+    assert(e.getMessage.contains("writer schemas by id"))
+    assert(sc.statusTracker.getJobIdsForGroup("avro-no-schemas").isEmpty)
   }
 }

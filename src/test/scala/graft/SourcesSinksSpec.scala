@@ -33,19 +33,6 @@ class SourcesSinksSpec extends SparkSpec {
     assert(perPartitionMapKeys.isEmpty)
   }
 
-  test("S1 kafka reader options, assign form: per-partition timestamp maps (kafka_source.py:183-190)") {
-    val opts = MessageSource.kafkaOptionsAssign(
-      "b1:9092", "t", Seq(2, 0, 1), 1700000000000L, 1700003600000L)
-    // Partitions sorted regardless of input order; maps are literal JSON in
-    // the shape Spark's Kafka source parses: {"topic":{"partition":ts}}.
-    assert(opts == Map(
-      "kafka.bootstrap.servers" -> "b1:9092",
-      "assign" -> """{"t":[0,1,2]}""",
-      "startingOffsetsByTimestamp" -> """{"t":{"0":1700000000000,"1":1700000000000,"2":1700000000000}}""",
-      "endingOffsetsByTimestamp" -> """{"t":{"0":1700003600000,"1":1700003600000,"2":1700003600000}}""",
-      "startingOffsetsByTimestampStrategy" -> "latest"))
-  }
-
   test("S1 msFromTimestamp: epoch-edge reconstruction incl. negative instants and sub-second carry") {
     import spark.implicits._
     // Instants built via timestamp_micros (session-TZ-independent by
