@@ -4,7 +4,7 @@ import java.nio.file.{Files, Paths}
 
 import scala.collection.mutable
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
@@ -31,8 +31,9 @@ import graft.operators.Dedup
   * description Spark writes of a query) nests the stages before it. At
   * 100 TB the boundary is a parquet write between jobs. The report costs
   * no extra corpus scans beyond that one `count()` per configured stage (a
-  * stage that is off reports its input's count) and one aggregation over
-  * the written corpus for its rows, tokens and split sizes.
+  * stage that is off reports its input's count): the input rows ride the
+  * filters' count job and the written rows, tokens and split sizes ride
+  * the write job, each as an `Observation`.
   */
 object CurateMain {
 
@@ -128,18 +129,19 @@ object CurateMain {
       }
       last._2
     }
-    // The two ways a stage derives its result from its input: keep the
-    // rows whose id `ids` lists, or replace the text with the `text_clean`
-    // of `cleaned` (rows it lacks drop).
+    // The three ways a stage derives its result from its input: keep the
+    // rows whose id `ids` lists, drop them, or replace the text with the
+    // `text_clean` of `cleaned` (rows it lacks drop).
     def keep(frame: DataFrame, ids: DataFrame): DataFrame =
       frame.join(ids.select(id), cfg.idColumn)
+    def drop(frame: DataFrame, ids: DataFrame): DataFrame =
+      frame.join(ids.select(id), Seq(cfg.idColumn), "left_anti")
     def rewriteText(frame: DataFrame, cleaned: DataFrame): DataFrame =
       frame.drop(cfg.textColumn)
         .join(cleaned.select(id, col("text_clean")), cfg.idColumn)
         .withColumnRenamed("text_clean", cfg.textColumn)
 
     val raw = spark.read.parquet(cfg.input)
-    stages += "input" -> raw.count()
 
     // Input-contract gate BEFORE any curation: one extra scan (all checks
     // ride a single aggregation — Quality.evaluate), O(checks) result rows.
@@ -164,7 +166,11 @@ object CurateMain {
     val textStripped =
       if (cfg.htmlStrip) TextAnalysis.htmlToText(col(cfg.textColumn)) else col(cfg.textColumn)
     val text0 = if (cfg.nfc) Conversions.nfcNormalize(textStripped) else textStripped
-    val base = raw.withColumn(cfg.textColumn, text0)
+    // The input rows ride the after-filters count job (the first job that
+    // reads `base`) as an observed metric.
+    val inputObs = Observation()
+    val base = raw.observe(inputObs, count(lit(1)).as("rows"))
+      .withColumn(cfg.textColumn, text0)
 
     // Empty/whitespace-only text splits to [""] (1 token) — count it as 0
     // words so the default `min-words: 1` actually drops empty documents;
@@ -196,6 +202,7 @@ object CurateMain {
           .where(col("dup_word_frac") <= cfg.maxDupWordFrac &&
             col("top_bigram_frac") <= cfg.maxTopBigramFrac))
     stages += "after_filters" -> boundary(_.count())
+    val input = inputObs.get("rows").asInstanceOf[Long]
 
     // Bootstrap-classifier filter (the fastText-filter slot of the CCNet/
     // LLaMA recipes): fit NB on THIS corpus with the configured seed
@@ -277,9 +284,8 @@ object CurateMain {
 
     cfg.decontaminateAgainst.foreach { path =>
       val bench = spark.read.parquet(path)
-      corpus = keep(corpus, Dedup.decontaminate(corpus, cfg.idColumn, cfg.textColumn,
-          bench, cfg.idColumn, cfg.textColumn, n = cfg.decontaminateN, minHits = 1)
-        .where(col("contaminated") === 0))
+      corpus = drop(corpus, Dedup.ngramHits(corpus, cfg.idColumn, cfg.textColumn,
+        bench, cfg.idColumn, cfg.textColumn, n = cfg.decontaminateN))
       // Character-verbatim pass (decontaminate.exact-minlen): drops
       // documents sharing a verbatim >= minLen-code-point substring with the
       // benchmark — catches leaks the token n-gram flag misses (whitespace/
@@ -336,28 +342,25 @@ object CurateMain {
       if (cfg.splits.nonEmpty) (Dedup.splitAssign(corpus, id, cfg.splits), Seq("split"))
       else (corpus, Nil)
 
-    val writer = out.write.mode("overwrite")
+    // The write job observes the written rows, their token budget (the
+    // number a training-mix plan actually consumes; the SAME guarded word
+    // count as the filter stage, so an empty doc let through by
+    // min-words: 0 bills no token) and one row count per configured split.
+    val writeObs = Observation()
+    val splitNames = cfg.splits.map(_._1).zipWithIndex
+    val observed = out.observe(writeObs, count(lit(1)).as("rows"),
+      (coalesce(sum(nWords.cast("long")), lit(0L)).as("tokens") +: splitNames.map {
+        case (name, i) => count(when(col("split") === name, 1)).as(s"split_$i") }): _*)
+    val writer = observed.write.mode("overwrite")
     (if (partitionCols.nonEmpty) writer.partitionBy(partitionCols: _*) else writer)
       .parquet(s"${cfg.output}/corpus")
-
-    // Explicit schema on the readback: a config whose filters drop EVERY
-    // row writes an empty partitioned dir (no part files), and schema
-    // inference would throw UNABLE_TO_INFER_SCHEMA — an over-aggressive
-    // filter config must report zeros, not crash the report step.
-    val written = spark.read.schema(out.schema).parquet(s"${cfg.output}/corpus")
-    // One scan gives the written rows, their token budget (the number a
-    // training-mix plan actually consumes; the SAME guarded word count as
-    // the filter stage, so an empty doc let through by min-words: 0 bills no
-    // token) and the split sizes: one row per split, or one global row
-    // (zeros on an empty corpus) when unsplit.
-    val perSplit = written.groupBy(partitionCols.map(col): _*)
-      .agg(count(lit(1)).as("rows"), coalesce(sum(nWords.cast("long")), lit(0L)).as("tokens"))
-      .collect()
-    stages += "written" -> perSplit.map(_.getAs[Long]("rows")).sum
-    stages += "written_tokens" -> perSplit.map(_.getAs[Long]("tokens")).sum
-    val splitCounts: Map[String, Long] =
-      if (cfg.splits.nonEmpty) perSplit.map(r => r.getString(0) -> r.getAs[Long]("rows")).toMap
-      else Map.empty
+    val wm = writeObs.get
+    stages += "written" -> wm("rows").asInstanceOf[Long]
+    stages += "written_tokens" -> wm("tokens").asInstanceOf[Long]
+    // A split with no rows stays out of the map, as no partition dir holds it.
+    val splitCounts: Map[String, Long] = splitNames
+      .map { case (name, i) => name -> wm(s"split_$i").asInstanceOf[Long] }
+      .filter(_._2 > 0).toMap
 
     // Pretraining example export — the fixed-L cut of the curated corpus
     // (first-listed split only when splits are configured: slicing held-out
@@ -365,6 +368,10 @@ object CurateMain {
     // examples, the leak the split exists to prevent). Reads the corpus
     // back from disk, so the slice costs no re-run of the curation subtree.
     cfg.exampleLen.foreach { len =>
+      // Explicit schema on the readback: a config whose filters drop EVERY
+      // row writes an empty partitioned dir (no part files), and schema
+      // inference would throw UNABLE_TO_INFER_SCHEMA.
+      val written = spark.read.schema(out.schema).parquet(s"${cfg.output}/corpus")
       val trainCorpus =
         if (cfg.splits.nonEmpty) written.where(col("split") === cfg.splits.head._1)
         else written
@@ -377,6 +384,6 @@ object CurateMain {
         .parquet(s"${cfg.output}/examples").count()
     }
 
-    StageReport(stages.result(), splitCounts, dqResults)
+    StageReport(("input" -> input) +: stages.result(), splitCounts, dqResults)
   }
 }

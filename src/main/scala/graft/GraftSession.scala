@@ -56,6 +56,12 @@ object GraftSession {
     "spark.sql.adaptive.coalescePartitions.enabled" -> "true",
     "spark.sql.adaptive.skewJoin.enabled" -> "true",
     "spark.sql.parquet.aggregatePushdown" -> "true",
+    // Under AQE a whole-stage codegen stage's id depends on the order in
+    // which the query's earlier stages finish, so the same query can number
+    // its stages differently from one run to the next. With the id in the
+    // generated class name, that changes the source Spark's codegen cache is
+    // keyed on and the run compiles classes it already holds.
+    "spark.sql.codegen.useIdInClassName" -> "false",
     // Each streaming query runs on a clone of the session; with artifact
     // isolation on, every clone gets a new executor classloader, and
     // Spark's codegen cache (keyed on classloader and source) then misses

@@ -1619,6 +1619,14 @@ object Dedup {
     * TOTAL round budget across both phases and stays a loud guard: hitting
     * it raises rather than returning a half-converged labeling.
     *
+    * Below 50,000 pairs (where the loop's width rule, 2 × pairs / 100k,
+    * rounds to zero and the loop runs at one partition) neither phase
+    * runs: the pair list is collected and labelled on the driver by
+    * union-find, the same labels at one job instead of two checkpoints
+    * plus one job per round. That path has no round budget, so `maxIter`
+    * and `starSwitchAfter` only bound larger graphs. Pairs with a NULL id
+    * are dropped on both paths.
+    *
     * Returns (id, component) with `component` = min id reachable; rows cover
     * every id present in `pairs` (ids with no pair are their own singleton
     * component and don't need rows — [[resolveClusters]] treats absence as
@@ -1629,22 +1637,83 @@ object Dedup {
       idA: String = "id_a",
       idB: String = "id_b",
       maxIter: Int = 25,
-      starSwitchAfter: Int = 8): DataFrame = {
+      starSwitchAfter: Int = 8): DataFrame =
+    connectedComponentsWith(pairs, idA, idB, maxIter, starSwitchAfter, driverBelow = 50000L)
+
+  /** [[connectedComponents]] with the pair count below which the graph is
+    * labelled on the driver; `driverBelow = 0` always runs the loop.
+    */
+  private[graft] def connectedComponentsWith(
+      pairs: DataFrame,
+      idA: String,
+      idB: String,
+      maxIter: Int,
+      starSwitchAfter: Int,
+      driverBelow: Long): DataFrame = {
     // Materialize the PAIR list before mirroring it: the union of the two
     // edge orientations would otherwise evaluate the caller's pair plan
     // TWICE (for jaccard/minhash candidates that plan carries the shingle
     // exchanges and the posting join — the most expensive subplan in the
     // whole dedup pipeline). The checkpointed frame is the thresholded pair
     // list — tiny relative to the corpus by construction.
-    val p = pairs.select(col(idA).as("u"), col(idB).as("v")).localCheckpoint(true)
-    // Size the ITERATION width from the measured pair count (free — `p` is
-    // already materialized), not the session shuffle width: the pair graph of
-    // a deduped corpus is a sliver of the corpus, and running each tiny
-    // iteration at full width makes the loop task-scheduling-bound (32 tasks
-    // per job to move a few thousand rows). One partition per ~100k edges
-    // (≈ 2 × pairs), capped at the session width for genuinely large graphs.
-    val sessionWidth = pairs.sparkSession.sessionState.conf.numShufflePartitions
-    val width = math.max(1, math.min(sessionWidth, (2L * p.count() / 100000L).toInt))
+    val p = pairs.select(col(idA).as("u"), col(idB).as("v"))
+      .where(col("u").isNotNull && col("v").isNotNull)
+      .localCheckpoint(true)
+    val nPairs = p.count()
+    if (nPairs < driverBelow) labelOnDriver(p)
+    else labelByPropagation(p, nPairs, maxIter, starSwitchAfter)
+  }
+
+  /** Union-find over the collected pair list `(u, v)`: `(id, component)`
+    * with `component` the least id of the component under Spark's ordering
+    * of the id type (the `min` the loop takes, so string ids order by UTF-8
+    * bytes). Each union links the larger root under the smaller, so a root
+    * is always its component's least id. Returns a local relation.
+    */
+  private def labelOnDriver(p: DataFrame): DataFrame = {
+    import scala.collection.mutable
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.catalyst.CatalystTypeConverters
+    import org.apache.spark.sql.catalyst.util.TypeUtils
+    import org.apache.spark.sql.types.{StructField, StructType}
+    val dt = p.schema("u").dataType
+    val internal = CatalystTypeConverters.createToCatalystConverter(dt)
+    val ord = TypeUtils.getInterpretedOrdering(dt)
+    val index = mutable.HashMap.empty[Any, Int]
+    val ids, keys = mutable.ArrayBuffer.empty[Any]
+    val parent = mutable.ArrayBuffer.empty[Int]
+    def node(x: Any): Int = index.getOrElseUpdate(x, {
+      ids += x; keys += internal(x); parent += parent.size; parent.size - 1
+    })
+    def find(i: Int): Int = {
+      var r = i
+      while (parent(r) != r) r = parent(r)
+      var j = i
+      while (parent(j) != r) { val up = parent(j); parent(j) = r; j = up }
+      r
+    }
+    p.collect().foreach { r =>
+      val (a, b) = (find(node(r.get(0))), find(node(r.get(1))))
+      if (a != b) { if (ord.lt(keys(a), keys(b))) parent(b) = a else parent(a) = b }
+    }
+    val rows = ids.indices.map(i => Row(ids(i), ids(find(i))))
+    p.sparkSession.createDataFrame(java.util.Arrays.asList(rows: _*),
+      StructType(Seq(StructField("id", dt), StructField("component", dt))))
+  }
+
+  /** The distributed phases of [[connectedComponents]] over the
+    * materialized pair list `p` of `nPairs` rows.
+    */
+  private def labelByPropagation(
+      p: DataFrame, nPairs: Long, maxIter: Int, starSwitchAfter: Int): DataFrame = {
+    // Size the ITERATION width from the measured pair count, not the session
+    // shuffle width: the pair graph of a deduped corpus is a sliver of the
+    // corpus, and running each tiny iteration at full width makes the loop
+    // task-scheduling-bound (32 tasks per job to move a few thousand rows).
+    // One partition per ~100k edges (≈ 2 × pairs), capped at the session
+    // width for genuinely large graphs.
+    val sessionWidth = p.sparkSession.sessionState.conf.numShufflePartitions
+    val width = math.max(1, math.min(sessionWidth, (2L * nPairs / 100000L).toInt))
     val edges = p.union(p.select(col("v").as("u"), col("u").as("v")))
       .distinct()
       .repartition(width, col("u")).localCheckpoint(true)
@@ -1825,16 +1894,29 @@ object Dedup {
       benchIdCol: String,
       benchTextCol: String,
       n: Int = 8,
-      minHits: Int = 1): DataFrame = {
-    val benchGrams = shingleTable(bench, benchIdCol, benchTextCol, n)
-      .select(col("shingle")).distinct()
-    val hits = shingleTable(df, idCol, textCol, n)
-      .join(broadcast(benchGrams), Seq("shingle"))
-      .groupBy(col(idCol)).agg(count(lit(1)).as("n_hits"))
+      minHits: Int = 1): DataFrame =
     df.select(col(idCol))
-      .join(hits, Seq(idCol), "left")
+      .join(ngramHits(df, idCol, textCol, bench, benchIdCol, benchTextCol, n), Seq(idCol), "left")
       .select(col(idCol), coalesce(col("n_hits"), lit(0L)).as("n_hits"))
       .withColumn("contaminated", when(col("n_hits") >= minHits, 1).otherwise(0))
+
+  /** The per-document hit count of [[decontaminate]]: `(idCol, n_hits)`,
+    * one row per corpus document sharing at least one word `n`-gram with
+    * the benchmark (documents without a hit have no row).
+    */
+  private[graft] def ngramHits(
+      df: DataFrame,
+      idCol: String,
+      textCol: String,
+      bench: DataFrame,
+      benchIdCol: String,
+      benchTextCol: String,
+      n: Int): DataFrame = {
+    val benchGrams = shingleTable(bench, benchIdCol, benchTextCol, n)
+      .select(col("shingle")).distinct()
+    shingleTable(df, idCol, textCol, n)
+      .join(broadcast(benchGrams), Seq("shingle"))
+      .groupBy(col(idCol)).agg(count(lit(1)).as("n_hits"))
   }
 
   /** One row per character position that starts a full `minLen`-code-point

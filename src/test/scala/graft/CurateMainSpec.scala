@@ -122,6 +122,13 @@ class CurateMainSpec extends SparkSpec {
       "after_self_dedup" -> "after_segment_lm", "after_exact_substr" -> "after_self_dedup",
       "after_decontaminate" -> "after_near_dedup", "after_dsir" -> "after_decontaminate")
       .foreach { case (off, prev) => assert(m(off) == m(prev), s"$off=${m(off)} != $prev=${m(prev)}") }
+    // The written rows, tokens and split sizes the write job observed are
+    // those of the corpus read back.
+    val tokens = when(length(trim(col("text"))) === 0, lit(0))
+      .otherwise(size(graft.operators.Dedup.tokens(col("text"))))
+    val back = corpus.agg(count(lit(1)), coalesce(sum(tokens.cast("long")), lit(0L))).head()
+    assert(m("written") == back.getLong(0) && m("written_tokens") == back.getLong(1))
+    assert(report.splits == corpus.groupBy("split").count().as[(String, Long)].collect().toMap)
     // The whole report: stage counts, token total and split sizes.
     assert(report.json ==
       """{"stages":{"input":500,"after_filters":446,"after_classifier":446,""" +

@@ -594,13 +594,20 @@ class DedupSimilaritySpec extends SparkSpec {
     assert(comp == Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 1L, 10L -> 10L, 11L -> 10L))
   }
 
+  /** [[Dedup.connectedComponents]] on its distributed loop at every pair
+    * count (small graphs are otherwise labelled on the driver).
+    */
+  private def componentsByLoop(pairs: org.apache.spark.sql.DataFrame,
+      maxIter: Int = 25, starSwitchAfter: Int = 8) =
+    Dedup.connectedComponentsWith(pairs, "id_a", "id_b", maxIter, starSwitchAfter, driverBelow = 0L)
+
   test("connected components: maxIter guard fails loudly, not half-converged") {
     val chain = (1L until 8L).map(i => (i, i + 1)).toDF("id_a", "id_b")
     intercept[IllegalArgumentException] {
-      Dedup.connectedComponents(chain, maxIter = 1)
+      componentsByLoop(chain, maxIter = 1)
     }
     // and with room to converge, the whole chain is one component
-    val ok = Dedup.connectedComponents(chain).as[(Long, Long)].collect()
+    val ok = componentsByLoop(chain).as[(Long, Long)].collect()
     assert(ok.map(_._2).toSet == Set(1L))
   }
 
@@ -610,7 +617,7 @@ class DedupSimilaritySpec extends SparkSpec {
     // rounds. Transitive LSH-bucket overlap genuinely builds chains at
     // corpus scale, so this is a robustness property, not a toy.
     val chain = (1L until 200L).map(i => (i, i + 1)).toDF("id_a", "id_b")
-    val comp = Dedup.connectedComponents(chain).as[(Long, Long)].collect()
+    val comp = componentsByLoop(chain).as[(Long, Long)].collect()
     assert(comp.length == 200 && comp.map(_._2).toSet == Set(1L))
   }
 
@@ -862,18 +869,36 @@ class DedupSimilaritySpec extends SparkSpec {
           if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
         }
         val expected = parent.keys.map(x => x -> find(x)).toMap
-        val got = Dedup.connectedComponents(edges.toDF("id_a", "id_b"))
-          .as[(Long, Long)].collect().toMap
-        assert(got == expected, s"trial $trial: graph $edges")
-        // Force the star-contraction phase (starSwitchAfter = 0): both
-        // hybrid branches must produce the identical labeling.
+        // The driver path (every graph here is small), the distributed
+        // loop, and (first 10 trials) the loop forced straight into star
+        // contraction (starSwitchAfter = 0) all give the reference labels.
+        val pairs = edges.toDF("id_a", "id_b")
+        val got = Dedup.connectedComponents(pairs).as[(Long, Long)].collect().toMap
+        assert(got == expected, s"trial $trial (driver): graph $edges")
+        val loop = componentsByLoop(pairs).as[(Long, Long)].collect().toMap
+        assert(loop == expected, s"trial $trial (loop): graph $edges")
         if (trial <= 10) {
-          val star = Dedup.connectedComponents(
-            edges.toDF("id_a", "id_b"), starSwitchAfter = 0)
+          val star = componentsByLoop(pairs, starSwitchAfter = 0)
             .as[(Long, Long)].collect().toMap
           assert(star == expected, s"trial $trial (star-only): graph $edges")
         }
       }
+    }
+    // String ids label by Spark's order (UTF-8 bytes), where UTF-16 order
+    // disagrees: "｡" (U+FF61, EF BD A1) sorts below "😀" (F0 9F 98 80) in
+    // UTF-8 but above it in UTF-16 (FF61 > D83D). A pair with a NULL id
+    // carries no connectivity and yields no row on any path.
+    assert("｡".compareTo("😀") > 0)
+    val strPairs = Seq[(String, String)](("😀", "｡"), ("b", "a"), ("c", null), (null, null))
+      .toDF("id_a", "id_b")
+    val strExpected = Map("😀" -> "｡", "｡" -> "｡", "a" -> "a", "b" -> "a")
+    Seq("driver" -> Dedup.connectedComponents(strPairs),
+      "loop" -> componentsByLoop(strPairs),
+      "star-only" -> componentsByLoop(strPairs, starSwitchAfter = 0)).foreach { case (path, c) =>
+      val st = org.apache.spark.sql.types.StringType
+      assert(c.schema.map(f => f.name -> f.dataType) == Seq("id" -> st, "component" -> st), path)
+      val rows = c.as[(String, String)].collect()
+      assert(rows.length == strExpected.size && rows.toMap == strExpected, path)
     }
   }
 
